@@ -29,15 +29,15 @@ from pathlib import Path
 BENCH = Path(__file__).resolve().parent
 ROOT = BENCH.parent
 WORKLOADS = ("serve_mixed", "datagen_batch", "lake_ingest")
-# A workload that has not finished by then is hung: it is killed and the
-# run fails by name instead of blocking the caller.
-WATCHDOG_S = 150
+# A workload that has not finished within watchdog_s() is hung: it is
+# killed and the run fails by name instead of blocking the caller.
 BUILD_TIMEOUT_S = 840
 JVM_OPTS = [
-    # a fixed, pre-touched heap keeps the resident set from following
-    # the collector's sizing decisions from run to run
-    "-Xms2g", "-Xmx2g", "-XX:+AlwaysPreTouch",
-    "-XX:+UseG1GC",
+    # the serial collector with a fixed young generation sizes the old
+    # generation from what survives each full collection, so the resident
+    # set follows what the program keeps live rather than a concurrent
+    # collector's heap-sizing heuristics
+    "-Xmx2g", "-XX:+UseSerialGC", "-Xmn256m",
     "-Dspark.ui.enabled=false",
 ] + [
     f"--add-opens={m}=ALL-UNNAMED"
@@ -51,6 +51,14 @@ JVM_OPTS = [
         "java.base/sun.security.action", "java.base/sun.util.calendar",
     )
 ]
+
+
+def watchdog_s(seconds, trace):
+    """Seconds a run may take: start-up, set-up and checks, plus each
+    measured phase (one untraced, two more when traced), where a phase
+    lasts --seconds or one whole datagen pass, whichever is longer."""
+    phases = 3 if trace else 1
+    return 120 + phases * max(seconds, 45)
 
 
 def fail(code, msg):
@@ -134,6 +142,7 @@ def main():
            "e2ebench.Main", "--workload", a.workload, "--seed", str(a.seed),
            "--seconds", str(a.seconds), "--trace", a.trace, "--work", str(work)]
     log = BENCH / ".work" / f"{a.workload}-{a.seed}.log"
+    limit = watchdog_s(a.seconds, a.trace == "1")
     t0 = time.time()
     try:
         with open(log, "w") as err:
@@ -141,12 +150,12 @@ def main():
                                     stdin=subprocess.DEVNULL, text=True,
                                     start_new_session=True)
             try:
-                out, _ = proc.communicate(timeout=WATCHDOG_S)
+                out, _ = proc.communicate(timeout=limit)
             except subprocess.TimeoutExpired:
                 os.killpg(proc.pid, signal.SIGKILL)
                 proc.wait()
                 fail(4, f"workload {a.workload} hung: watchdog stopped it after "
-                        f"{WATCHDOG_S} s (log: {log})")
+                        f"{limit} s (log: {log})")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -109,8 +109,8 @@ object Main {
     "within_slo_share" -> "share",
     "peak_rss_mb" -> "MB")
 
-  /** The per-layer metrics of the traced run (BENCHMARK.json). A layer a
-    * workload does not exercise reads 0. */
+  /** The per-layer metrics of the traced run (BENCHMARK.json), printed by
+    * every workload. A layer a workload does not exercise reads 0. */
   val PerLayer: Seq[(String, String)] = Seq(
     "api.http_ms_p50" -> "ms",
     "api.vector_service_ms_p50" -> "ms",
@@ -144,11 +144,7 @@ object Main {
     "merge.point.jobs" -> "count",
     "merge.point.driver_ms" -> "ms",
     "merge.compact_s" -> "s",
-    "merge.compact_rewritten_mb" -> "MB")
-
-  /** Per-layer metrics a traced run of `workload` prints. */
-  def layersOf(workload: String): Seq[(String, String)] =
-    if (workload == "datagen_batch") PerLayer ++ Datagen.Layers else PerLayer
+    "merge.compact_rewritten_mb" -> "MB") ++ Datagen.Layers
 
   def parse(args: Array[String]): Opts = {
     val m = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
@@ -201,7 +197,7 @@ object Main {
         .resolve(s"trace-${opts.workload}-${opts.seed}.jsonl").normalize(), ctx.counters)
     val correct = ctx.failed == 0
     val metrics =
-      if (opts.trace) layersOf(opts.workload).map { case (n, u) => (n, outcome.layers.getOrElse(n, 0.0), u) }
+      if (opts.trace) PerLayer.map { case (n, u) => (n, outcome.layers.getOrElse(n, 0.0), u) }
       else EndToEnd.map { case (n, u) => (n, outcome.e2e.getOrElse(n, Double.NaN), u) }
     println("REPORT " + Json.obj(Seq(
       "workload" -> Json.str(opts.workload), "seed" -> opts.seed.toString,

@@ -21,8 +21,9 @@ object Serve {
     * 4-core host (11 req/s): low enough that the queue stays short. */
   val Rate = 3.5
   val Clients = 4
-  /** Latency limit for `within_slo_share`, from each request's due time. */
-  val SloMs = 2000.0
+  /** Latency limit for `within_slo_share`, from each request's due time:
+    * about twice the p90 at the parent commit (4-core host). */
+  val SloMs = 1600.0
   val Limit = 10
 
   sealed trait Kind { def vector: Boolean }
@@ -123,16 +124,20 @@ object Serve {
   }
 
   /** The seeded request stream: query strings and similar-search targets
-    * Zipf-popular, list limits uniform. */
-  def stream(seed: Long, n: Int, c: Corpus): IndexedSeq[Req] = {
+    * Zipf-popular, list limits uniform. The popularity ranks and limits
+    * come from the fixed sequence `ranks`, the same for every seed, so
+    * every run repeats its queries and targets equally often; the seed
+    * picks which word and which game holds each rank. */
+  def stream(seed: Long, ranks: Long, n: Int, c: Corpus): IndexedSeq[Req] = {
     val rng = new SplittableRandom(seed ^ 0x510e527fL)
-    val pool = queryPool
+    val draw = new SplittableRandom(ranks)
+    val pool = Inputs.permutation(rng, queryPool.length).map(queryPool)
     val qz = new Zipf(pool.length, Inputs.ZipfS)
     val popular = Inputs.permutation(rng, c.vecIds.length)
     val tz = new Zipf(c.vecIds.length, Inputs.ZipfS)
     kinds(n).map {
-      case GamesList => Req(GamesList, "", 0L, Seq(10, 25, 50)(rng.nextInt(3)))
-      case k => Req(k, pool(qz.sample(rng)), c.vecIds(popular(tz.sample(rng))), Limit)
+      case GamesList => Req(GamesList, "", 0L, Seq(10, 25, 50)(draw.nextInt(3)))
+      case k => Req(k, pool(qz.sample(draw)), c.vecIds(popular(tz.sample(draw))), Limit)
     }
   }
 
@@ -232,21 +237,22 @@ object Serve {
     corpus.write(spark, dir)
     val truth = new Truth(corpus)
     val n = math.max(1, (Rate * opts.seconds).toInt)
-    val reqs = stream(opts.seed, n, corpus)
+    val reqs = stream(opts.seed, 1L, n, corpus)
     queryPool.foreach { q =>
       val hits = corpus.texts.count(_.contains(q))
       require(hits >= Limit, s"query '$q' matches only $hits games")
     }
     ctx.phase("generate")
-    val warm = stream(opts.seed + 1, 40, corpus)
-    val firstOfKind = Mix.map { case (k, _) => warm.find(_.kind == k).get }
+    val warm = stream(opts.seed, 2L, 12, corpus)
+    // a vector search reads every game and embedding, /stats every game
+    val fillReqs = Seq(VectorSearch, StatsPage).map(k => warm.find(_.kind == k).get)
 
     // SETUP: server + cache fill, three times (median); then warmup
     val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
     def fill(): (ApiServer, Int) = {
       val server = new ApiServer(spark, dir, 0)
       val port = server.start()
-      firstOfKind.foreach(http(client, port))
+      fillReqs.foreach(http(client, port))
       (server, port)
     }
     val fills = (1 to 3).map { i =>

@@ -8,9 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.execution.ui.SparkListenerDriverAccumUpdates
 
 /** Percentiles under the reporting rule: a tail percentile is only
   * reported when at least [[MinBeyond]] samples lie beyond it. */
@@ -141,13 +139,14 @@ final class GroupWork {
     "files_read" -> filesRead.toDouble)
 }
 
-/** The benchmark's own Spark listeners: a [[SparkListener]] for job,
-  * stage and task counters and a [[QueryExecutionListener]] for the file
-  * scans in each executed plan. Everything is keyed by the job group the
-  * benchmark sets on its calling thread (`spark.jobGroup.id`); SQL
-  * executions are mapped to a group through their jobs' properties. */
-final class SparkCounters(spark: SparkSession) extends SparkListener
-    with QueryExecutionListener {
+/** The benchmark's own [[SparkListener]]: job, stage and task counters,
+  * and the file-scan size and file count that each file-source scan
+  * reports to the driver as SQL metric updates. Everything is keyed by
+  * the job group the benchmark sets on its calling thread
+  * (`spark.jobGroup.id`); a SQL execution is mapped to a group through
+  * its jobs' properties, so scans run under a nested execution (a `noop`
+  * write's command) count for the group that ran it. */
+final class SparkCounters(spark: SparkSession) extends SparkListener {
   // epoch-ms → nanoTime offset, so job intervals line up with spans
   private val offsetNs = System.currentTimeMillis() * 1000000L - System.nanoTime()
   private def toNano(ms: Long): Long = ms * 1000000L - offsetNs
@@ -158,19 +157,17 @@ final class SparkCounters(spark: SparkSession) extends SparkListener
   private val jobSubmit = mutable.HashMap.empty[Int, (String, Long)]
   private val jobFirstTask = mutable.HashSet.empty[Int]
   private val execGroup = mutable.HashMap.empty[Long, String]
-  // executions that finished before any of their jobs were seen
+  // scans reported before any job of their execution was seen
   private val pendingScans = mutable.HashMap.empty[Long, (Long, Long)]
 
   private def work(g: String): GroupWork = groups.getOrElseUpdate(g, new GroupWork)
 
   def install(): Unit = {
     spark.sparkContext.addSparkListener(this)
-    spark.listenerManager.register(this)
   }
 
   def uninstall(): Unit = {
     spark.sparkContext.removeSparkListener(this)
-    spark.listenerManager.unregister(this)
   }
 
   /** Waits until every event posted so far has been delivered. */
@@ -232,36 +229,18 @@ final class SparkCounters(spark: SparkSession) extends SparkListener
     }
   }
 
-  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-    val (bytes, files) = scans(qe.executedPlan)
-    synchronized {
-      execGroup.get(qe.id) match {
-        case Some(g) => work(g).fileScanBytes += bytes; work(g).filesRead += files
-        case None => pendingScans(qe.id) = (bytes, files)
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case u: SparkListenerDriverAccumUpdates =>
+      val (bytes, files) = org.apache.spark.E2eBenchBus.fileScans(u.accumUpdates)
+      if (bytes > 0 || files > 0) synchronized {
+        execGroup.get(u.executionId) match {
+          case Some(g) => work(g).fileScanBytes += bytes; work(g).filesRead += files
+          case None =>
+            val (b0, f0) = pendingScans.getOrElse(u.executionId, (0L, 0L))
+            pendingScans(u.executionId) = (b0 + bytes, f0 + files)
+        }
       }
-    }
-  }
-
-  override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-
-  /** Bytes and files read by file-source scans in an executed plan,
-    * descending through adaptive plans and query stages. */
-  private def scans(plan: SparkPlan): (Long, Long) = {
-    var bytes = 0L
-    var files = 0L
-    def walk(p: SparkPlan): Unit = {
-      p.metrics.get("filesSize").foreach(m => bytes += m.value)
-      p.metrics.get("numFiles").foreach(m => files += m.value)
-      p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case s: QueryStageExec => walk(s.plan)
-        case _ => ()
-      }
-      p.children.foreach(walk)
-      p.subqueries.foreach(walk)
-    }
-    walk(plan)
-    (bytes, files)
+    case _ => ()
   }
 }
 

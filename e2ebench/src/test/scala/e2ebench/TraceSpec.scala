@@ -47,10 +47,14 @@ class TraceSpec extends AnyFunSuite {
   }
 
   test("the result line lists every declared metric, each once") {
-    val names = Main.EndToEnd.map(_._1) ++ Main.layersOf("datagen_batch").map(_._1)
+    val names = Main.EndToEnd.map(_._1) ++ Main.PerLayer.map(_._1)
     assert(names.distinct.length == names.length)
     assert(names.forall(_.matches("[A-Za-z0-9][A-Za-z0-9_.-]{0,63}")))
-    assert(Main.layersOf("datagen_batch").length <= 128)
+    assert(Main.PerLayer.length <= 128)
+  }
+
+  test("every datagen entry has a latency limit") {
+    assert(Datagen.SloMs.keySet == Datagen.Steps.flatMap(_._2).toSet)
   }
 
   test("BENCHMARK.json declares exactly the metrics the driven workloads print") {
