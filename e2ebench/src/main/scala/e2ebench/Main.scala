@@ -127,7 +127,7 @@ object Main {
     "api.text.driver_share" -> "share",
     "cache.file_scan_mb_per_req" -> "MB",
     "cache.storage_mb" -> "MB",
-    "loadgen.late_ms_p75" -> "ms",
+    "loadgen.late_ms_p50" -> "ms",
     "jvm.heap_peak_mb" -> "MB",
     "jvm.gc_ms_per_s" -> "ms/s",
     "trace.overhead_ms" -> "ms",
@@ -195,10 +195,12 @@ object Main {
     if (opts.trace)
       ctx.rec.write(new java.io.File(opts.work, "..").toPath
         .resolve(s"trace-${opts.workload}-${opts.seed}.jsonl").normalize(), ctx.counters)
-    val correct = ctx.failed == 0
     val metrics =
       if (opts.trace) PerLayer.map { case (n, u) => (n, outcome.layers.getOrElse(n, 0.0), u) }
       else EndToEnd.map { case (n, u) => (n, outcome.e2e.getOrElse(n, Double.NaN), u) }
+    for ((n, v, _) <- metrics)
+      ctx.check("metric_defined", !v.isNaN && !v.isInfinite, s"$n is $v")
+    val correct = ctx.failed == 0
     println("REPORT " + Json.obj(Seq(
       "workload" -> Json.str(opts.workload), "seed" -> opts.seed.toString,
       "failures" -> Json.str(ctx.failureSummary)) ++

@@ -357,7 +357,7 @@ object Serve {
       "api.text.driver_share" -> driverShare(vector = false),
       "cache.file_scan_mb_per_req" -> mean(_._2.fileScanBytes / 1048576.0),
       "cache.storage_mb" -> storageMb,
-      "loadgen.late_ms_p75" -> Stats.percentile(httpSamples.map(_.lateMs), 0.75).getOrElse(Double.NaN),
+      "loadgen.late_ms_p50" -> p50(httpSamples.map(_.lateMs)),
       "jvm.heap_peak_mb" -> Jvm.heapPeakMb,
       "jvm.gc_ms_per_s" -> gcMsPerS,
       "trace.overhead_ms" -> (httpP50 - untracedP50))
