@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -39,32 +37,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // DRIVER STATUS-STORE RETENTION (round 19, guide §5 — "the driver
-      // holding metadata" is driver-side data work): even with the UI off,
-      // the app/SQL status listeners retain the last 1000 executions'
-      // plan graphs and metric trees. A suite run executes ~470 queries
-      // (warmup + setup + measured) with VERY large plans (the merge
-      // family's multi-action trees), so the store grew to heap-pressure
-      // scale and measured-loop queries ran against an old-gen full of
-      // dead plan strings — a measured 2-3× in-suite-vs-isolated
-      // inflation on job-count-heavy queries (index_build_bpe 19.2 s
-      // in-suite vs 5.7 s isolated, same code, idle calib markers both).
-      // Caps are scale-INDEPENDENT driver hygiene (any long-running
-      // driver wants bounded listener state); timing methodology —
-      // queries, sink, ordering, repeats — is unchanged.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.ui.retainedDeadExecutors", "10")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup so no measured query pays compile cost: every

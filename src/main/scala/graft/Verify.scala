@@ -1,4 +1,5 @@
 package graft
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -10,33 +11,9 @@ object Verify {
     // dev-only third arg: comma-separated subset of query names to dump
     // (the driver always passes two args and gets the full suite)
     val only = args.lift(2).map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long then convert
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded driver status-store state, same caps as Bench (guide §5 —
-      // a 150+-query session otherwise retains 1000 giant plan graphs)
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
+    val spark = Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      graft.tools.CacheRegistry.release()
-    }
+    dump(spark, sfDir, outDir, only)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -53,5 +30,25 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Write each selected query's result to `$outDir/<name>`. A query's
+    * previous output is deleted before its plan is built, so a query that
+    * now fails leaves no directory behind — never a stale parquet the
+    * oracle compare would pass. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]]): Unit = {
+    new java.io.File(outDir).mkdirs()
+    SparkEntry.queries
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, fn) =>
+      val out = new Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(out, true)
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(out.toString)
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      graft.tools.CacheRegistry.release()
+    }
   }
 }

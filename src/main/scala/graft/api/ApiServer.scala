@@ -203,15 +203,19 @@ object ApiServer {
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(3705)
     val jobsDb = args.lift(2)
     val imagesDir = args.lift(3)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     val s = new ApiServer(spark, dataDir, port, jobsDb, imagesDir)
     val bound = s.start()
     println(s"API server running on port $bound")
     Thread.currentThread().join()
+  }
+
+  /** The serving session (server and CLI): the shared engine config, on
+    * the `SPARK_MASTER` deployment master when one is set. */
+  private[api] def session(): SparkSession = {
+    val b = graft.Sessions.builder()
+    val spark = sys.env.get("SPARK_MASTER").fold(b)(b.master).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

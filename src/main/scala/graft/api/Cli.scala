@@ -1,7 +1,5 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI emitting the SAME envelope JSON as the HTTP endpoints — the
   * headless form of the §2.10 surface (the reference's CLI,
   * src/interactive.ts:5-20, prints tables; this one prints the API
@@ -24,12 +22,7 @@ object Cli {
           case _ => None
         }
       }.toMap
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ApiServer.session()
     val service = GameService.forDir(spark, dataDir)
     val out = endpoint match {
       case "games" => service.gamesList(params.get("limit"))

@@ -53,77 +53,33 @@ object AnnRecall {
   private final case class MethodInputs(
       spark: SparkSession, e: DataFrame,
       assigned: DataFrame, centroids: Seq[(Int, Array[Double])],
-      dir: String, clustered: Boolean,
-      // Set by the ×K recall probe ONLY: build the graph structures fresh
-      // at this explicit planes dial, bypassing the IndexStore artifacts —
-      // a pinned-dial probe must never overwrite the production (sized)
-      // artifact under the same name, and probe corpora are throwaway.
-      planesOverride: Option[Int] = None,
-      // Also probe-only: search the graphs at a size-derived hop budget
-      // (Nsw.sizedHops) instead of the fixture-pinned one.
-      hopsOverride: Option[Int] = None,
-      hops1Override: Option[Int] = None,
-      beamOverride: Option[Int] = None,
-      // Probe-only: train the PQ codebooks at the fixture-pinned budget
-      // instead of the sized default (the pinned-dial control rows —
-      // Pq.sizedDials is the serve default everywhere else).
-      pinnedCodes: Boolean = false) {
-    // default = the serve-time sized dials (pinned values at oracle
-    // fixture sizes, so the hash-checked harness replays unchanged)
-    lazy val n: Long = e.count()
-    lazy val hops: Int = hopsOverride.getOrElse(Nsw.sizedHops(e.count()))
-    lazy val hops1: Int = hops1Override.getOrElse(
-      Nsw.sizedHopsFloor(e.count() / Nsw.SampleMod, Nsw.HopsL1))
-    lazy val beam: Int = beamOverride.getOrElse(Nsw.sizedBeam(e.count()))
+      dir: String, clustered: Boolean) {
+    // the serve-time sized dials (pinned values at oracle fixture sizes,
+    // so the hash-checked harness replays unchanged)
+    lazy val hops: Int = Nsw.sizedHops(e.count())
+    lazy val hops1: Int = Nsw.sizedHopsFloor(e.count() / Nsw.SampleMod, Nsw.HopsL1)
+    lazy val beam: Int = Nsw.sizedBeam(e.count())
     val tag: String = if (clustered) s"$dir#clustered" else dir
     private val sfx = if (clustered) "-clustered" else ""
-    lazy val pqCodebooks: Seq[Seq[(Int, Array[Double])]] = planesOverride match {
-      // probe mode trains directly (throwaway corpus, no store artifact)
-      case Some(_) =>
-        if (pinnedCodes) Pq.trainCodebooks(e) else Pq.trainCodebooksSized(e)
-      case None => CacheRegistry.sharedObject(s"pq-codebooks:$tag")(
+    lazy val pqCodebooks: Seq[Seq[(Int, Array[Double])]] =
+      CacheRegistry.sharedObject(s"pq-codebooks:$tag")(
         graft.tools.IndexStore.readOrBuildCodebooks(spark, dir, s"pq-codebooks$sfx")(
           Pq.trainCodebooksSized(e)))
-    }
-    lazy val residualCodebooks: Seq[Seq[(Int, Array[Double])]] = planesOverride match {
-      case Some(_) =>
-        if (pinnedCodes) Ivfadc.residualCodebooks(assigned, centroids)
-        else Ivfadc.residualCodebooksSized(assigned, centroids)
-      case None => CacheRegistry.sharedObject(s"ivfadc-codebooks:$tag")(
+    lazy val residualCodebooks: Seq[Seq[(Int, Array[Double])]] =
+      CacheRegistry.sharedObject(s"ivfadc-codebooks:$tag")(
         graft.tools.IndexStore.readOrBuildCodebooks(spark, dir, s"ivfadc-codebooks$sfx")(
           Ivfadc.residualCodebooksSized(assigned, centroids)))
-    }
-    lazy val nswEdges: DataFrame = planesOverride match {
-      case Some(p) => CacheRegistry.persistTracked(Nsw.edgesOn(e, p))
-      case None => CacheRegistry.sharedTracked(s"nsw-edges:$tag")(
-        graft.tools.IndexStore.readOrBuild(spark, dir, s"nsw-edges$sfx")(Nsw.edgesOnSized(e)))
-    }
-    lazy val hnswL1Edges: DataFrame = planesOverride match {
-      case Some(p) => CacheRegistry.persistTracked(
-        Nsw.edgesOn(e.filter(col("vec_id") % Nsw.SampleMod === 0), p, Nsw.SampleMod))
-      case None => CacheRegistry.sharedTracked(s"hnsw-l1:$tag")(
-        graft.tools.IndexStore.readOrBuild(spark, dir, s"hnsw-l1$sfx")(
-          Nsw.edgesOnSized(e.filter(col("vec_id") % Nsw.SampleMod === 0),
-            Nsw.SampleMod)))
-    }
-    lazy val cellEdges: DataFrame = planesOverride match {
-      // the cell build carries its OWN dial (per-cell occupancy), derived
-      // from the corpus either way; probe mode only skips the store
-      case Some(_) => CacheRegistry.persistTracked(
-        Nsw.edgesOnCellsSized(assigned, centroids.size))
-      case None => CacheRegistry.sharedTracked(s"nsw-cell-edges:$tag")(
-        graft.tools.IndexStore.readOrBuild(spark, dir, s"nsw-cell-edges$sfx")(
-          Nsw.edgesOnCellsSized(assigned, centroids.size)))
-    }
-    lazy val nndEdges: DataFrame = planesOverride match {
-      // NN-descent has no planes dial — the probe build is identical, it
-      // just must not touch the store (same reason as above)
-      case Some(_) => CacheRegistry.persistTracked(
-        Nsw.symmetrizeWithLongLinks(e, Nsw.nnDescentKnn(e), 1))
-      case None => CacheRegistry.sharedTracked(s"nnd-edges:$tag")(
-        graft.tools.IndexStore.readOrBuild(spark, dir, s"nnd-edges$sfx")(
-          Nsw.symmetrizeWithLongLinks(e, Nsw.nnDescentKnn(e), 1)))
-    }
+    lazy val nswEdges: DataFrame = CacheRegistry.sharedTracked(s"nsw-edges:$tag")(
+      graft.tools.IndexStore.readOrBuild(spark, dir, s"nsw-edges$sfx")(Nsw.edgesOnSized(e)))
+    lazy val hnswL1Edges: DataFrame = CacheRegistry.sharedTracked(s"hnsw-l1:$tag")(
+      graft.tools.IndexStore.readOrBuild(spark, dir, s"hnsw-l1$sfx")(
+        Nsw.edgesOnSized(e.filter(col("vec_id") % Nsw.SampleMod === 0), Nsw.SampleMod)))
+    lazy val cellEdges: DataFrame = CacheRegistry.sharedTracked(s"nsw-cell-edges:$tag")(
+      graft.tools.IndexStore.readOrBuild(spark, dir, s"nsw-cell-edges$sfx")(
+        Nsw.edgesOnCellsSized(assigned, centroids.size)))
+    lazy val nndEdges: DataFrame = CacheRegistry.sharedTracked(s"nnd-edges:$tag")(
+      graft.tools.IndexStore.readOrBuild(spark, dir, s"nnd-edges$sfx")(
+        Nsw.symmetrizeWithLongLinks(e, Nsw.nnDescentKnn(e), 1)))
   }
 
   /** One approximate ANN method under test: its display name, its Spark
@@ -185,14 +141,14 @@ object AnnRecall {
     * fixture). */
   private[operators] val ClusterSpread = 0.9
 
-  /** The demonstration corpus is SIZE-PINNED at the first [[ClusterCap]]
-    * ids: it is a regime demonstration (which method family wins on which
-    * geometry), not a scale probe — SfScale owns scaling measurements —
+  /** The demonstration corpus is SIZE-PINNED at the first [[ClusterCap]] ids:
+    * it is a regime demonstration (which method family wins on which geometry),
+    * not a scale probe — scaling was measured by graft.tools.SfScale @ c6e9ec7 —
     * and an unbounded clustered corpus at larger fixtures sends the
     * pinned-planes NSW build quadratic inside the (deliberately) heavily
-    * co-bucketed clusters. The flip itself was verified to HOLD without
-    * the cap (oracle replay at all three fixtures; it sharpens at sf0.1:
-    * ivfadc 0.27 vs ivfpq 0.07 capped vs 0.13/0.07 uncapped). */
+    * co-bucketed clusters. The flip itself was verified to HOLD without the cap
+    * (oracle replay at all three fixtures; it sharpens at sf0.1: ivfadc 0.27 vs
+    * ivfpq 0.07 capped vs 0.13/0.07 uncapped). */
   private[operators] val ClusterCap = 500
 
   /** The derived clustered corpus: 8 well-separated centers (the RAW
@@ -211,24 +167,12 @@ object AnnRecall {
           .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v")))
     }
 
-  /** The same derivation with NO size cap — the corpus for SCALE probes on
-    * clustered geometry ([[Dedup.dedupEmbeddingCosineClusteredPlanes]]),
-    * where the interesting quantity is precisely how costs grow as the
-    * clusters do. Not oracle-checked (the capped query owns the regime
-    * demonstration); not shared-cached (scale probes release between runs). */
-  private[graft] def clusteredCorpusUncapped(spark: SparkSession, dir: String,
-      spread: Double = ClusterSpread): DataFrame =
-    clusteredFrom(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v")),
-      spread)
-
-  private def clusteredFrom(e0: DataFrame, spread: Double = ClusterSpread): DataFrame = {
+  private def clusteredFrom(e0: DataFrame): DataFrame = {
     val ctr = e0.filter(col("vec_id") >= 8 && col("vec_id") < 16)
       .select((col("vec_id") - 8).as("cid"), col("v").as("cv"))
     e0.join(broadcast(ctr), (col("vec_id") % 8) === col("cid"))
       .select(col("vec_id"),
-        zip_with(col("cv"), col("v"), (c, x) => c + lit(spread) * x).as("v"))
+        zip_with(col("cv"), col("v"), (c, x) => c + lit(ClusterSpread) * x).as("v"))
   }
 
   private[operators] val ClusteredESql: String =
@@ -318,243 +262,6 @@ object AnnRecall {
     CacheRegistry.sharedObject(s"ivf-centroids:$dir#clustered")(
       graft.tools.IndexStore.readOrBuildCentroids(spark, dir, "ivf-centroids-clustered")(
         IvfKMeans.trainCentroids(e)))
-
-  // ---------------------------------------------------------------------
-  // ×K scale probe (graft.tools.RecallScale) — NOT oracle-checked; the
-  // oracle-checked recall queries stay ann_recall/_clustered at fixture
-  // size. Round-9 verdict #1: the size-derived planes dial (Nsw.sizedPlanes)
-  // holds build COST flat as N grows, but more planes ⇒ fewer collisions ⇒
-  // sparser candidate pools — recall at scale was asserted, not measured.
-  // This probe measures it: mean recall@3 of the graph/IVF/LSH paths over
-  // an arbitrary corpus with the graph builds at an EXPLICIT planes dial.
-  // ---------------------------------------------------------------------
-
-  /** The paths the ×K probe measures — the round-9 verdict list
-    * (nsw/hnsw/nnd/ivf/lsh) plus, since round 10, the cell build and the
-    * PQ family (probe-mode codebooks train directly on the throwaway
-    * corpus instead of through the store; their dial is the codebook, so
-    * their rows read the same at both planes dials — the measured axis
-    * is quantization loss vs corpus size). */
-  private val ProbeMethodNames = Seq("ivf_kmeans", "ivf_nprobe",
-    "lsh", "lsh_multiprobe", "lsh_multitable", "nsw", "hnsw", "nsw_nnd",
-    "nsw_cell", "pq_adc", "ivfpq", "ivfadc")
-
-  /** Search variants measured by the ×K probe ONLY — not in
-    * [[MethodSpecs]], so the oracle-checked `ann_recall` query and its
-    * DuckDB mirror are untouched. IVF-routed graph entries
-    * ([[Nsw.searchWithRoutedEntries]]): `nsw_cell_routed` is now the
-    * PROMOTED serve shape (`ann_nsw_routed_search`, and the sized
-    * default of `ann_nsw_cell_search` above fixture size) — kept here so
-    * the probe keeps reporting it beside the fixed-entry control;
-    * `nsw_routed` (routing over the FLAT graph) stays experimental. */
-  private val ProbeOnlyMethods: Seq[Method] = Seq(
-    Method("nsw_routed", in => Nsw.searchWithRoutedEntries(
-      in.e, in.nswEdges, in.centroids, in.assigned, in.hops, in.beam),
-      "probe-only"),
-    Method("nsw_cell_routed", in => Nsw.searchWithRoutedEntries(
-      in.e, in.cellEdges, in.centroids, in.assigned, in.hops, in.beam),
-      "probe-only"))
-
-  /** Recall of the PRODUCTION graph-serve tier over the corpus at `dir`,
-    * FROM STORED ARTIFACTS (the round-10 verdict's done-criterion for the
-    * routed promotion): no planes/codebook overrides — the IndexStore
-    * artifacts under `dir` are read (or built at the sized dials exactly
-    * as `index_build_*` would), and the measured paths are the fixed-entry
-    * control, the routed search, and the ACTUAL `ann_nsw_cell_search`
-    * serve default, so a regression in the default's routing switch shows
-    * up as a recall split against `nsw_cell_routed`. The probe's
-    * query-swap rounds don't apply here (stored artifacts bake the corpus
-    * ids in), but neither routing nor the fixed entry NODES depend on
-    * which ids are queries — so the row averages [[ServedQueryBlocks]]
-    * disjoint 5-query blocks off the SAME artifacts (45 truth slots,
-    * ±0.022 resolution) instead of the single hardwired block. */
-  private val ServedQueryBlocks = Seq(0L, 600L, 1200L)
-
-  private[graft] def servedGraphRecall(spark: SparkSession, dir: String): DataFrame = {
-    val (e, assigned, centroids) = IvfKMeans.trained(spark, dir)
-    val in = MethodInputs(spark, e, assigned, centroids, dir, clustered = false)
-    ServedQueryBlocks.map { lo =>
-      val served = Seq(
-        Method("nsw_cell_fixed",
-          i => Nsw.searchWithEdgesDials(i.e, i.cellEdges, i.hops, i.beam,
-            queryLo = lo), "served"),
-        Method("nsw_cell_routed", i => Nsw.searchWithRoutedEntries(
-          i.e, i.cellEdges, i.centroids, i.assigned, i.hops, i.beam,
-          probeCells = Nsw.sizedProbeCells(i.n), queryLo = lo), "served")) ++
-        // the literal ann_nsw_cell_search entry point (hardwired block 0):
-        // proves the sized default actually routes — its row must equal
-        // nsw_cell_routed's block-0 slice
-        (if (lo == 0L)
-          Seq(Method("serve_default", i => Nsw.nswCellSearch(i.spark, i.dir), "served"))
-        else Seq.empty)
-      recallFrame(in, served, Similarity.annBruteForceKOn(e, K, queryLo = lo))
-    }.reduce(_ unionByName _)
-  }
-
-  /** The probeCells dial on the SERVED routed path — the next dial the
-    * query-nearest seeding measurement named: blocks whose true
-    * neighbors fall outside the routed cells cap recall exactly like
-    * IVF's nprobe. One row per (probeCells, block), same stored
-    * artifacts and truth as [[servedGraphRecall]]. */
-  private[graft] def servedRoutedSweep(
-      spark: SparkSession, dir: String,
-      probeCellsList: Seq[Int]): DataFrame = {
-    val (e, assigned, centroids) = IvfKMeans.trained(spark, dir)
-    val in = MethodInputs(spark, e, assigned, centroids, dir, clustered = false)
-    ServedQueryBlocks.map { lo =>
-      val served = probeCellsList.map { pc =>
-        Method(f"nsw_cell_routed_p$pc%02d", i => Nsw.searchWithRoutedEntries(
-          i.e, i.cellEdges, i.centroids, i.assigned, i.hops, i.beam,
-          probeCells = pc, queryLo = lo), "served")
-      }
-      recallFrame(in, served, Similarity.annBruteForceKOn(e, K, queryLo = lo))
-    }.reduce(_ unionByName _)
-  }
-
-  /** The graph-vs-IVF serve CROSSOVER at the sized cell count (round-11
-    * verdict #3): per dial d, recall of (a) the routed graph serve at
-    * probeCells = d and (b) ivf_nprobe at nprobe = d, off the SAME stored
-    * sized artifacts and truth, per served query block. At equal d both
-    * paths score the same ~d·N/K_cells candidate rows to start; the graph
-    * then pays its bounded beam (hops·beam·degree rows) to look OUTSIDE
-    * the probed cells — so the graph earns its extra cost exactly when it
-    * reaches equal recall at a LOWER dial. The tool (CellCountScale)
-    * measures wall-clock per (method, dial) alongside these recall rows. */
-  private[graft] def servedCellCrossover(
-      spark: SparkSession, dir: String, dials: Seq[Int]): DataFrame = {
-    val (e, assigned, centroids) = IvfKMeans.trained(spark, dir)
-    crossoverFrame(
-      MethodInputs(spark, e, assigned, centroids, dir, clustered = false), dials)
-  }
-
-  /** The same crossover (recall frame + walls) on an ARBITRARY corpus
-    * frame — the clustered-geometry run (CellCountScale clustered mode),
-    * where the decorrelated-fixture finding ("the beam recovers nothing
-    * outside the probed cells") gets its counterfactual: cluster
-    * structure is exactly what graph locality exploits. Probe mode
-    * throughout (ONE shared MethodInputs — fresh sized builds, no store
-    * artifacts; scaled synthetic corpora are throwaway). */
-  private[graft] def servedCellCrossoverBothOn(
-      spark: SparkSession, e: DataFrame, dials: Seq[Int])
-      : (DataFrame, Seq[(String, Double)]) = {
-    val n = e.count()
-    val centroids = IvfKMeans.trainCentroidsK(e, IvfKMeans.sizedCells(n))
-    val assigned = CacheRegistry.persistTracked(IvfKMeans.assign(e, centroids))
-    val in = MethodInputs(spark, e, assigned, centroids, dir = "", clustered = false,
-      planesOverride = Some(Nsw.sizedPlanes(n)))
-    (crossoverFrame(in, dials), crossoverWalls(in, dials))
-  }
-
-  private def crossoverFrame(in: MethodInputs, dials: Seq[Int]): DataFrame =
-    ServedQueryBlocks.map { lo =>
-      val served = dials.flatMap { d => Seq(
-        Method(f"graph_d$d%03d", i => Nsw.searchWithRoutedEntries(
-          i.e, i.cellEdges, i.centroids, i.assigned, i.hops, i.beam,
-          probeCells = d, queryLo = lo), "served"),
-        Method(f"nprobe_d$d%03d", i => IvfKMeans.kmeansNprobeSearchOn(
-          i.e, i.assigned, i.centroids, nprobe = d, queryLo = lo), "served"))
-      }
-      recallFrame(in, served, Similarity.annBruteForceKOn(in.e, K, queryLo = lo))
-    }.reduce(_ unionByName _)
-
-  /** Wall-clock companion to [[servedCellCrossover]]: per (method, dial),
-    * seconds to serve all [[ServedQueryBlocks]] off the stored artifacts
-    * (noop sink — every output column computed, nothing written). One
-    * untimed warm pass first, so Janino/JIT compile stays out of the
-    * measurement (the Bench discipline). */
-  private[graft] def servedCrossoverWalls(
-      spark: SparkSession, dir: String, dials: Seq[Int]): Seq[(String, Double)] = {
-    val (e, assigned, centroids) = IvfKMeans.trained(spark, dir)
-    crossoverWalls(
-      MethodInputs(spark, e, assigned, centroids, dir, clustered = false), dials)
-  }
-
-  private def crossoverWalls(in: MethodInputs, dials: Seq[Int]): Seq[(String, Double)] = {
-    def frames(d: Int): Seq[(String, Long => DataFrame)] = Seq(
-      (f"graph_d$d%03d", (lo: Long) => Nsw.searchWithRoutedEntries(
-        in.e, in.cellEdges, in.centroids, in.assigned, in.hops, in.beam,
-        probeCells = d, queryLo = lo)),
-      (f"nprobe_d$d%03d", (lo: Long) => IvfKMeans.kmeansNprobeSearchOn(
-        in.e, in.assigned, in.centroids, nprobe = d, queryLo = lo)))
-    def run(mk: Long => DataFrame): Unit = ServedQueryBlocks.foreach(lo =>
-      mk(lo).write.format("noop").mode("overwrite").save())
-    dials.flatMap(frames).map { case (name, mk) =>
-      run(mk) // warm
-      val t0 = System.nanoTime()
-      run(mk)
-      (name, (System.nanoTime() - t0) / 1e9)
-    }
-  }
-
-  /** (fixture-pinned planes, size-derived planes for an N-vector corpus)
-    * — exposed for the tools runner, which cannot see the operators'
-    * private dials. */
-  private[graft] def probeDials(n: Long): (Int, Int) =
-    (Similarity.TablePlanes, Nsw.sizedPlanes(n))
-
-  private[graft] def probeCorpus(spark: SparkSession, dir: String): DataFrame =
-    Nsw.vectors(spark, dir)
-
-  /** Every search path hardwires query ids 0..4, and the whole harness is
-    * deterministic — identical inputs give identical recall, so only
-    * DISTINCT query sets add measurement resolution. Round `r` swaps id
-    * block [5r, 5r+5) with [0, 5): a bijection that promotes five fresh
-    * corpus vectors to query (and graph-entry) ids. r=0 is the identity. */
-  private def probeSwap(id: org.apache.spark.sql.Column, r: Int)
-      : org.apache.spark.sql.Column = {
-    val lo = 5L * r
-    when(id < 5, id + lit(lo))
-      .when(id >= lo && id < lo + 5, id - lit(lo))
-      .otherwise(id)
-  }
-
-  /** Mean recall@3 per probe method: `rounds` independent 5-query sets
-    * (15·rounds truth slots — resolution ≈0.022 at rounds=3), graph builds
-    * at the explicit `planes` dial, ground truth by brute force on the
-    * same corpus (the `ann_recall` protocol). Each round rebuilds the
-    * graphs — queries double as NSW entry points, so the query swap
-    * changes the build too; that is measurement, not waste. */
-  private[graft] def recallProbeMeans(
-      spark: SparkSession, e: DataFrame, planes: Int, rounds: Int,
-      sizedSearch: Boolean = false, pinnedCodes: Boolean = false): Map[String, Double] = {
-    val methods = MethodSpecs.filter(m => ProbeMethodNames.contains(m.name)) ++
-      ProbeOnlyMethods
-    val n = e.count()
-    val perRound = (0 until rounds).map { r =>
-      val er = CacheRegistry.persistTracked(
-        e.withColumn("vec_id", probeSwap(col("vec_id"), r)))
-      val centroids = IvfKMeans.trainCentroids(er)
-      val assigned = CacheRegistry.persistTracked(IvfKMeans.assign(er, centroids))
-      // both dial states EXPLICIT: the probe's pinned rows must stay
-      // pinned even though the serve default is now the sized dial
-      val in = MethodInputs(spark, er, assigned, centroids, dir = s"probe-r$r",
-        clustered = false, planesOverride = Some(planes),
-        hopsOverride = Some(if (sizedSearch) Nsw.sizedHops(n) else Nsw.Hops),
-        hops1Override = Some(if (sizedSearch)
-          Nsw.sizedHopsFloor(n / Nsw.SampleMod, Nsw.HopsL1) else Nsw.HopsL1),
-        beamOverride = Some(if (sizedSearch) Nsw.sizedBeam(n) else Nsw.Beam),
-        pinnedCodes = pinnedCodes)
-      // force the graph builds eagerly, timed per structure: the build
-      // wall is the dial's COST side (pinned vs sized should split hard at
-      // ×10 — that split is also the probe's proof the override is live)
-      def timed(label: String, df: => DataFrame): Unit = {
-        val t0 = System.nanoTime()
-        val n = df.count()
-        println(f"RECALLBUILD planes=$planes%-3d round=$r $label%-8s " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.1f s  $n%9d edges")
-      }
-      timed("nsw", in.nswEdges)
-      timed("hnsw_l1", in.hnswL1Edges)
-      timed("nnd", in.nndEdges)
-      timed("nsw_cell", in.cellEdges)
-      val rows = recallFrame(in, methods, Similarity.annBruteForceKOn(er, K))
-        .groupBy(col("method")).agg(avg(col("recall")).as("mean_recall"))
-        .collect().map(row => row.getString(0) -> row.getDouble(1)).toMap
-      CacheRegistry.release(blocking = true)
-      rows
-    }
-    methods.map(_.name).map(n => n -> perRound.map(_(n)).sum / rounds).toMap
-  }
 
   def annRecallClustered(spark: SparkSession, dir: String): DataFrame = {
     val e = clusteredCorpus(spark, dir)

@@ -208,10 +208,10 @@ object Dedup {
     * corpus's signatures once ([[bandsFrame]] / `index_build_minhash_bands`)
     * and join only a new batch's signatures against them.
     *
-    * The (bands, rowsPerBand) dial defaults to the pinned 4×4 every
-    * oracle query uses; [[graft.tools.BandSweep]] drives the other
-    * partitions of the 16 hashes to measure the collision-probability
-    * trade the defaults buy (SCALING.md "The banding dial"). */
+    * The (bands, rowsPerBand) dial defaults to the pinned 4×4 every oracle
+    * query uses; graft.tools.BandSweep @ c6e9ec7 drives the other partitions of
+    * the 16 hashes to measure the collision-probability trade the defaults buy
+    * (SCALING.md "The banding dial"). */
   private[graft] def bandedSignatures(sh: DataFrame,
       bands: Int = NumBands, rowsPerBand: Int = RowsPerBand): DataFrame = {
     require(bands * rowsPerBand <= NumHashes,
@@ -839,13 +839,9 @@ object Dedup {
   def dedupEmbeddingCosine(spark: SparkSession, dir: String): DataFrame =
     dedupEmbeddingCosinePlanes(spark, dir, NearDupPlanes)
 
-  /** The shared near-dup core over any `(vec_id, v)` corpus: manufacture
-    * near-dups (every 10th vector perturbed by ±2⁻⁷ per element, id offset
-    * by `pertOffset`), block by sign-of-projection hyperplane bucket,
-    * verify candidates by exact cosine ≥ 0.99. */
   /** `e` plus its manufactured near-dups (every 10th vector perturbed by
     * ±2⁻⁷ per element, id offset by `pertOffset`) — the corpus both
-    * blocking strategies and the NearDupSweep tool scan. */
+    * blocking strategies scan. */
   private[graft] def withPerturbed(e: DataFrame, pertOffset: Long): DataFrame =
     e.unionByName(
       e.filter(col("vec_id") % 10 === 0)
@@ -853,9 +849,12 @@ object Dedup {
           transform(sequence(lit(1), lit(64)),
             i => element_at(col("v"), i) + lit(0.0078125) * (i % 3 - 1).cast("double")).as("v")))
 
-  private[graft] def nearDupPairsOn(
-      e: DataFrame, planes: Int, pertOffset: Long = 100000L): DataFrame = {
-    val all = withPerturbed(e, pertOffset)
+  /** The shared near-dup core over any `(vec_id, v)` corpus: manufacture
+    * near-dups ([[withPerturbed]], ids offset by 100000), block by
+    * sign-of-projection hyperplane bucket, verify candidates by exact
+    * cosine ≥ 0.99. */
+  private[graft] def nearDupPairsOn(e: DataFrame, planes: Int): DataFrame = {
+    val all = withPerturbed(e, 100000L)
       .withColumn("bucket", VectorFunctions.hyperplaneBucket(col("v"), planes))
     val x = all.select(col("vec_id").as("a_id"), col("v").as("va"), col("bucket"))
     val y = all.select(col("vec_id").as("b_id"), col("v").as("vb"), col("bucket"))
@@ -867,39 +866,29 @@ object Dedup {
       .orderBy(col("a_id"), col("b_id"))
   }
 
-  /** Plane count is THE scale dial: 2^planes buckets, so occupancy — and
-    * with it within-bucket candidate pairs — grows linearly in corpus size
-    * when planes is fixed. Production sizing is
-    * planes ≈ log2(n / target_occupancy): the SfScale 100× run shows the
-    * fixed-8-plane query going super-linear (bucket saturation) and this
-    * dial restoring ~linear cost at the same recall trade (SCALING.md). */
+  /** Plane count is THE scale dial: 2^planes buckets, so occupancy — and with
+    * it within-bucket candidate pairs — grows linearly in corpus size when
+    * planes is fixed. Production sizing is planes ≈ log2(n / target_occupancy):
+    * the graft.tools.SfScale @ c6e9ec7 100× run shows the fixed-8-plane query
+    * going super-linear (bucket saturation) and this dial restoring ~linear
+    * cost at the same recall trade (SCALING.md). */
   def dedupEmbeddingCosinePlanes(spark: SparkSession, dir: String, planes: Int): DataFrame =
     nearDupPairsOn(
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v")),
       planes)
 
-  /** The near-dup scan on the geometry that breaks hyperplane blocking
-    * (round-8 item #3): [[AnnRecall.clusteredCorpus]]'s members agree on
-    * every plane whose projection of the shared center dominates the noise
-    * term, so occupancy concentrates per cluster — within-bucket candidate
-    * pairs grow with cluster size squared, not corpus size. The
-    * oracle-checked query pins the size-capped demonstration corpus
-    * (regime, not scale); the SfScale rerun derives the clustered corpus
-    * UNCAPPED over the scaled fixture and measures the planes dial on the
-    * hostile geometry — numbers in SCALING.md. */
+  /** The near-dup scan on the geometry that breaks hyperplane blocking (round-8
+    * item #3): [[AnnRecall.clusteredCorpus]]'s members agree on every plane
+    * whose projection of the shared center dominates the noise term, so
+    * occupancy concentrates per cluster — within-bucket candidate pairs grow
+    * with cluster size squared, not corpus size. The oracle-checked query pins
+    * the size-capped demonstration corpus (regime, not scale); the
+    * graft.tools.SfScale @ c6e9ec7 rerun derives the clustered corpus UNCAPPED
+    * over the scaled fixture and measures the planes dial on the hostile
+    * geometry — numbers in SCALING.md. */
   def dedupEmbeddingCosineClustered(spark: SparkSession, dir: String): DataFrame =
     nearDupPairsOn(AnnRecall.clusteredCorpus(spark, dir), NearDupPlanes)
-
-  /** SfScale probe: uncapped clustered derivation × planes dial. */
-  def dedupEmbeddingCosineClusteredPlanes(
-      spark: SparkSession, dir: String, planes: Int): DataFrame = {
-    val e = AnnRecall.clusteredCorpusUncapped(spark, dir)
-    // dense ids 0..N-1: offset the manufactured near-dups past max(id)
-    // (the capped query's fixed +100000 would collide at scaled sizes)
-    val offset = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    nearDupPairsOn(e, planes, offset)
-  }
 
   /** The PRODUCTION fix for clustered geometry, measured decisive at ×10
     * (150k vectors): raw-vector blocking carries 9.5M candidate pairs at 8
@@ -922,9 +911,8 @@ object Dedup {
   }
 
   private[graft] def nearDupResidualOn(
-      e: DataFrame, centroids: Seq[(Int, Array[Double])],
-      planes: Int, pertOffset: Long = 100000L): DataFrame = {
-    val all = IvfKMeans.assign(withPerturbed(e, pertOffset), centroids)
+      e: DataFrame, centroids: Seq[(Int, Array[Double])], planes: Int): DataFrame = {
+    val all = IvfKMeans.assign(withPerturbed(e, 100000L), centroids)
     val rb = all.withColumn("bucket",
       VectorFunctions.hyperplaneBucket(
         graft.functions.CentroidResidual.column(col("v"), col("cluster"), centroids),
@@ -939,16 +927,6 @@ object Dedup {
       .filter(col("cos") >= 0.99)
       .select(col("a_id"), col("b_id"), pround(col("cos"), 4).as("cosine"))
       .orderBy(col("a_id"), col("b_id"))
-  }
-
-  /** SfScale probe: residual blocking on the uncapped clustered corpus —
-    * the quantizer trains on the scaled corpus itself (driver-bound K×Dim,
-    * like every Lloyd run here). */
-  def dedupEmbeddingCosineResidualPlanes(
-      spark: SparkSession, dir: String, planes: Int): DataFrame = {
-    val e = AnnRecall.clusteredCorpusUncapped(spark, dir)
-    val offset = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    nearDupResidualOn(e, IvfKMeans.trainCentroids(e), planes, offset)
   }
 
   /** [[nearDupPairsOn]] as SQL over whatever CTE block defines `e`. */
@@ -1066,16 +1044,6 @@ object Dedup {
       .select(col("vec_id"),
         pround(sqrt(VectorFunctions.dot(col("v"), col("v"))), 4).as("v_norm"))
       .orderBy(col("vec_id"))
-  }
-
-  /** SfScale probe: the K ∝ N production dial (constant cell occupancy ⇒
-    * constant within-cell pair cost per vector), with the near-dup offset
-    * past max(id) so scaled dense id spaces don't collide. */
-  def dedupSemanticK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
-    val offset = e.agg(max(col("vec_id"))).head().getLong(0) + 1L
-    semanticOn(e, IvfKMeans.trainCentroidsK(e, k), offset)
   }
 
   private[graft] def semanticOn(

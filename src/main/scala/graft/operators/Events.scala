@@ -314,20 +314,19 @@ object Events {
     * [[graft.streaming.StreamingJoin]] (whose parity test asserts the two
     * produce identical pairs).
     *
-    * Unlike `ev_interval_join` (no equi-key ⇒ banding required), the
-    * user_id equi-key makes this a plain HASH JOIN with a residual time
-    * filter — broadcast while one side fits (skew-immune by
-    * construction), one shuffle of each side keyed by user beyond that,
-    * per-user fan-out bounded by rate × window. Hot users in the shuffle
-    * regime get [[attributionSalted]] — MEASURED on a skewed ×10 replay
-    * (one user owning 10 % of all events: forced-shuffle stock 54 s with
-    * a 107× straggler task, AQE unable to split it — byte-blind compute
-    * skew — salted 6 s; SfScale `ev_attribution_skew` block, SCALING.md
-    * "attribution under a hot key") rather than argued by analogy to
-    * `dedup_salted_skew`. The streaming form keeps state bounded by the
-    * same window via watermarks. LEFT semantics keep zero-view purchases
-    * (`n_views = 0`, NULL lag — coalesced to -1 so the lag column stays
-    * non-null BIGINT in both engines). */
+    * Unlike `ev_interval_join` (no equi-key ⇒ banding required), the user_id
+    * equi-key makes this a plain HASH JOIN with a residual time filter —
+    * broadcast while one side fits (skew-immune by construction), one shuffle
+    * of each side keyed by user beyond that, per-user fan-out bounded by rate ×
+    * window. Hot users in the shuffle regime get [[attributionSalted]] —
+    * MEASURED on a skewed ×10 replay (one user owning 10 % of all events:
+    * forced-shuffle stock 54 s with a 107× straggler task, AQE unable to split
+    * it — byte-blind compute skew — salted 6 s; graft.tools.SfScale @ c6e9ec7
+    * `ev_attribution_skew` block, SCALING.md "attribution under a hot key")
+    * rather than argued by analogy to `dedup_salted_skew`. The streaming form
+    * keeps state bounded by the same window via watermarks. LEFT semantics keep
+    * zero-view purchases (`n_views = 0`, NULL lag — coalesced to -1 so the lag
+    * column stays non-null BIGINT in both engines). */
   def attribution(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")

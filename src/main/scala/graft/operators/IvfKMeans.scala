@@ -105,12 +105,12 @@ object IvfKMeans {
   private[graft] def trainCentroids(e: DataFrame): Seq[(Int, Array[Double])] =
     trainCentroidsK(e, K)
 
-  /** K is THE scale dial of the IVF family: cells partition the corpus,
-    * so with K pinned each cell holds N/K vectors and a single-cell scan
-    * grows linearly in N. Production sizing is K ∝ √N (balancing probe
-    * cost K against scan cost N/K — the standard IVF rule); the SfScale
-    * probe measures both the pinned and the resized form. The
-    * oracle-checked queries pin K=[[K]] (the replayable fixture dial). */
+  /** K is THE scale dial of the IVF family: cells partition the corpus, so with
+    * K pinned each cell holds N/K vectors and a single-cell scan grows linearly
+    * in N. Production sizing is K ∝ √N (balancing probe cost K against scan
+    * cost N/K — the standard IVF rule); the graft.tools.SfScale @ c6e9ec7 probe
+    * measures both the pinned and the resized form. The oracle-checked queries
+    * pin K=[[K]] (the replayable fixture dial). */
   private[graft] def trainCentroidsK(e: DataFrame, k: Int): Seq[(Int, Array[Double])] = {
     var centroids: Seq[(Int, Array[Double])] =
       e.filter(col("vec_id") < k).orderBy(col("vec_id")).collect()
@@ -118,15 +118,6 @@ object IvfKMeans {
     for (_ <- 0 until Iterations)
       centroids = updateCollect(assign(e, centroids))
     centroids
-  }
-
-  /** SfScale probe: train at an arbitrary K and run the single-cell
-    * search — the pinned-vs-resized cell-count measurement
-    * (train + assign + search per run; no store, like the planes probes). */
-  def kmeansSearchK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    val e = vectors(spark, dir)
-    val centroids = trainCentroidsK(e, k)
-    kmeansSearchOn(graft.tools.CacheRegistry.persistTracked(assign(e, centroids)))
   }
 
   /** Train once and return (vectors, final assignment, final centroids) —
@@ -210,27 +201,22 @@ object IvfKMeans {
     * selected by a pure map (centroids ride in as literals; sort_array
     * over k (d2, cluster) structs). Shared with the IVFPQ composition. */
   private[operators] def nprobeCells(
-      e: DataFrame, centroids: Seq[(Int, Array[Double])],
-      nprobe: Int = NProbe, queryLo: Long = 0L): DataFrame = {
+      e: DataFrame, centroids: Seq[(Int, Array[Double])]): DataFrame = {
     val dists = array(centroids.sortBy(_._1).map { case (cid, arr) =>
       val c = typedLit(arr.toSeq)
       struct((dot(col("qv"), col("qv")) - lit(2.0) * dot(col("qv"), c) + dot(c, c)).as("d2"),
         lit(cid).as("cluster"))
     }: _*)
-    e.filter(col("vec_id") >= queryLo && col("vec_id") < queryLo + 5)
+    e.filter(col("vec_id") >= 0 && col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .select(col("query_id"), col("qv"),
-        explode(slice(sort_array(dists), 1, nprobe)).as("dc"))
+        explode(slice(sort_array(dists), 1, NProbe)).as("dc"))
       .select(col("query_id"), col("qv"), col("dc.cluster").as("cluster"))
   }
 
-  /** `nprobe`/`queryLo` default to the oracle-pinned dial and query block;
-    * the crossover sweep ([[AnnRecall.servedCellCrossover]]) passes
-    * explicit values to measure the dial at the sized cell count. */
   private[operators] def kmeansNprobeSearchOn(
-      e: DataFrame, assigned: DataFrame, centroids: Seq[(Int, Array[Double])],
-      nprobe: Int = NProbe, queryLo: Long = 0L): DataFrame = {
-    val qProbe = nprobeCells(e, centroids, nprobe, queryLo)
+      e: DataFrame, assigned: DataFrame, centroids: Seq[(Int, Array[Double])]): DataFrame = {
+    val qProbe = nprobeCells(e, centroids)
     val c = assigned.select(col("vec_id").as("neighbor_id"), col("v").as("nv"), col("cluster"))
     val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("neighbor_id"))
     c.join(broadcast(qProbe), Seq("cluster"))

@@ -189,13 +189,13 @@ object Merge {
     * until the next round's GC. MergeSpec drives both windows through
     * [[IncHooks]] and asserts the read.
     *
-    * Scale: rewritten bytes per round ≈ touched/total × table bytes, and
-    * the manifest is O(buckets) lines — the dial is bucket count (size it
-    * so one bucket's merge fits an executor, buckets ≈ tableBytes/1 GiB;
-    * at 100 TB a 10⁵-bucket table absorbs a 10³-key batch by rewriting
-    * ≈1 % of the data and rewriting a 10⁵-line manifest). Stats are
-    * returned (and printed as MERGEINC lines by the SfScale replay)
-    * rather than asserted, so SCALING.md rows are measurements.
+    * Scale: rewritten bytes per round ≈ touched/total × table bytes, and the
+    * manifest is O(buckets) lines — the dial is bucket count (size it so one
+    * bucket's merge fits an executor, buckets ≈ tableBytes/1 GiB; at 100 TB a
+    * 10⁵-bucket table absorbs a 10³-key batch by rewriting ≈1 % of the data and
+    * rewriting a 10⁵-line manifest). Stats are returned (and printed as
+    * MERGEINC lines by the graft.tools.SfScale @ c6e9ec7 replay) rather than
+    * asserted, so SCALING.md rows are measurements.
     *
     * Bulk-load dial: at large bucket counts, pre-partition `initial` by
     * the bucket function (`repartition(n, pmod(key, buckets))`) before
@@ -411,16 +411,16 @@ object Merge {
     // version is never treated as expired by a slower writer's sweep
     val live: Set[(Int, Int)] = onDisk.filter(_ >= keepFrom)
       .flatMap(v => readManifestAt(fs, table, v).toSeq).toSet
-    // dead: referenced by SOME on-disk manifest but by no retained one.
-    // Only provably-dead generations are deleted here — a gen dir no
-    // manifest has ever named may be an in-flight concurrent writer's
-    // not-yet-committed data (the round-13 two-writer race made this
-    // concrete); such orphans are reclaimed by [[vacuumOrphans]] under an
-    // age gate instead, exactly Delta VACUUM's uncommitted-file rule.
-    // The dead set is computed FROM THE MANIFESTS (driver memory) and its
-    // paths deleted directly — round 14 removed the per-bucket directory
-    // walk this used to do, which was O(buckets) driver fs listings per
-    // commit (the DeleteScale ×100 caveat: at 10⁵ buckets the walk, not
+    // dead: referenced by SOME on-disk manifest but by no retained one. Only
+    // provably-dead generations are deleted here — a gen dir no manifest has
+    // ever named may be an in-flight concurrent writer's not-yet-committed data
+    // (the round-13 two-writer race made this concrete); such orphans are
+    // reclaimed by [[vacuumOrphans]] under an age gate instead, exactly Delta
+    // VACUUM's uncommitted-file rule. The dead set is computed FROM THE
+    // MANIFESTS (driver memory) and its paths deleted directly — round 14
+    // removed the per-bucket directory walk this used to do, which was
+    // O(buckets) driver fs listings per commit (the
+    // graft.tools.DeleteScale @ c6e9ec7 ×100 caveat: at 10⁵ buckets the walk, not
     // the data, was the sweep's cost); now the sweep is O(dead entries).
     val referenced: Set[(Int, Int)] = onDisk
       .flatMap(v => readManifestAt(fs, table, v).toSeq).toSet
@@ -508,9 +508,9 @@ object Merge {
     deleted
   }
 
-  /** Per-delete accounting of [[deleteWhere]] — rewritten vs table bytes
-    * is the evidence for "a takedown prices its touched buckets, not the
-    * table" (the DeleteScale replay's axis). */
+  /** Per-delete accounting of [[deleteWhere]] — rewritten vs table bytes is the
+    * evidence for "a takedown prices its touched buckets, not the table" (the
+    * graft.tools.DeleteScale @ c6e9ec7 replay's axis). */
   final case class DeleteStats(
       version: Int, touchedBuckets: Int, deletedRows: Long,
       rewrittenBytes: Long = 0L, tableBytes: Long = 0L)
@@ -567,18 +567,17 @@ object Merge {
       autoCompactAtFiles)
   }
 
-  /** KEY-BASED TAKEDOWN — [[deleteWhere]] specialized to
-    * `column IN (values)`, the shape takedown requests actually have,
-    * with the FIND phase served through the Bloom fragments: instead of
-    * scanning the whole table to name the touched buckets (the
-    * DeleteScale-measured `del_s` growth at ×100 — the scan, not the
-    * rewrite, was the growing term), [[pointProbe]] opens only the files
-    * whose filter fires. No false negatives means the candidate set
-    * provably covers every matching row; tables without fragments fall
-    * back to the plain predicate scan — pruning is an optimization,
-    * never a correctness dependency. The rewrite and commit are
-    * [[deleteWhere]]'s exactly (strict OCC, grace policy, fragments for
-    * the new generation). */
+  /** KEY-BASED TAKEDOWN — [[deleteWhere]] specialized to `column IN (values)`,
+    * the shape takedown requests actually have, with the FIND phase served
+    * through the Bloom fragments: instead of scanning the whole table to name
+    * the touched buckets (the `del_s` growth measured by
+    * graft.tools.DeleteScale @ c6e9ec7 at ×100 — the scan, not the rewrite, was
+    * the growing term), [[pointProbe]] opens only the files whose filter fires.
+    * No false negatives means the candidate set provably covers every matching
+    * row; tables without fragments fall back to the plain predicate scan —
+    * pruning is an optimization, never a correctness dependency. The rewrite
+    * and commit are [[deleteWhere]]'s exactly (strict OCC, grace policy,
+    * fragments for the new generation). */
   def deleteKeys(spark: SparkSession, tablePath: String, column: String,
       values: Seq[Long], retainVersions: Int = 1,
       takedownGraceVersions: Int = Int.MaxValue,
@@ -2341,11 +2340,7 @@ object Merge {
     * column so the final table proves ordering (later rounds win) and
     * policy (KEEP columns survive from the initial snapshot). */
   private def freshRound(spark: SparkSession, dir: String, r: Int): DataFrame =
-    freshRoundMod(spark, dir, r, 97)
-
-  private def freshRoundMod(
-      spark: SparkSession, dir: String, r: Int, keyMod: Int): DataFrame =
-    Tables.games(spark, dir).filter(col("universeId") % keyMod === r)
+    Tables.games(spark, dir).filter(col("universeId") % 97 === r)
       .select(
         col("universeId"),
         (col("universeId") + lit(1000000L) * r).as("rootPlaceId"),
@@ -2353,23 +2348,6 @@ object Merge {
         when(col("universeId") % 2 === 0,
           concat(lit(s"refresh$r "), col("universeId").cast("string"))).as("description"),
         (col("universeId") % 100 + r).as("playerCount"))
-
-  /** SCALING probe (SfScale's merge-inc block): the same three-round
-    * incremental merge at LAKE-REGIME dials — bucket count sized to the
-    * corpus and a fresh batch much smaller than it (`keyMod` ≫ buckets is
-    * the regime where rewritten-bytes ∝ touched-buckets shows; the
-    * oracle-checked query pins 16 buckets / ~1 % batches for the
-    * fixture-size equivalence proof instead). */
-  def incrementalProbe(spark: SparkSession, dir: String, tablePath: String,
-      buckets: Int, keyMod: Int): Seq[IncRoundStats] =
-    upsertIncrementalRounds(
-      spark, tablePath,
-      existingSnapshot(spark, dir),
-      (1 to IncRounds).map(freshRoundMod(spark, dir, _, keyMod)), "universeId",
-      overwriteCols = Seq("rootPlaceId", "name", "playerCount"),
-      coalesceCols = Seq("description"),
-      keepCols = Seq("gameplayDescription"),
-      buckets = buckets)
 
   private def freshRoundSql(r: Int): String =
     s"""f$r AS (SELECT universeId,

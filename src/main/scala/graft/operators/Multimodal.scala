@@ -248,10 +248,10 @@ object Multimodal {
     *     similarity mass);
     *   - verify: exact Hamming distance ≤ [[PhHammingMax]].
     *
-    * Scale shape at 100 TB: one map pass per image for the hash, one
-    * shuffle on the 8-byte (band, chunk) key, exact verify only on
-    * colliding pairs — the same plan the text SimHash family already
-    * proved flat at ×10/×100 (SCALING.md NearDupSweep). */
+    * Scale shape at 100 TB: one map pass per image for the hash, one shuffle on
+    * the 8-byte (band, chunk) key, exact verify only on colliding pairs — the
+    * same plan the text SimHash family already proved flat at ×10/×100
+    * (SCALING.md graft.tools.NearDupSweep @ c6e9ec7). */
   def phashDedup(spark: SparkSession, dir: String): DataFrame =
     // persist (tracked — the dedupNgramJaccard precedent) is LOAD-BEARING
     // here, not a cache nicety: phash is an aggregate lambda over a
@@ -649,10 +649,10 @@ object Multimodal {
     *     the alignment IS the evidence (a takedown reviewer needs "your
     *     upload matches source X starting at 0:12", not just a score).
     *
-    * The fixture plants a PREFIX-SHIFTED family (every 7th doc behind a
-    * 4-token intro = exactly one hop) alongside the exact and tail-edit
-    * families: the operator attributes every planted copy AND reports
-    * the shift (offset −1) — VideoSweep-style evidence in AudioSweep.
+    * The fixture plants a PREFIX-SHIFTED family (every 7th doc behind a 4-token
+    * intro = exactly one hop) alongside the exact and tail-edit families: the
+    * operator attributes every planted copy AND reports the shift (offset −1) —
+    * graft.tools.VideoSweep-style evidence in graft.tools.AudioSweep @ c6e9ec7.
     *
     * Scale shape at 100 TB: identical to [[videoDedup]] through the
     * verify (map pass per window, one shuffle on the band key), then the
@@ -722,16 +722,16 @@ object Multimodal {
     * planted family (every 7th doc behind a 4-token intro, one hop
     * exactly), so offset detection has ground truth. */
   /** `window`/`hop` are the candidate-mass dial (round 17 — the ×10
-    * SfScale replay measured banded candidates at 21.9× for a 10×
-    * corpus as the 2^15-bucket band space starts to saturate; halving
-    * the subfingerprint rate cuts candidate mass ~quadratically since
-    * both join sides thin). The hop=4 DEFAULT is justified by the same
-    * replay: an edit of g tokens is attributable only when hop ≤ g (the
-    * planted 4-token intro lands at exactly −1 hop at hop 4; at hop 8
-    * no window of the shifted clip coincides with ANY original window,
-    * the subfingerprints decorrelate, and the shifted family is lost —
-    * AudioSweep's hop-8 row). Widen the hop only when the catalog's
-    * minimal attributable edit is coarser. */
+    * graft.tools.SfScale @ c6e9ec7 replay measured banded candidates at 21.9× for
+    * a 10× corpus as the 2^15-bucket band space starts to saturate; halving the
+    * subfingerprint rate cuts candidate mass ~quadratically since both join
+    * sides thin). The hop=4 DEFAULT is justified by the same replay: an edit of
+    * g tokens is attributable only when hop ≤ g (the planted 4-token intro
+    * lands at exactly −1 hop at hop 4; at hop 8 no window of the shifted clip
+    * coincides with ANY original window, the subfingerprints decorrelate, and
+    * the shifted family is lost — graft.tools.AudioSweep @ c6e9ec7's hop-8 row).
+    * Widen the hop only when the catalog's minimal attributable edit is
+    * coarser. */
   private[graft] def audioSubs(spark: SparkSession, dir: String,
       window: Int = AfWindow, hop: Int = AfHop): DataFrame = {
     import graft.functions.ArrayExpressions

@@ -158,12 +158,12 @@ object Nsw {
     edgesOn(e, sizedPlanes(e.count()), idStep)
 
   /** Planes-per-table is THE scale dial for the graph build, exactly as in
-    * [[Dedup.dedupEmbeddingCosinePlanes]]: with planes fixed, bucket
-    * occupancy — and with it candidate pairs — grows linearly in corpus
-    * size, making the build O(N²·L/2^planes). Production sizing is
-    * planes ≈ log2(N·L / target_candidates_per_node); the SfScale ×10 run
-    * measures both the fixture-pinned dial and this resized one
-    * (SCALING.md). The oracle-checked query pins planes=[[Similarity.TablePlanes]]. */
+    * [[Dedup.dedupEmbeddingCosinePlanes]]: with planes fixed, bucket occupancy
+    * — and with it candidate pairs — grows linearly in corpus size, making the
+    * build O(N²·L/2^planes). Production sizing is planes ≈ log2(N·L /
+    * target_candidates_per_node); the ×10 run of graft.tools.SfScale @ c6e9ec7
+    * measures both the fixture-pinned dial and this resized one (SCALING.md).
+    * The oracle-checked query pins planes=[[Similarity.TablePlanes]]. */
   private[graft] def edgesOn(e: DataFrame, planes: Int, idStep: Int = 1): DataFrame =
     symmetrizeWithLongLinks(e, knnEdgesOn(e, planes), idStep)
 
@@ -359,16 +359,12 @@ object Nsw {
 
   /** [[searchWithEdges]] at explicit search dials — the serving path for
     * grown corpora, where [[sizedHops]] replaces the fixture-pinned hop
-    * budget (the ×10 recall probe is the measurement consumer). `queryLo`
-    * shifts the 5-query block (default the canonical 0..4; the entry
-    * NODES stay the fixed low ids regardless) so stored-artifact recall
-    * rows can average disjoint query sets. */
+    * budget. */
   private[graft] def searchWithEdgesDials(
-      e: DataFrame, edges: DataFrame, hops: Int, beam: Int,
-      queryLo: Long = 0L): DataFrame = {
+      e: DataFrame, edges: DataFrame, hops: Int, beam: Int): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val q = queryFrame(e, queryLo)
+    val q = queryFrame(e)
     // two tiny jobs: the data-derived query and entry id sets (both ≤ 5)
     val qIds = q.select(col("query_id")).as[Long].collect().sorted.toSeq
     val entryIds = e.filter(col("vec_id") < Entries)
@@ -377,10 +373,8 @@ object Nsw {
     rankTopK(spark, beamLoop(e, q, edges, seeds, hops, beam))
   }
 
-  private def queryFrame(e: DataFrame): DataFrame = queryFrame(e, 0L)
-
-  private def queryFrame(e: DataFrame, lo: Long): DataFrame =
-    e.filter(col("vec_id") >= lo && col("vec_id") < lo + 5)
+  private def queryFrame(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") >= 0 && col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
 
   /** How many nearest cells route each query's entry seeds — the nprobe
@@ -389,19 +383,18 @@ object Nsw {
     * entry diversity exactly like IVF's nprobe. */
   private[graft] val RouteProbeCells = 2
 
-  /** Size-derived probeCells: a QUARTER of the sized cell count (floored
-    * at the pinned [[RouteProbeCells]] — exactly cells/4 at the fixture's
-    * 8-cell quantizer, so the routed mirror's unrolled 2 cells replay
-    * unchanged). Re-derived in round 12 when `IvfKMeans.sizedCells`
-    * landed: the round-11 "saturation at 8" was measured against a
-    * quantizer whose cell count stayed PINNED at 8 — probing 8 of 8 cells
-    * scanned the whole corpus for seeds, which is what bought recall
-    * 1.00. The CellCountScale crossover at the SIZED quantizer shows
-    * recall tracking scan fraction on this geometry (×10 @ 32 cells:
-    * 0.84 at 1/4 scan; ×100 @ 128 cells: 0.91 at 1/4 scan — identical to
-    * ivf_nprobe at the same fraction), so the serve default picks the
-    * fixed quarter-scan point rather than a fixed cell count: seed cost
-    * stays ∝ N/4 with bounded beam on top, and the recall target is a
+  /** Size-derived probeCells: a QUARTER of the sized cell count (floored at the
+    * pinned [[RouteProbeCells]] — exactly cells/4 at the fixture's 8-cell
+    * quantizer, so the routed mirror's unrolled 2 cells replay unchanged).
+    * Re-derived in round 12 when `IvfKMeans.sizedCells` landed: the round-11
+    * "saturation at 8" was measured against a quantizer whose cell count stayed
+    * PINNED at 8 — probing 8 of 8 cells scanned the whole corpus for seeds,
+    * which is what bought recall 1.00. The graft.tools.CellCountScale @ c6e9ec7
+    * crossover at the SIZED quantizer shows recall tracking scan fraction on
+    * this geometry (×10 @ 32 cells: 0.84 at 1/4 scan; ×100 @ 128 cells: 0.91 at
+    * 1/4 scan — identical to ivf_nprobe at the same fraction), so the serve
+    * default picks the fixed quarter-scan point rather than a fixed cell count:
+    * seed cost stays ∝ N/4 with bounded beam on top, and the recall target is a
     * deliberate dial, not an accident of the quantizer's size. */
   private[graft] def sizedProbeCells(n: Long): Int =
     math.max(RouteProbeCells, IvfKMeans.sizedCells(n) / 4)
@@ -427,11 +420,10 @@ object Nsw {
   private[graft] def searchWithRoutedEntries(
       e: DataFrame, edges: DataFrame,
       centroids: Seq[(Int, Array[Double])], assigned: DataFrame,
-      hops: Int, beam: Int, probeCells: Int = RouteProbeCells,
-      queryLo: Long = 0L): DataFrame = {
+      hops: Int, beam: Int, probeCells: Int = RouteProbeCells): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val q = queryFrame(e, queryLo)
+    val q = queryFrame(e)
     val qVecs = q.as[(Long, Seq[Double])].collect()
     def cosL(a: Seq[Double], b: Array[Double]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
@@ -811,28 +803,17 @@ object Nsw {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Production-dial variant for scale measurement: identical search over
-    * a graph whose candidate buckets use `planes` planes per table.
-    * Deliberately NOT IndexStore-backed: the SfScale probes exist to
-    * measure the BUILD cost at the resized dial, so each run pays a fresh
-    * build (per-run persist only — the serve queries' store amortization
-    * would hide exactly the number being measured). */
-  def nswSearchPlanes(spark: SparkSession, dir: String, planes: Int): DataFrame = {
-    val e = vectors(spark, dir)
-    searchWithEdges(e, CacheRegistry.persistTracked(edgesOn(e, planes)))
-  }
-
   // ------------------------------------------------------------ NN-descent
 
   /** Round count × working degree, picked by MEASUREMENT (the round-7
-    * NndKnee grid over {iters 0..5} × {degree 12, 16} at sf0.01 and
-    * sf0.1): 3 rounds at degree 16 reaches the same graph hit rate as the
-    * previous 5 rounds at degree 12 (0.96 vs 0.94 at sf0.01, 0.65 vs 0.69
-    * at sf0.1) and the same search recall within the harness's ±1-sample
+    * graft.tools.NndKnee @ c6e9ec7 grid over {iters 0..5} × {degree 12, 16} at
+    * sf0.01 and sf0.1): 3 rounds at degree 16 reaches the same graph hit rate
+    * as the previous 5 rounds at degree 12 (0.96 vs 0.94 at sf0.01, 0.65 vs
+    * 0.69 at sf0.1) and the same search recall within the harness's ±1-sample
     * noise (0.47 vs 0.53 / 0.27 vs 0.20) at ONE-THIRD LESS build cost —
-    * convergence speed scales with the candidate pool (2·degree)² per
-    * round, so a wider working degree buys more per round than extra
-    * rounds do. Numbers in SCALING.md. */
+    * convergence speed scales with the candidate pool (2·degree)² per round, so
+    * a wider working degree buys more per round than extra rounds do. Numbers
+    * in SCALING.md. */
   private[operators] val NndIters = 3
 
   /** Working degree during NN-descent rounds. Wider than the final
@@ -862,23 +843,22 @@ object Nsw {
     * the corpus.
     *
     * Scale shape: each round's candidate generation is the edge table
-    * self-joined on the shared middle node. The "(2·degree)² per node"
-    * bound is only true if the UNDIRECTED working graph is itself
-    * degree-capped: out-edges are top-`buildDegree` by construction, but
-    * REVERSE edges give hub nodes unbounded in-degree, and 2-hop
-    * expansion through a hub is quadratic in it — the round-7 SfScale ×10
-    * run caught exactly this (ratio 10.4 uncapped). So each round caps
-    * the undirected adjacency at 2·buildDegree rows per src (deterministic
-    * keep: lowest dst ids — hubs shed their farthest-id reverse links)
-    * BEFORE the self-join, making the bound real at any corpus size (vs
-    * the LSH build's occupancy-driven O(N²·L/2^planes), which needs the
-    * planes dial re-sized as N grows — [[edgesOn]]). Pair-grade traffic
-    * is ids only; vectors
-    * enter once per round via two id-equi-joins for scoring. Each round's
-    * kept graph (N·Degree 16-byte rows) is locally checkpointed — it
-    * appears 6× in the next round's plan, so truncating lineage keeps
-    * analyzer cost linear in rounds instead of exponential (persist alone
-    * does not; see CacheRegistry.checkpointTracked).
+    * self-joined on the shared middle node. The "(2·degree)² per node" bound is
+    * only true if the UNDIRECTED working graph is itself degree-capped:
+    * out-edges are top-`buildDegree` by construction, but REVERSE edges give
+    * hub nodes unbounded in-degree, and 2-hop expansion through a hub is
+    * quadratic in it — the round-7 ×10 run of graft.tools.SfScale @ c6e9ec7
+    * caught exactly this (ratio 10.4 uncapped). So each round caps the
+    * undirected adjacency at 2·buildDegree rows per src (deterministic keep:
+    * lowest dst ids — hubs shed their farthest-id reverse links) BEFORE the
+    * self-join, making the bound real at any corpus size (vs the LSH build's
+    * occupancy-driven O(N²·L/2^planes), which needs the planes dial re-sized as
+    * N grows — [[edgesOn]]). Pair-grade traffic is ids only; vectors enter once
+    * per round via two id-equi-joins for scoring. Each round's kept graph
+    * (N·Degree 16-byte rows) is locally checkpointed — it appears 6× in the
+    * next round's plan, so truncating lineage keeps analyzer cost linear in
+    * rounds instead of exponential (persist alone does not; see
+    * CacheRegistry.checkpointTracked).
     *
     * Fixed iteration count (not convergence-tested) keeps the whole build
     * replayable as [[NndIters]] unrolled SQL CTEs in DuckDB. */
@@ -989,58 +969,6 @@ object Nsw {
 
   def hnswSearch(spark: SparkSession, dir: String): DataFrame =
     hnswSearchOn(spark, dir)
-
-  /** Instrumented decomposition of [[hnswBulkSearch]] — the SfScale ratio
-    * investigation probe (round-10 verdict #5: ann_hnsw_bulk's ×10 ratio
-    * read 12.3 where the other bulk searches sit at 7.8–8.7). Identical
-    * plan, each phase forced (count) and timed so the superlinear term can
-    * be NAMED instead of suspected. Tools-only — not a query. */
-  private[graft] def hnswBulkPhases(
-      spark: SparkSession, dir: String): Seq[(String, Double, Long)] = {
-    val out = Seq.newBuilder[(String, Double, Long)]
-    def timed(label: String)(body: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
-      val df = body
-      val n = df.count()
-      out += ((label, (System.nanoTime() - t0) / 1e9, n))
-      df
-    }
-    val e = vectors(spark, dir)
-    val e1 = e.filter(col("vec_id") % SampleMod === 0)
-    val edges1 = timed("edges1_read")(storedHnswL1Edges(spark, dir))
-    val edges0 = timed("edges0_read")(storedNswEdges(spark, dir))
-    val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"))
-    val seeds1 = q.select(col("query_id"))
-      .crossJoin(e1.filter(col("vec_id") < Entries * SampleMod)
-        .select(col("vec_id").as("node_id")))
-      .filter(col("node_id") =!= col("query_id"))
-    val s1 = timed("seeds1_score")(
-      CacheRegistry.checkpointTracked(bulkScore(e, q, seeds1)))
-    val v1 = timed("layer1_hops")(bulkBeamLoop(e, edges1, q, s1, HopsL1, BeamL1))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("node_id"))
-    val seeds0 = timed("seeds0_window")(CacheRegistry.checkpointTracked(
-      v1.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= Entries)
-        .select(col("query_id"), col("node_id"), col("cos"))))
-    val v0 = timed("layer0_hops")(bulkBeamLoop(e, edges0, q, seeds0, Hops, Beam))
-    timed("rank")(
-      v0.withColumn("rank", row_number().over(w)).filter(col("rank") <= K))
-    out.result()
-  }
-
-  /** Production-dial variant for scale measurement, as [[nswSearchPlanes]]
-    * (same deliberate non-store semantics — each run pays both builds):
-    * both layers' graph builds bucket with `planes` planes per table. The
-    * same delta holds both layers' bucket occupancy at the fixture's level
-    * — layer 1 is a fixed 1/[[SampleMod]] sample, so its occupancy grows by
-    * the same factor as layer 0's. */
-  def hnswSearchPlanes(spark: SparkSession, dir: String, planes: Int): DataFrame = {
-    val e = vectors(spark, dir)
-    hnswWithEdges(e,
-      CacheRegistry.persistTracked(
-        edgesOn(e.filter(col("vec_id") % SampleMod === 0), planes, SampleMod)),
-      CacheRegistry.persistTracked(edgesOn(e, planes)))
-  }
 
   // ------------------------------------------------------------- oracle SQL
   //

@@ -47,32 +47,32 @@ object Pq {
     * exists for, and the broadcast LUT starts growing noticeably. */
   private[graft] val MaxCodes = 256
 
-  /** Subspace-count ceiling: 16 subspaces of 4 dims each — below 4 dims
-    * per subspace the per-subspace geometry carries too little signal for
-    * a codeword to mean anything, and the measured curve (PqDialSweep)
-    * already flattens between 96 and 128 bits. */
+  /** Subspace-count ceiling: 16 subspaces of 4 dims each — below 4 dims per
+    * subspace the per-subspace geometry carries too little signal for a
+    * codeword to mean anything, and the measured curve
+    * (graft.tools.PqDialSweep @ c6e9ec7) already flattens between 96 and 128
+    * bits. */
   private[graft] val MaxM = 16
 
-  /** Size-derived (M, K) code dials — the dial the ×10 recall probe
-    * proved missing (round-10 verdict #2: with M×K pinned at 4×16 the
-    * total code space is 16⁴ ≈ 65 k cells, so at ×10 the corpus
-    * outnumbers the cells and quantization error doubles — pq_adc recall
-    * 0.24 → 0.11), SHAPED by the round-11 sweep (PqDialSweep): growing K
-    * alone is nearly flat (error ∝ K^(−2/d), d=16 — measured 0.067 →
-    * 0.044 at ×10 going K 16→256), while growing the total code BUDGET
-    * through both dials is strongly monotone (×10 recall 0.067 @16 bits
-    * → 0.156 @48 → 0.333 @96 → 0.400 @128). So the corpus doublings past
-    * fixture scale split between the two dials — M doubles on the odd
-    * doublings (capped [[MaxM]]), K on the even ones (capped
-    * [[MaxCodes]]), and once M caps its remaining doublings SPILL into K
-    * (the ×100 sweep measured the spill worth +0.22 recall: 16×128 reads
-    * 0.400, 16×256 reads 0.622 on the 200 k corpus): fixture → 4×16
-    * (16 bits), ×10 → 16×64 (96 bits, recall 3× the pinned-dial base),
-    * ×100 → 16×256 (128 bits). Lands exactly on the pinned 4×16 at every
-    * oracle fixture size (N ≤ 2000), so the hash-gated queries and their
-    * DuckDB mirrors (which unroll M and K at SQL-generation time) replay
-    * unchanged. Training cost scales with N·M·K — the build-side price,
-    * measured in SCALING.md. */
+  /** Size-derived (M, K) code dials — the dial the ×10 recall probe proved
+    * missing (round-10 verdict #2: with M×K pinned at 4×16 the total code space
+    * is 16⁴ ≈ 65 k cells, so at ×10 the corpus outnumbers the cells and
+    * quantization error doubles — pq_adc recall 0.24 → 0.11), SHAPED by the
+    * round-11 sweep (graft.tools.PqDialSweep @ c6e9ec7): growing K alone is
+    * nearly flat (error ∝ K^(−2/d), d=16 — measured 0.067 → 0.044 at ×10 going
+    * K 16→256), while growing the total code BUDGET through both dials is
+    * strongly monotone (×10 recall 0.067 @16 bits → 0.156 @48 → 0.333 @96 →
+    * 0.400 @128). So the corpus doublings past fixture scale split between the
+    * two dials — M doubles on the odd doublings (capped [[MaxM]]), K on the
+    * even ones (capped [[MaxCodes]]), and once M caps its remaining doublings
+    * SPILL into K (the ×100 sweep measured the spill worth +0.22 recall: 16×128
+    * reads 0.400, 16×256 reads 0.622 on the 200 k corpus): fixture → 4×16 (16
+    * bits), ×10 → 16×64 (96 bits, recall 3× the pinned-dial base), ×100 →
+    * 16×256 (128 bits). Lands exactly on the pinned 4×16 at every oracle
+    * fixture size (N ≤ 2000), so the hash-gated queries and their DuckDB
+    * mirrors (which unroll M and K at SQL-generation time) replay unchanged.
+    * Training cost scales with N·M·K — the build-side price, measured in
+    * SCALING.md. */
   private[graft] def sizedDials(n: Long): (Int, Int) = {
     val d = SizingPolicy.doublings(n, SizingPolicy.FixtureMaxN.toDouble)
     val mDoublings = (d + 1) / 2
@@ -167,8 +167,8 @@ object Pq {
 
   /** The ADC lookup table: M·K rows of (query_id, m, code, q·c, ‖c‖², ‖q‖)
     * — tiny, broadcast at every use site. */
-  private[operators] def qlutFor(e: DataFrame, cbs: Seq[Seq[(Int, Array[Double])]],
-      queryLo: Long = 0L): DataFrame = {
+  private[operators] def qlutFor(
+      e: DataFrame, cbs: Seq[Seq[(Int, Array[Double])]]): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     val lut = cbs.zipWithIndex.flatMap { case (cb, m) =>
@@ -176,7 +176,7 @@ object Pq {
     }.toDF("m", "code", "cvec")
       .withColumn("cnorm2", VectorFunctions.dot(col("cvec"), col("cvec")))
     val subDim = cbs.head.head._2.length
-    e.filter(col("vec_id") >= queryLo && col("vec_id") < queryLo + 5)
+    e.filter(col("vec_id") >= 0 && col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         sqrt(VectorFunctions.dot(col("v"), col("v"))).as("qnorm"))
       .crossJoin(lut)
@@ -219,38 +219,12 @@ object Pq {
     * train once per plan, like the IVF training (the harness compares
     * search policies, not training runs). */
   private[operators] def searchOn(
-      e: DataFrame, codebooks: Seq[Seq[(Int, Array[Double])]],
-      queryLo: Long = 0L): DataFrame = {
+      e: DataFrame, codebooks: Seq[Seq[(Int, Array[Double])]]): DataFrame = {
     val codeRows = explodeCodes(withCodes(e, codebooks).drop("v"), Seq("vec_id"),
       codebooks.length)
-    val terms = codeRows.join(broadcast(qlutFor(e, codebooks, queryLo)), Seq("m", "code"))
+    val terms = codeRows.join(broadcast(qlutFor(e, codebooks)), Seq("m", "code"))
       .filter(col("vec_id") =!= col("query_id"))
     adcRank(terms, codebooks.length)
-  }
-
-  /** (M, K) recall@3 sweep over an arbitrary `(vec_id, v)` corpus — the
-    * round-11 measurement instrument behind the sized-codes finding: the
-    * ×10 probe showed K growth alone does NOT recover PQ recall
-    * (quantization error in a d-dim subspace scales as K^(−2/d) — nearly
-    * flat at d=16), so the candidate dial with leverage is the subspace
-    * COUNT. Each dial trains fresh on `e` and scores the standard 5-query
-    * blocks; recall averaged over `queryBlocks`. Probe-only — the
-    * oracle-checked queries keep the pinned 4×16 geometry at fixtures. */
-  private[graft] def dialSweep(e: DataFrame, dials: Seq[(Int, Int)],
-      queryBlocks: Seq[Long] = Seq(0L, 600L, 1200L)): Seq[((Int, Int), Double)] = {
-    dials.map { case (m, k) =>
-      val cbs = trainCodebooksMK(e, m, k)
-      val recalls = queryBlocks.map { lo =>
-        val truth = Similarity.annBruteForceKOn(e, 3, lo)
-          .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-        val nTruth = truth.count()
-        val hits = searchOn(e, cbs, lo)
-          .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
-          .count()
-        hits.toDouble / math.max(nTruth, 1L)
-      }
-      ((m, k), recalls.sum / recalls.length)
-    }
   }
 
   // ------------------------------------------------------------- oracle SQL

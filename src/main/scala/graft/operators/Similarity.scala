@@ -129,12 +129,9 @@ object Similarity {
     annBruteForceK(spark, dir, 5)
 
   /** Exact ground truth over an arbitrary `(vec_id, v)` corpus — feeds the
-    * clustered-corpus recall harness. `queryLo` shifts the 5-query block
-    * (default the canonical ids 0..4) so stored-artifact recall rows can
-    * average several disjoint query sets without rebuilding anything. */
-  private[graft] def annBruteForceKOn(e: DataFrame, k: Int,
-      queryLo: Long = 0L): DataFrame = {
-    val queries = e.filter(col("vec_id") >= queryLo && col("vec_id") < queryLo + 5)
+    * clustered-corpus recall harness. Queries are the canonical ids 0..4. */
+  private[graft] def annBruteForceKOn(e: DataFrame, k: Int): DataFrame = {
+    val queries = e.filter(col("vec_id") >= 0 && col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     val candidates = e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"))
     val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("neighbor_id"))

@@ -668,17 +668,6 @@ object Sketches {
     bloomPruneOn(dim, Tables.ordersParallel(spark, dir))
   }
 
-  /** SfScale probe: the bits ∝ |dim| production dial (standard sizing is
-    * ~10+ bits per key; the pinned 65536 carries the fixture's ~3k keys).
-    * A filter held at fixture size while the dimension grows K× saturates —
-    * fp_rate rises and the prune stops pruning; resizing restores it.
-    * Measured at ×10 in SCALING.md. */
-  def bloomPruneBits(spark: SparkSession, dir: String, bits: Long): DataFrame = {
-    val dim = Tables.customer(spark, dir)
-      .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-    bloomPruneOn(dim, Tables.orders(spark, dir), bits)
-  }
-
   val bloomPruneSql: String =
     s"""WITH dim AS (
        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),

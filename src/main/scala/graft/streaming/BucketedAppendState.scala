@@ -91,18 +91,17 @@ object BucketedAppendState {
   }
 
   /** BYTES-measured bootstrap sizing (round 16 — closes the
-    * [[graft.operators.SizingPolicy.sizedStateBucketsForBytes]] wiring
-    * gap): the bytes dial is the one that matters at scale (DeleteScale's
-    * ×100 replay: the row dial inflated a narrow-row table 4.5× in pure
-    * per-file overhead and would overload a wide-row bucket 1000×), but a
-    * DataFrame's on-disk size is unknowable before its first write — so
-    * maintainers bootstrapped through the row dial. This measures it:
-    * write a bounded probe of the store's first table ONCE, read
-    * bytes-per-row off the probe files, project to `projectedRows`, and
-    * size through the bytes dial — all BEFORE the layout freezes at the
-    * store's first commit. An existing store's recorded layout always
-    * wins (reopen can never resize), and the probe dir is removed on
-    * every path.
+    * [[graft.operators.SizingPolicy.sizedStateBucketsForBytes]] wiring gap):
+    * the bytes dial is the one that matters at scale
+    * (graft.tools.DeleteScale @ c6e9ec7's ×100 replay: the row dial inflated a
+    * narrow-row table 4.5× in pure per-file overhead and would overload a
+    * wide-row bucket 1000×), but a DataFrame's on-disk size is unknowable
+    * before its first write — so maintainers bootstrapped through the row dial.
+    * This measures it: write a bounded probe of the store's first table ONCE,
+    * read bytes-per-row off the probe files, project to `projectedRows`, and
+    * size through the bytes dial — all BEFORE the layout freezes at the store's
+    * first commit. An existing store's recorded layout always wins (reopen can
+    * never resize), and the probe dir is removed on every path.
     *
     * The estimate is a parquet-encoded probe of `probeRows` rows: footer
     * overhead biases small probes slightly UP (more buckets — the safe
@@ -131,23 +130,22 @@ object BucketedAppendState {
     }
 }
 
-/** @param alignDeltaWrites repartition each delta write by bucket so a
-  *   touched bucket's generation lands as ONE file instead of one file
-  *   per shuffle task (round 17 — StateGrowthScale measured the
-  *   unaligned shape at ~16× the file count, with full-state reads
-  *   degrading 2.5→7 s across the gen cycle at 120 commit rounds; the
-  *   cost is one BATCH-sized shuffle per commit, which is the delta
-  *   commit's own size class). Off reproduces the legacy layout.
+/** @param alignDeltaWrites repartition each delta write by bucket so a touched
+  *   bucket's generation lands as ONE file instead of one file per shuffle task
+  *   (round 17 — graft.tools.StateGrowthScale @ c6e9ec7 measured the unaligned
+  *   shape at ~16× the file count, with full-state reads degrading 2.5→7 s
+  *   across the gen cycle at 120 commit rounds; the cost is one BATCH-sized
+  *   shuffle per commit, which is the delta commit's own size class). Off
+  *   reproduces the legacy layout.
   * @param collapseStagger extra per-bucket collapse headroom drawn
-  *   deterministically in [0, stagger] from the bucket id: under a
-  *   UNIFORM touch pattern every bucket's gen list grows in lockstep and
-  *   the maxGens collapse fires for ALL buckets in the SAME commit — a
-  *   corpus-sized stall (StateGrowthScale: rounds 40/80/120 cost
-  *   59/111/174 s while ordinary rounds cost ~5 s). Staggered thresholds
-  *   spread the rewrites across rounds — the classic compaction-stampede
-  *   fix. Read amplification stays bounded by
-  *   maxGensPerBucket + collapseStagger (documented bound; 0 keeps the
-  *   exact legacy contract). */
+  *   deterministically in [0, stagger] from the bucket id: under a UNIFORM
+  *   touch pattern every bucket's gen list grows in lockstep and the maxGens
+  *   collapse fires for ALL buckets in the SAME commit — a corpus-sized stall
+  *   (graft.tools.StateGrowthScale @ c6e9ec7: rounds 40/80/120 cost 59/111/174 s
+  *   while ordinary rounds cost ~5 s). Staggered thresholds spread the rewrites
+  *   across rounds — the classic compaction-stampede fix. Read amplification
+  *   stays bounded by maxGensPerBucket + collapseStagger (documented bound; 0
+  *   keeps the exact legacy contract). */
 final class BucketedAppendState(spark: SparkSession, rootDir: String,
     buckets: Int = 16, keyed: Map[String, String] = Map.empty,
     keepVersions: Int = 3,

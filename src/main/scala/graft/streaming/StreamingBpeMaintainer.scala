@@ -21,12 +21,12 @@ import graft.operators.Curation
   *     [[acuteFertilityFactor]] × the at-train baseline retrains
   *     immediately — an out-of-distribution source switched on.
   *   - '''Chronic''' ([[maybeRetrain]] behind
-  *     [[retrainAtFertilityFactor]]): committed corpus-wide counters
-  *     (words, effective tokens) maintained CHANGE-SIZED — each batch
-  *     adds its own mass measured under the frozen vocab, no corpus
-  *     re-tokenization ever runs in the ingest path. The corpus drifts a
-  *     sub-acute batch at a time; the dial catches what the acute check
-  *     is blind to (the IvfDriftScale lesson).
+  *     [[retrainAtFertilityFactor]]): committed corpus-wide counters (words,
+  *     effective tokens) maintained CHANGE-SIZED — each batch adds its own mass
+  *     measured under the frozen vocab, no corpus re-tokenization ever runs in
+  *     the ingest path. The corpus drifts a sub-acute batch at a time; the dial
+  *     catches what the acute check is blind to (the
+  *     graft.tools.IvfDriftScale @ c6e9ec7 lesson).
   *
   * FERTILITY here is EFFECTIVE tokens per word: known words count their
   * stored merge-sequence length, out-of-vocabulary words count their

@@ -31,14 +31,14 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
   *     leave the graph's geometry stale — the postings maintainer
   *     recomputes a doc's postings for the same reason);
   *   - `delete` → [[StreamingNswIndex.removeBatch]] + the round-14
-  *     [[StreamingNswIndex.repairBatch]] edge repair, so sustained
-  *     takedowns do not erode serve recall (TakedownRecallScale's
-  *     measured cadence) — and the round-15 REBUILD POLICY: when the
-  *     cumulative deleted fraction since the last full build crosses
-  *     `rebuildAtDeletedFraction`, [[StreamingNswIndex.maybeRebuild]]
-  *     retrains over the survivors from inside this same loop, so the
-  *     serve tier's recall floor is a configuration even when every
-  *     takedown arrives through the change feed.
+  *     [[StreamingNswIndex.repairBatch]] edge repair, so sustained takedowns do
+  *     not erode serve recall (graft.tools.TakedownRecallScale @ c6e9ec7's
+  *     measured cadence) — and the round-15 REBUILD POLICY: when the cumulative
+  *     deleted fraction since the last full build crosses
+  *     `rebuildAtDeletedFraction`, [[StreamingNswIndex.maybeRebuild]] retrains
+  *     over the survivors from inside this same loop, so the serve tier's
+  *     recall floor is a configuration even when every takedown arrives through
+  *     the change feed.
   *
   * Exactly-once: versions are derived from the foreachBatch id
   * (4·id+1 remove, 4·id+2 insert, 4·id+3 repair, 4·id+4 policy

@@ -39,15 +39,15 @@ import graft.operators.Nsw
   * maintainer's write shape. The insertion COMPUTE was already
   * batch-sized (the insertion search); now the commit is too.
   */
-/** @param rebuildAtDeletedFraction the REBUILD POLICY dial (round-15,
-  *   verdict r14 #3): when the cumulative fraction of the corpus deleted
-  *   since the last full build crosses this, [[maybeRebuild]] retrains
-  *   the graph over the survivors instead of repairing edges.
-  *   `TakedownRecallScale` measured why a policy must exist: per-batch
-  *   repair holds 0.244 recall@3 at 50 % deletion vs the rebuilt line's
-  *   0.289, and repair alone never recovers it — erosion is bounded only
-  *   by an occasional retrain. The serve tier's recall floor is exactly
-  *   this configuration. */
+/** @param rebuildAtDeletedFraction the REBUILD POLICY dial (round-15, verdict
+  *   r14 #3): when the cumulative fraction of the corpus deleted since the last
+  *   full build crosses this, [[maybeRebuild]] retrains the graph over the
+  *   survivors instead of repairing edges.
+  *   graft.tools.TakedownRecallScale @ c6e9ec7 measured why a policy must exist:
+  *   per-batch repair holds 0.244 recall@3 at 50 % deletion vs the rebuilt
+  *   line's 0.289, and repair alone never recovers it — erosion is bounded only
+  *   by an occasional retrain. The serve tier's recall floor is exactly this
+  *   configuration. */
 class StreamingNswIndex(spark: SparkSession, baseDir: String, initial: DataFrame,
     keepVersions: Int = 3, buckets: Int = 0,
     rebuildAtDeletedFraction: Double = 0.5,
@@ -207,12 +207,12 @@ class StreamingNswIndex(spark: SparkSession, baseDir: String, initial: DataFrame
     finally survivors.unpersist()
   }
 
-  /** EDGE REPAIR after takedowns (round-14 — the round-13 verdict asked
-    * for the measurement, and it came back positive: dangling edges are
-    * harmless for SCORING but each is a wasted beam move, and
-    * `tools/TakedownRecallScale` measured maintained recall@3 collapsing
-    * 0.33 → 0.09 at 50 % cumulative deletion while a fresh rebuild over
-    * the same survivors reads 0.29 — connectivity EROSION, repairable).
+  /** EDGE REPAIR after takedowns (round-14 — the round-13 verdict asked for the
+    * measurement, and it came back positive: dangling edges are harmless for
+    * SCORING but each is a wasted beam move, and
+    * graft.tools.TakedownRecallScale @ c6e9ec7 measured maintained recall@3
+    * collapsing 0.33 → 0.09 at 50 % cumulative deletion while a fresh rebuild
+    * over the same survivors reads 0.29 — connectivity EROSION, repairable).
     *
     * Re-links exactly the takedowns' blast radius: survivors whose
     * adjacency references a vector no longer in the table get their rows

@@ -54,13 +54,13 @@ class StreamingPostingsIndex(spark: SparkSession, tablePath: String,
     keepVersions: Int = 3,
     hooks: Merge.IncHooks = Merge.IncHooks.none) extends Serializable {
 
-  // buckets <= 0 → SIZED: existing stores keep their recorded layout, a
-  // fresh one derives buckets ∝ the POSTINGS row count (the population
-  // that actually fills the buckets — doc count undercounts by the
-  // words-per-doc factor) at the policy's pinned per-bucket occupancy
-  // (round-12 verdict #6 / the PostingsMaintainerScale pinned-vs-sized
-  // control row). One extra postingsOf pass at bootstrap only — the
-  // amortized one-time cost the bootstrap already pays.
+  // buckets <= 0 → SIZED: existing stores keep their recorded layout, a fresh
+  // one derives buckets ∝ the POSTINGS row count (the population that actually
+  // fills the buckets — doc count undercounts by the words-per-doc factor) at
+  // the policy's pinned per-bucket occupancy (round-12 verdict #6 / the
+  // graft.tools.PostingsMaintainerScale @ c6e9ec7 pinned-vs-sized control row).
+  // One extra postingsOf pass at bootstrap only — the amortized one-time cost
+  // the bootstrap already pays.
   private val resolvedBuckets =
     if (buckets > 0) buckets
     else BucketedAppendState.recordedBuckets(spark, stateDir).getOrElse {

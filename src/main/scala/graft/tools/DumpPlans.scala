@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Write `.explain("formatted")` for named queries to files (round-19
   * deliverable: plans/r19/<query>_<tag>.txt). Runs the query builder at
@@ -17,13 +16,7 @@ object DumpPlans {
     val tag = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val registry = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnlyQueries

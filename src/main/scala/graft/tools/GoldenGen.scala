@@ -1,11 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import graft.api.GameService
 object GoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val svc = GameService.forDir(spark, "/root/testdata/sf0.001")
     val out = Map(

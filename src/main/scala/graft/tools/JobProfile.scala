@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level attribution profiler (dev tool, round 18): runs ONE SparkEntry
   * query through the noop sink with a listener recording every Spark job's
@@ -18,14 +17,7 @@ object JobProfile {
     val name = args.headOption.getOrElse(sys.error("usage: JobProfile <query> [sfDir]"))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val warmRuns = args.lift(2).flatMap(_.toIntOption).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries.getOrElse(name,
       graft.SparkEntry.benchOnlyQueries(name))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Steady-state profiler for individual SparkEntry queries:
   * `runMain graft.tools.QueryProfile <query> [iterations] [sfDir]` —
@@ -11,11 +10,7 @@ object QueryProfile {
     val name = args.headOption.getOrElse(sys.error("usage: QueryProfile <query> [n] [sfDir]"))
     val n = args.lift(1).flatMap(_.toIntOption).getOrElse(3)
     val dir = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = graft.SparkEntry.queries(name)
     for (i <- 1 to n) {

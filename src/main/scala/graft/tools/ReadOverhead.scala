@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Microbench (dev tool, round 19): price the fixed driver-side cost of
   * one `spark.read.schema(...).parquet(path)` DataFrame construction +
@@ -14,11 +13,7 @@ import org.apache.spark.sql.SparkSession
 object ReadOverhead {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.flatMap(_.toIntOption).getOrElse(200)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val schema = spark.read.parquet(s"$dir/documents.parquet").schema

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ArrayExpressions, VectorFunctions}
@@ -14,20 +14,14 @@ import graft.functions.{ArrayExpressions, VectorFunctions}
 object ScaleBench {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Sessions.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicate(df: DataFrame, idCol: String, k: Int): DataFrame =
       df.withColumn("rep", explode(sequence(lit(0), lit(k - 1))))
         .withColumn(idCol, col(idCol) + col("rep") * 10000000L)
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(graft.Sessions.cpus)
 
     def time[T](f: => T): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -18,4 +18,18 @@ class BenchSpec extends AnyFunSuite {
     for (r <- 1 to 4)
       assert(!committed.contains(Bench.defaultOutFile(r, subset = true)))
   }
+
+  test("Verify.dump deletes a query's previous output before building it") {
+    // a query that throws while its plan is built must leave no stale
+    // parquet for the oracle compare to pass
+    val name = "ann_brute_force_topk"
+    assert(SparkEntry.queries.contains(name))
+    val out = java.nio.file.Files.createTempDirectory("verify-out")
+    val stale = out.resolve(name).resolve("x.parquet")
+    java.nio.file.Files.createDirectories(stale.getParent)
+    java.nio.file.Files.writeString(stale, "stale")
+    Verify.dump(SparkTestSession.spark, out.resolve("no-such-sf").toString,
+      out.toString, only = Some(Set(name)))
+    assert(!java.nio.file.Files.exists(out.resolve(name)))
+  }
 }

@@ -329,8 +329,9 @@ class BucketedAppendStateSpec extends AnyFunSuite {
     val rootW = Files.createTempDirectory("bas-sized-w").toString
     val bN = BucketedAppendState.measuredBuckets(spark, rootN, narrow, n, target)
     val bW = BucketedAppendState.measuredBuckets(spark, rootW, wide, n, target)
-    // same row count, ~100× the bytes: the bytes dial must see it — the
-    // row dial structurally cannot (this is DeleteScale's ×100 lesson)
+    // same row count, ~100× the bytes: the bytes dial must see it — the row
+    // dial structurally cannot (the ×100 lesson of
+    // graft.tools.DeleteScale @ c6e9ec7)
     assert(bW > bN, s"wide rows must size to more buckets: narrow=$bN wide=$bW")
     assert(bN >= 16, "floor holds")
     // the probe cleans up after itself on both paths
@@ -364,10 +365,10 @@ class BucketedAppendStateSpec extends AnyFunSuite {
       keyed = Map("vectors" -> "vec_id"), keepVersions = 32,
       maxGensPerBucket = 2, collapseStagger = 3)
     st.commitFull(0L, Map("vectors" -> vecs(0L until 400L)))
-    // ALIGNED delta (round 17 default): each touched bucket's new
-    // generation is exactly ONE file, not one per shuffle task — the
-    // StateGrowthScale finding (unaligned layout carried ~16× the files
-    // and full reads degraded ~3× across the gen cycle)
+    // ALIGNED delta (round 17 default): each touched bucket's new generation is
+    // exactly ONE file, not one per shuffle task — the
+    // graft.tools.StateGrowthScale @ c6e9ec7 finding (unaligned layout carried
+    // ~16× the files and full reads degraded ~3× across the gen cycle)
     st.commitAppend(1L, Map("vectors" -> vecs(1000L until 1100L)))
     val bucketDirs = new java.io.File(s"$root/vectors").listFiles
       .filter(_.getName.startsWith("bucket="))

@@ -83,4 +83,39 @@ class DocsSpec extends AnyFunSuite {
     assert(scaling.contains("0.93"), "cited nprobe=2 / multitable recall")
     assert(scaling.contains("0.87"), "cited nprobe=1 recall")
   }
+
+  private def scalaSources(root: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+    finally walk.close()
+  }
+
+  test("one session factory: every SparkSession is configured in Sessions.scala") {
+    // 45 hand-copied builder blocks with disagreeing settings preceded
+    // graft.Sessions; any new one must chain onto Sessions.builder instead
+    val needle = java.util.regex.Pattern.quote("SparkSession" + ".builder").r
+    val sites = scalaSources("src").flatMap { p =>
+      needle.findAllMatchIn(read(p.toString)).map(_ => p.getFileName.toString)
+    }
+    assert(sites === Seq("Sessions.scala"))
+  }
+
+  test("README's tools/ paragraph names every main under graft.tools") {
+    // a one-shot study main that nothing runs must not land unannounced
+    val readme = read("README.md").linesIterator.toSeq
+    val paragraph = readme.dropWhile(!_.startsWith("  tools/"))
+    assert(paragraph.nonEmpty, "README has no tools/ paragraph")
+    val text = (paragraph.head +: paragraph.tail.takeWhile(_.startsWith("   "))).mkString("\n")
+    val mains = scalaSources("src/main/scala/graft/tools").flatMap { p =>
+      val src = read(p.toString)
+      val objects = "(?m)^object (\\w+)".r.findAllMatchIn(src)
+        .map(m => (m.start, m.group(1))).toSeq
+      "def main\\(".r.findAllMatchIn(src).map(m => objects.filter(_._1 < m.start).last._2)
+    }.distinct
+    assert(mains.nonEmpty)
+    val missing = mains.filterNot(m => s"\\b$m\\b".r.findFirstIn(text).isDefined)
+    assert(missing.isEmpty,
+      s"tools mains missing from README's tools/ paragraph: ${missing.mkString(", ")}")
+  }
 }

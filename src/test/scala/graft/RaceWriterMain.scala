@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Child process of MergeSpec's two-JVM commit-race tests (round-15,
@@ -21,12 +20,8 @@ object RaceWriterMain {
     val goFile = java.nio.file.Paths.get(args(1))
     val doneFile = java.nio.file.Paths.get(args(2))
     val op = if (args.length > 3) args(3) else "upsert"
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = Sessions.builder(cpus = 2)
       .appName("graft-race-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

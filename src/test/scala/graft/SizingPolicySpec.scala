@@ -47,9 +47,10 @@ class SizingPolicySpec extends AnyFunSuite {
     assert(Nsw.sizedPlanes(20000L) === 8)
     assert(Nsw.sizedHops(20000L) === 7)
     assert(Nsw.sizedBeam(20000L) === 32)
-    // probeCells is the quarter-scan point of the sized quantizer (the
-    // CellCountScale-measured serve default: recall 0.84/0.91 at 1/4 scan
-    // on the ×10/×100 replicas, matching ivf_nprobe at the same fraction)
+    // probeCells is the quarter-scan point of the sized quantizer (the serve
+    // default measured by graft.tools.CellCountScale @ c6e9ec7: recall 0.84/0.91
+    // at 1/4 scan on the ×10/×100 replicas, matching ivf_nprobe at the same
+    // fraction)
     assert(Nsw.sizedProbeCells(20000L) === 8)
     assert(Nsw.sizedProbeCells(200000L) === 32)
     // cell count grows K ∝ √N: doubling per two corpus doublings
@@ -61,8 +62,8 @@ class SizingPolicySpec extends AnyFunSuite {
     assert(Pq.sizedDials(200000L) === ((16, 256)))
     // the caps: 16 subspaces of 4 dims, one-byte codes
     assert(Pq.sizedDials(2000000000L) === ((Pq.MaxM, Pq.MaxCodes)))
-    // maintainer-state buckets: ∝ N at pinned per-bucket occupancy
-    // (~128 rows) — the PostingsMaintainerScale bytes-axis dial
+    // maintainer-state buckets: ∝ N at pinned per-bucket occupancy (~128 rows)
+    // — the graft.tools.PostingsMaintainerScale @ c6e9ec7 bytes-axis dial
     assert(SizingPolicy.sizedStateBuckets(20000L) === 256)
     assert(SizingPolicy.sizedStateBuckets(200000L) === 2048)
     // ADVICE r13 #5: a 100 TB-scale population (n ≳ 2^38) must hit the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Child process of BucketedAppendStateSpec's two-JVM race (round-15 —
   * Merge got its real fork this round; the state store's claims are the
   * same ManifestIo primitives, and this closes the loop for the
@@ -13,12 +11,8 @@ object StateRaceWriterMain {
     val root = args(0)
     val goFile = java.nio.file.Paths.get(args(1))
     val doneFile = java.nio.file.Paths.get(args(2))
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = Sessions.builder(cpus = 2)
       .appName("graft-state-race-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

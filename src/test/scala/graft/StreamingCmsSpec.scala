@@ -20,9 +20,10 @@ class StreamingCmsSpec extends AnyFunSuite {
   test("cms cells stream in complete mode, state sketch-bounded, batch-identical") {
     val drop = Files.createTempDirectory("graft-scms-in").toString
     val ckpt = Files.createTempDirectory("graft-scms-ckpt").toString
-    // per-doc token suffix (the SfScale idiom): the fixture's natural
-    // vocabulary is tiny (~31 tokens), so widen it past the sketch size —
-    // the state bound below is only meaningful if vocabulary >> cells
+    // per-doc token suffix (the graft.tools.SfScale @ c6e9ec7 idiom): the
+    // fixture's natural vocabulary is tiny (~31 tokens), so widen it past the
+    // sketch size — the state bound below is only meaningful if vocabulary >>
+    // cells
     val docs = Tables.documents(spark, SparkTestSession.Sf0001)
       .select(col("doc_id"),
         array_join(transform(split(col("text"), " "),
