@@ -39,12 +39,4 @@ object OracleParity {
     // reference's zero-vector cosine) explicitly.
     when(isnan(c), c).otherwise(floor(c * p + 0.5) / lit(p))
   }
-
-  /** Round a float score for output per the reference's API rounding
-    * (2 dp — reference: src/endpoints/search.get.ts:202). */
-  def score2(c: Column): Column = pround(c, 2)
-
-  /** 4 dp — the reference's CLI display rounding
-    * (src/lib/commands/findSimilarGames.ts:65). */
-  def score4(c: Column): Column = pround(c, 4)
 }

@@ -58,13 +58,6 @@ object VectorFunctions {
       coalesce(playerCount.cast("double"), lit(0.0)) / graft.model.Constants.PopularityDivisor) +
       lit(graft.model.Constants.PopularityFloor)
 
-  /** L2 (Euclidean) distance — used by the IVF/LSH approximate paths. */
-  def l2Distance(a: Column, b: Column): Column = {
-    val ad = asDouble(a)
-    val bd = asDouble(b)
-    sqrt(aggregate(zip_with(ad, bd, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v))
-  }
-
   // ------------------------- deterministic random-projection LSH planes
   // Shared by ann_lsh_buckets and the embedding near-dup candidate
   // generator. Integer arithmetic only, so Spark and DuckDB build
@@ -105,9 +98,6 @@ object VectorFunctions {
     (0 until numPlanes)
       .map(j => when(dot(v, hyperplaneT(mult, j)) > 0, lit(1 << j)).otherwise(lit(0)))
       .reduce(_ + _)
-
-  /** DuckDB mirror of [[hyperplane]]. */
-  def hyperplaneSql(j: Int): String = hyperplaneTSql(53, j)
 
   /** DuckDB mirror of [[hyperplaneT]]. */
   def hyperplaneTSql(mult: Int, j: Int): String =

@@ -3,8 +3,7 @@ package graft.model
 import org.apache.spark.sql.types._
 
 /** Core data model of the engine, derived from the reference's `Game`
-  * record (reference: src/types.d.ts:59-66) and its embeddings sidecar
-  * (reference: src/lib/commands/generateEmbeddings.ts:17-21).
+  * record (reference: src/types.d.ts:59-66).
   *
   * The reference keeps a tri-state `description` (absent = never fetched,
   * null = fetched-and-blank, string = present — reference:
@@ -12,17 +11,6 @@ import org.apache.spark.sql.types._
   * the first two states, so the engine carries an explicit
   * `descriptionFetched` flag when fidelity matters (see QualityOps).
   */
-final case class Game(
-    universeId: Long,
-    rootPlaceId: Long,
-    name: String,
-    description: Option[String],
-    gameplayDescription: Option[String],
-    playerCount: Option[Long]
-)
-
-final case class Embedding(universeId: Long, embedding: Array[Float])
-
 object Schemas {
   /** games.json-compatible schema (reference: src/types.d.ts:59-66). */
   val game: StructType = StructType(Seq(
@@ -33,31 +21,12 @@ object Schemas {
     StructField("gameplayDescription", StringType, nullable = true),
     StructField("playerCount", LongType, nullable = true)
   ))
-
-  /** embeddings.json ingest shape: a single JSON object mapping stringified
-    * universeId -> float vector (reference: generateEmbeddings.ts:17-21). */
-  val embeddingsMap: StructType = StructType(Seq(
-    StructField("embeddings", MapType(StringType, ArrayType(DoubleType)), nullable = false)
-  ))
-
-  /** LLM structured-output schema (reference: prompts/localAnalysis.json:3-47). */
-  val llmAnalysis: StructType = StructType(Seq(
-    StructField("gameplaySummary", StringType, nullable = false),
-    StructField("genreTags", ArrayType(StringType), nullable = false),
-    StructField("gameFeatures", ArrayType(StringType), nullable = false)
-  ))
 }
 
 /** Every quantitative constant the reference defines (BASELINE.md). */
 object Constants {
-  // Scoring bands (reference: src/endpoints/search.get.ts:113-188)
-  val TitleBase = 100.0
-  val TitleExactBonus = 50.0
-  val TitlePrefixBonus = 25.0
-  val DescriptionBase = 50.0
-  val DescriptionWordWeight = 20.0
-  val GameplayBase = 25.0
-  val GameplayWordWeight = 15.0
+  // The scoring bands (reference: src/endpoints/search.get.ts:113-188)
+  // are literals in TextSearch and its oracle SQL; BASELINE.md lists them.
 
   // Popularity factor min(0.2, playerCount/500) + 0.8 ∈ [0.8, 1.0]
   // (reference: src/endpoints/search.get.ts:120-121)

@@ -533,7 +533,6 @@ object Curation {
   // ---------------------------------------------------------------------
 
   private val SpanStartMod = 20L
-  private val SpanLen = 3
 
   /** Span-corruption denoising pairs [Raffel et al., JMLR 2020, §3.1.4 —
     * the T5 pretraining objective; UL2's R-denoiser is the same shape]:
@@ -541,7 +540,7 @@ object Curation {
     * replaces each masked span with one sentinel and the target lists each
     * sentinel followed by the span's tokens. Randomness is HASH-DERIVED —
     * a position p starts a span iff md5_32(doc_id:p) ≡ 0 (mod
-    * [[SpanStartMod]]), and a span covers [[SpanLen]] positions — so the
+    * [[SpanStartMod]]), and a span covers 3 positions — so the
     * corruption is deterministic per (doc, position): ~5% starts × 3-token
     * spans ≈ the 15% corruption rate T5 uses, with no RNG state to
     * coordinate across executors (the property that matters at 100 TB:
@@ -549,7 +548,7 @@ object Curation {
     *
     * Everything is IN-ARRAY per document — masked flags, span starts, and
     * both output sequences are `transform`/`flatten` over the token array,
-    * because span membership at p only looks back [[SpanLen]]−1 positions
+    * because span membership at p only looks back 2 positions
     * of pure position arithmetic. ZERO shuffles (the only exchange is the
     * output sort): this runs at parquet-scan speed like the `flt_*`
     * battery. Both sequences are witnessed by 32-bit md5 fingerprints,
@@ -1183,8 +1182,9 @@ object Curation {
   private def bpeVocab0(spark: SparkSession, dir: String): DataFrame =
     bpeVocab0Of(Tables.documentsParallel(spark, dir))
 
-  /** Frame-input face of [[bpeVocab0]] (round 17 — the streaming BPE
-    * maintainer trains on its own stored corpus, not a fixture dir). */
+  /** Frame-input face of [[bpeVocab0]] (round 17 — the BPE maintainer
+    * graft.streaming.StreamingBpeMaintainer @ 134fd08 trained on its own stored
+    * corpus, not a fixture dir). */
   private[graft] def bpeVocab0Of(docs: DataFrame): DataFrame =
     docs
       .select(explode(split(lower(col("text")), "\\s+")).as("word"))
@@ -1238,10 +1238,9 @@ object Curation {
 
   /** The same training loop from an arbitrary char-level vocab frame
     * (round 17 — the retrain path of
-    * [[graft.streaming.StreamingBpeMaintainer]] feeds its stored corpus
+    * graft.streaming.StreamingBpeMaintainer @ 134fd08 fed its stored corpus
     * here). */
-  private[graft] def bpeBuildStepsOn(spark: SparkSession, vocab0: DataFrame,
-      maxMerges: Int = BpeMerges)
+  private[graft] def bpeBuildStepsOn(spark: SparkSession, vocab0: DataFrame)
       : (Seq[(Int, String, String, Long, Long)], DataFrame) = {
     var vocab = graft.tools.CacheRegistry.persistTracked(vocab0)
     val totalFreq = vocab.agg(sum(col("freq"))).collect()(0).getLong(0)
@@ -1249,7 +1248,7 @@ object Curation {
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long, Long)]
     var i = 1
     var exhausted = false
-    while (i <= maxMerges && !exhausted) {
+    while (i <= BpeMerges && !exhausted) {
       bpePairAgg(vocab) match {
         case None => exhausted = true // every word fully merged (round 17)
         case Some((pair, c, mass)) =>

@@ -272,20 +272,12 @@ object Dedup {
 
   // ---------------------------------------------------------- minhash+LSH
 
-  /** doc_id + sorted distinct md5-hashed 3-word shingle set, built by the
-    * fused [[graft.functions.HashedWordNGrams]] kernel — one primitive pass
-    * per document instead of five interpreted array transforms, and an
-    * 8-byte hash per shingle on the wire instead of a ~20-byte string. */
-  /** The dedup tokenization over an arbitrary `(doc_id, text)` frame —
-    * the same `split(lower(text), "\s+")` the corpus-tokens artifact
-    * stores. Used by the streaming crawl-admission maintainer
-    * ([[graft.streaming.StreamingIncrementalDedup]]) to shingle each
-    * micro-batch through the SAME definitions as the batch query. */
-  private[graft] def toksOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-
-  /** Shingle projection over an arbitrary `(doc_id, toks)` frame — shared
-    * by the whole-corpus [[shingled]] and the incremental path's base/delta
+  /** doc_id + sorted distinct md5-hashed 3-word shingle set over an
+    * arbitrary `(doc_id, toks)` frame, built by the fused
+    * [[graft.functions.HashedWordNGrams]] kernel — one primitive pass per
+    * document instead of five interpreted array transforms, and an 8-byte
+    * hash per shingle on the wire instead of a ~20-byte string. Shared by
+    * the whole-corpus [[shingled]] and the incremental path's base/delta
     * splits. */
   private[graft] def shingledOf(toks: DataFrame): DataFrame =
     toks.select(
@@ -373,8 +365,7 @@ object Dedup {
     * The floor is the fixture-pinned literal the oracle SQL unrolls — the
     * SIZED form every Spark-side consumer actually reads is
     * [[deltaIdFloor]], which equals this at every oracle fixture. The core
-    * ([[incrementalVerdictFrames]]) carries no floor at all — the
-    * streaming maintainer splits base/delta by state membership, not id. */
+    * ([[incrementalVerdictFrames]]) carries no floor at all. */
   private[graft] val DeltaIdFloor = 100000L
 
   /** The base/delta id floor for `dir`'s corpus (round-11 verdict #4 —
@@ -453,11 +444,10 @@ object Dedup {
 
   /** The frames-based incremental-dedup core: base band signatures + base
     * shingle sets + a delta batch's shingle sets → one verdict row per
-    * delta doc. Shared by the batch query above (stored artifact + fixture
-    * split) and the streaming crawl-admission maintainer
-    * ([[graft.streaming.StreamingIncrementalDedup]]), which passes its
-    * VersionedState tables — one pipeline, two serve tiers, the postings
-    * pattern. Base/in-batch attribution travels WITH the candidate (which
+    * delta doc, fed by the batch query above (stored artifact + fixture
+    * split; the crawl-admission maintainer
+    * graft.streaming.StreamingIncrementalDedup @ 134fd08 passed its state
+    * tables). Base/in-batch attribution travels WITH the candidate (which
     * generator produced it), so the core never assumes anything about id
     * ranges.
     *
@@ -467,8 +457,7 @@ object Dedup {
     * does not push a semi-join under a projection, so a pre-shingled
     * corpus frame would compute every base doc's shingles before the
     * filter (measured: the ×10 replay's verify stage re-shingled 100% of
-    * the base). The batch query prunes the token fetch; the streaming
-    * maintainer semi-joins its STORED shingle table.
+    * the base). The batch query prunes the token fetch.
     *
     * The delta frame feeds three plan branches (banding, both verify
     * sides): callers persist it for the query's duration and own the

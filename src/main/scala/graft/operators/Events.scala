@@ -13,7 +13,7 @@ import graft.functions.OracleParity._
   * pipeline ops: tumbling-window aggregation, gap-based sessionization, and
   * JSON property extraction (F16). Each is written so the SAME dataframe
   * code runs under Structured Streaming (see graft.streaming.EventsStream:
-  * the windowed aggregation is reused verbatim with `readStream` +
+  * the windowed aggregation is reused verbatim over a streaming source +
   * watermark); here they run in batch mode and are oracle-checked.
   *
   * Scale: window aggregation shuffles once on (window, event_type) with

@@ -14,8 +14,7 @@ import graft.tools.{CacheRegistry, IndexStore}
   * left `ann_nsw_nnd_search` carrying a 13.8 s graph build.
   *
   * Each `index_build_*` query (1) REBUILDS its artifact from the corpus and
-  * persists it via [[graft.tools.IndexStore]] (versioned parquet — the
-  * batch analogue of the streaming indexes' VersionedState), (2) primes the
+  * persists it via [[graft.tools.IndexStore]] (versioned parquet), (2) primes the
   * in-memory shared handle the serve queries read, and (3) returns a small
   * oracle-checked SUMMARY of the artifact (edge/source counts for graphs,
   * per-centroid norms for quantizers). The DuckDB oracle rebuilds the same

@@ -36,10 +36,6 @@ object IvfKMeans {
 
   private val K = 8
 
-  /** Cell count, for operators that partition work by the coarse
-    * quantizer (the cell-local graph build). */
-  private[operators] def numCells: Int = K
-
   /** Size-derived cell count (round-11 verdict #3): the fixture pins
     * K=[[K]], but cells partition the corpus, so with K pinned every
     * serve-path term carrying N/K (the single-cell scan, nprobe's

@@ -106,15 +106,6 @@ object Jobs {
        |ORDER BY created_at DESC, id
        |LIMIT 50 OFFSET 10""".stripMargin
 
-  /** Spark-side retention analog of the reference's 30-day sweep
-    * (jobManager.ts:209-216: DELETE WHERE created_at <
-    * datetime('now', '-N days')): keep rows at or after the cutoff. A pure
-    * row-local filter — at table scale it reaches the parquet scan as a
-    * pushed predicate, so a partition-pruned layout (e.g. files laid out by
-    * created_at date) never reads the expired data at all. */
-  def retainRecent(jobsDf: DataFrame, olderThanDays: Int, now: java.time.Instant): DataFrame =
-    jobsDf.filter(col("created_at") >= lit(cutoffTs(olderThanDays, now)))
-
   private def cutoffTs(olderThanDays: Int, now: java.time.Instant): java.sql.Timestamp =
     java.sql.Timestamp.from(now.minus(java.time.Duration.ofDays(olderThanDays.toLong)))
 

@@ -43,8 +43,7 @@ trait CommitCoordinator {
 }
 
 /** The shared atomic-commit primitive for every manifest-committed store
-  * in the system (the lake — [[Merge]] — and the maintainer state stores,
-  * [[graft.streaming.BucketedPostingsState]] /
+  * in the system (the lake — [[Merge]] — and the bucketed state store
   * [[graft.streaming.BucketedAppendState]]): write the body to a
   * uniquely-named temp file, then claim the final name PUT-IF-ABSENT.
   *

@@ -536,7 +536,7 @@ object Merge {
     *     (MergeSpec pins both sides);
     *   - CDC: [[readChanges]] across a delete version emits `op = delete`
     *     rows with null post-images and (under `withPreimage`) full
-    *     preimages — what the maintainer tier needs to cascade the
+    *     preimages — what a feed consumer needs to cascade the
     *     takedown with zero state scans;
     *   - IVM: [[ivmDeltaAgg]] subtracts the deleted rows' contribution
     *     (−1 row, −f(pre)) from maintained views.
@@ -2154,24 +2154,6 @@ object Merge {
       val parts = l.split(','); parts(0).toInt -> parts(1).toInt
     }.toMap
 
-  /** The retention a writer's sweep will ACTUALLY enforce on `tablePath`:
-    * its own `retainVersions`, clamped by the table's persisted
-    * takedown-grace policy (round 14 — a writer coordinating drain lag
-    * with retention, like StreamingChangeFeed's backpressure guard, must
-    * budget against this, not its own dial: a once-persisted grace
-    * silently shrinks every later sweep, and a guard using the
-    * un-clamped value would let undrained versions expire and wedge the
-    * feed). */
-  def effectiveRetention(spark: SparkSession, tablePath: String,
-      retainVersions: Int): Int = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fsys = fs(spark, table)
-    val (version, _) = readManifest(fsys, table)
-    readMetaAt(fsys, table, version).takedownGrace
-      .fold(retainVersions)(g =>
-        math.min(retainVersions.toLong, g.toLong + 1L).toInt)
-  }
-
   /** The versions of `tablePath` that are still time-travel-readable
     * (bounded by the writer's `retainVersions`). */
   def tableVersions(spark: SparkSession, tablePath: String): Seq[Int] = {
@@ -2322,7 +2304,7 @@ object Merge {
       .reduce(_ || _)
     // FULL outer: a key present old-side only is a DELETE — null
     // post-image columns, preimages carry the removed row (Delta CDF's
-    // delete rows; what lets the maintainer tier cascade a takedown)
+    // delete rows; what lets a feed consumer cascade a takedown)
     n.join(o, col(s"n.$key") === col(s"o.$key"), "full_outer")
       .filter(col(s"o.$key").isNull || col(s"n.$key").isNull || differs)
       .select(outCols(coalesce(col(s"n.$key"), col(s"o.$key")),
@@ -2573,9 +2555,7 @@ object Merge {
       count(lit(1)).as("n_rows"),
       sum(coalesce(col("playerCount"), lit(0L))).as("total_pc"))
 
-  /** Per-shard deltas from a preimage feed — the SAME expression tree the
-    * streaming twin (StreamingIvmView) runs in complete mode, so batch
-    * refresh ≡ live maintenance by construction. Round 13: the −f(pre)
+  /** Per-shard deltas from a preimage feed. Round 13: the −f(pre)
     * DELETE term — a delete row subtracts one from the count, and its
     * null post-image already contributes 0 to the post sum while its
     * preimage is subtracted, so the sum term needs no branch. */
@@ -2605,8 +2585,7 @@ object Merge {
       max(col("playerCount")).as("mx_pc"),
       min(col("playerCount")).as("mn_pc"))
 
-  /** Per-shard candidates and evictions from one preimage feed — the
-    * SAME expression tree the streaming twin runs in complete mode.
+  /** Per-shard candidates and evictions from one preimage feed.
     * `cand_*`: extrema over surviving post-images (inserts + update
     * posts); `evict_*`: extrema over departed preimages (deletes +
     * update pres). A cumulative (multi-version) feed is handled by the
@@ -2820,7 +2799,7 @@ object Merge {
   /** `j1_merge_changes_delete`: the CDC-covers-deletes gate. Reads the
     * change feed across the delete version — every deleted key must
     * surface as `op = delete` with NULL post-image columns and its full
-    * preimage (what the maintainer cascade consumes) — and hash-compares
+    * preimage (what a takedown cascade consumes) — and hash-compares
     * it against the oracle's filtered pre-delete state. */
   def mergeChangesDelete(spark: SparkSession, dir: String): DataFrame = {
     val tablePath = ensureDeleteHistoryTable(spark, dir)

@@ -170,9 +170,7 @@ object Nsw {
   private[graft] def knnEdgesOn(e: DataFrame): DataFrame =
     knnEdgesOn(e, Similarity.TablePlanes)
 
-  /** The directed k-NN half of the build (before the finishing overlay) —
-    * also the state [[graft.streaming.StreamingNswIndex]] maintains
-    * incrementally. */
+  /** The directed k-NN half of the build (before the finishing overlay). */
   private[graft] def knnEdgesOn(e: DataFrame, planes: Int): DataFrame = {
     // all 4 tables' buckets in one codegen kernel pass per vector
     val tb = graft.functions.VectorFunctions.hyperplaneBucketsT(
@@ -604,90 +602,19 @@ object Nsw {
     * NN-descent build. Identical expansion/tie-break semantics to the
     * per-batch loop, replayed in DuckDB by the same unrolled CTEs with the
     * query set widened to the full corpus. */
-  private[graft] def bulkSearchWithEdges(e: DataFrame, edges: DataFrame): DataFrame =
-    serveTopK(e, edges, e.select(col("vec_id").as("query_id"), col("v").as("qv")))
-      .orderBy(col("query_id"), col("rank"))
-
-  /** Top-[[K]] serve core for an ARBITRARY query frame `q(query_id, qv)` —
-    * the request-batch shape of [[bulkSearchWithEdges]], shared with the
-    * streaming serve path ([[graft.streaming.NswIndexServer]]): query
-    * vectors need not be corpus members, and each request batch costs one
-    * bounded beam sweep over the served edge table. */
-  private[graft] def serveTopK(e: DataFrame, edges: DataFrame, q: DataFrame): DataFrame = {
-    val visited = bulkVisited(e, edges, q)
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("node_id"))
-    visited.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("node_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), pround(col("cos"), 4).as("cosine"))
-  }
-
-  /** [[serveTopK]] with IVF-ROUTED query-nearest seeding, entirely in
-    * DataFrames — the request-batch twin of [[searchWithRoutedEntries]]
-    * (which routes driver-side at Q ≤ 5): route every query of `q` through
-    * the broadcast centroid table (same zero-norm guard and
-    * lowest-cluster tiebreak as the driver arithmetic), seed each
-    * (query, probed cell) with the cell's [[Entries]] members nearest the
-    * query (same cosine + vec_id tiebreak, self excluded before ranking),
-    * then the shared bulk beam. Query vectors need NOT be corpus members;
-    * for corpus-member queries the output is row-identical to the batch
-    * routed search (NswIndexServerSpec pins it). `assigned` is the served
-    * corpus with its cluster column — computed once per index version by
-    * the caller, NOT per request batch. */
-  private[graft] def routedServeTopK(
-      e: DataFrame, edges: DataFrame, q: DataFrame,
-      centroids: Seq[(Int, Array[Double])], assigned: DataFrame,
-      hops: Int = Hops, beam: Int = Beam,
-      probeCells: Int = RouteProbeCells): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val cents = centroids.map { case (c, cv) => (c, cv.toSeq) }
-      .toDF("cluster", "cv")
-    val qn = graft.functions.VectorFunctions.dot(col("qv"), col("qv"))
-    val cn = graft.functions.VectorFunctions.dot(col("cv"), col("cv"))
-    val routeW = Window.partitionBy(col("query_id"))
-      .orderBy(desc("ccos"), col("cluster"))
-    val routes = q.crossJoin(broadcast(cents))
-      .withColumn("ccos", when(qn === 0.0 || cn === 0.0, 0.0)
-        .otherwise(graft.functions.VectorFunctions.dot(col("qv"), col("cv"))
-          / (sqrt(qn) * sqrt(cn))))
-      .withColumn("rn", row_number().over(routeW))
-      .filter(col("rn") <= probeCells)
-      .select(col("query_id"), col("cluster"))
-    val seedW = Window.partitionBy(col("query_id"), col("cluster"))
-      .orderBy(desc("cos"), col("vec_id"))
-    val seeds = assigned.join(broadcast(routes), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos", cosineSimilarity(col("v"), col("qv")))
-      .withColumn("srn", row_number().over(seedW))
-      .filter(col("srn") <= Entries)
-      .select(col("query_id"), col("vec_id").as("node_id"), col("cos"))
-    val visited = bulkBeamLoop(e, edges, q,
-      CacheRegistry.checkpointTracked(seeds), hops, beam)
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("node_id"))
-    visited.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= K)
-      .select(col("query_id"), col("node_id").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), pround(col("cos"), 4).as("cosine"))
-  }
-
-  /** The DataFrame-frontier beam core: visited `(query_id, node_id, cos)`
-    * for an arbitrary query frame `q(query_id, qv)` — the query vectors
-    * need NOT be corpus members (streaming insertion searches the current
-    * graph for vectors that are about to join it). Seeds are the fixed
-    * entry nodes of `e`. */
-  /** `entryCap` bounds the fixed entry-node id range — [[Entries]] for the
-    * full corpus, Entries·[[SampleMod]] when `e` is the layer-1 sample
-    * (whose ids are all multiples of SampleMod, exactly as in
-    * [[hnswSearchOn]]'s layer-1 seeding). */
-  private[graft] def bulkVisited(e: DataFrame, edges: DataFrame, q: DataFrame,
-      hops: Int = Hops, beam: Int = Beam, entryCap: Int = Entries): DataFrame = {
+  private[graft] def bulkSearchWithEdges(e: DataFrame, edges: DataFrame): DataFrame = {
+    val q = e.select(col("vec_id").as("query_id"), col("v").as("qv"))
     val seeds = q.select(col("query_id"))
-      .crossJoin(e.filter(col("vec_id") < entryCap).select(col("vec_id").as("node_id")))
+      .crossJoin(e.filter(col("vec_id") < Entries).select(col("vec_id").as("node_id")))
       .filter(col("node_id") =!= col("query_id"))
-    bulkBeamLoop(e, edges, q,
-      CacheRegistry.checkpointTracked(bulkScore(e, q, seeds)), hops, beam)
+    val visited = bulkBeamLoop(e, edges, q,
+      CacheRegistry.checkpointTracked(bulkScore(e, q, seeds)), Hops, Beam)
+    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("node_id"))
+    visited.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= K)
+      .select(col("query_id"), col("node_id").as("neighbor_id"),
+        col("rank").cast("long").as("rank"), pround(col("cos"), 4).as("cosine"))
+      .orderBy(col("query_id"), col("rank"))
   }
 
   private def bulkScore(e: DataFrame, q: DataFrame, ids: DataFrame): DataFrame =
@@ -716,46 +643,6 @@ object Nsw {
         visited.unionByName(bulkScore(e, q, fresh)))
     }
     visited
-  }
-
-  /** NSW INSERTION (Malkov et al. 2014 §4: insert = search, then connect):
-    * find each incoming vector's top-[[Degree]] neighbors by beam-searching
-    * the CURRENT graph, and return the new directed k-NN edges. The
-    * serve-time [[symmetrizeWithLongLinks]] overlay supplies the reverse
-    * edges (old nodes gain links TO new ones) and re-derives the
-    * small-world links over the grown id range — so the maintained state
-    * is only the directed k-NN table, exactly the shape the batch build
-    * produces. Used by [[graft.streaming.StreamingNswIndex]]. */
-  /** Insertion searches WIDER than serving (the NSW paper's ef > k during
-    * construction): a node links permanently to what its insertion beam
-    * found, so under-searching at insert time bakes weak edges into the
-    * index, while serving can always re-search. */
-  private[operators] val InsertHops = Hops + 1
-  private[operators] val InsertBeam = Beam * 2
-
-  private[graft] def insertKnn(e: DataFrame, edges: DataFrame, batch: DataFrame,
-      entryCap: Int = Entries): DataFrame = {
-    val visited = bulkVisited(e, edges,
-      batch.select(col("vec_id").as("query_id"), col("v").as("qv")),
-      hops = InsertHops, beam = InsertBeam, entryCap = entryCap)
-    // batch-INTERNAL candidates: two near-duplicates arriving in the same
-    // micro-batch cannot find each other by searching the pre-batch graph,
-    // so the batch also scores itself — bounded at batch² pairs (a
-    // micro-batch is small by construction; at larger batch sizes this
-    // becomes the LSH-bucketed candidate join of the batch build)
-    val self = batch.as("a")
-      .join(batch.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("node_id"),
-        cosineSimilarity(col("a.v"), col("b.v")).as("cos"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("node_id"))
-    visited.unionByName(self)
-      // self-exclusion: a NEW node never meets itself in the pre-batch
-      // graph, but the edge-REPAIR path re-inserts nodes that are already
-      // members — without this their rank-1 "neighbor" is themselves
-      .filter(col("query_id") =!= col("node_id"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= Degree)
-      .select(col("query_id").as("src"), col("node_id").as("dst"))
   }
 
   def bulkSearch(spark: SparkSession, dir: String): DataFrame =
@@ -939,8 +826,7 @@ object Nsw {
       storedHnswL1Edges(spark, dir), storedNswEdges(spark, dir))
 
   /** The 2-layer beam core over already-built layer graphs — also the
-    * serve path of [[graft.streaming.StreamingNswIndex]]'s maintained
-    * hierarchy and the recall harness's hnsw row. */
+    * recall harness's hnsw row. */
   /** Serve-time default: both layers' hop budgets size with their node
     * counts (pinned values at oracle fixtures — see [[searchWithEdges]]). */
   private[graft] def hnswWithEdges(

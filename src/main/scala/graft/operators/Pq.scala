@@ -86,8 +86,6 @@ object Pq {
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), VectorFunctions.asDouble(col("embedding")).as("v"))
 
-  private def sub(v: Column, m: Int): Column = subD(v, m, SubDim)
-
   private def subD(v: Column, m: Int, subDim: Int): Column =
     slice(v, m * subDim + 1, subDim)
 

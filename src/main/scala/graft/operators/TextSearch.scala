@@ -262,11 +262,9 @@ object TextSearch {
   // `f6_text_search_word` (they share the oracle SQL).
 
   /** The distinct (word, universeId) postings of an arbitrary games frame —
-    * the tokenization core shared by the stored batch artifact below and
-    * the streaming maintainer ([[graft.streaming.StreamingPostingsIndex]]),
-    * which re-tokenizes only each micro-batch's touched docs through this
-    * same definition (one tokenizer, so streamed ≡ rebuilt postings is a
-    * set equality, not a convention). */
+    * the tokenization core of the stored batch artifact below (the
+    * CDC-fed maintainer graft.streaming.StreamingPostingsIndex @ 134fd08
+    * re-tokenized touched docs through it). */
   private[graft] def postingsOf(games: DataFrame): DataFrame =
     Seq(col("name"), col("description"), col("gameplayDescription"))
       .map(c => games.select(col("universeId"),
@@ -298,9 +296,9 @@ object TextSearch {
 
   /** The frames-based indexed-search core: dictionary scan → postings
     * equi-join → cascade scoring on candidates only. Callers supply the
-    * three tables — the batch path reads the stored artifacts, the
-    * streaming server reads one committed [[graft.streaming
-    * .VersionedState]] version — so both serve tiers share one plan.
+    * three tables — the batch path reads the stored artifacts (the
+    * streaming server graft.streaming.StreamingPostingsIndex @ 134fd08 read
+    * one committed state version through the same plan).
     *
     * Multi-word queries intersect per-word candidate sets: if a field
     * contains the whole phrase, then EVERY whitespace-free query word lies

@@ -11,9 +11,10 @@ final case class BucketedCommitStats(
     version: Long, touchedBuckets: Int, totalBuckets: Int,
     writtenBytes: Long, stateBytes: Long)
 
-/** Manifest-committed, key-bucketed state store for the vector-index
-  * maintainers — round-13 refit of the round-12 store, closing ADVICE
-  * r12's findings:
+/** Manifest-committed, key-bucketed state store, built for the
+  * streaming vector-index maintainers (deleted, no measured caller; see
+  * graft.streaming.StreamingNswIndex @ 134fd08) — round-13 refit of the
+  * round-12 store, closing ADVICE r12's findings:
   *
   *   - '''gen LISTS, not copy-on-write appends''' (ADVICE #1): the
   *     manifest maps each keyed table's bucket to a LIST of generations,

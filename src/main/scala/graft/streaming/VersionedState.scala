@@ -4,15 +4,15 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Copy-on-write versioned parquet state with a commit pointer and
-  * keep-last-K retention — the storage layer behind [[StreamingUpsert]]
-  * and the sketch/dedup maintainers whose state is genuinely
-  * batch-bounded. It is the hand-rolled analogue of a lakehouse table
-  * format's transaction log (Delta/Iceberg); on one of those this class
-  * collapses to table commits + `VACUUM`. The INDEX maintainers
-  * (postings, NSW, IVF) outgrew the full-table rewrite this class does
-  * per commit and moved to the bucket-pruned
-  * [[BucketedPostingsState]]/[[BucketedAppendState]] in round 12 —
-  * their per-batch written bytes are change-sized, not state-sized.
+  * keep-last-K retention, for state that is genuinely batch-bounded
+  * (the streaming upsert that used it is deleted; see
+  * graft.streaming.StreamingUpsert @ 134fd08). It is the hand-rolled
+  * analogue of a lakehouse table format's transaction log
+  * (Delta/Iceberg); on one of those this class collapses to table
+  * commits + `VACUUM`. Index-sized state outgrows the full-table rewrite
+  * this class does per commit; [[BucketedAppendState]] is the
+  * bucket-pruned store whose per-commit written bytes are change-sized,
+  * not state-sized.
   *
   * Three properties the earlier per-class writes lacked:
   *

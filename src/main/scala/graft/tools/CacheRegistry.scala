@@ -130,24 +130,16 @@ object CacheRegistry {
     sharedObjects.clear()
   }
 
-  /** Run `body` in a tracked-frame SCOPE: frames registered DURING the
-    * body are unpersisted and dropped from the registry when it returns
-    * (success or failure); frames registered before are left alone.
+  /** Run `body` in a tracked-frame SCOPE: frames and checkpoint RDDs
+    * registered DURING the body are unpersisted and dropped from the
+    * registry when it returns (success or failure); those registered
+    * before are left alone. `CacheRegistrySpec` uses it to pin that a
+    * release frees localCheckpoint blocks, not just the Dataset handles,
+    * without touching frames other suites registered on the shared test
+    * session.
     *
-    * Round 18 (ADVICE r17 medium): a long-running streaming maintainer
-    * that calls an iterative builder (BPE retrain →
-    * `Curation.bpeBuildStepsOn`, ~merges+1 persisted/localCheckpointed
-    * frames per call) never reaches a harness [[release]], so the
-    * registry's strong references pinned executor storage — AND kept the
-    * localCheckpointed RDDs reachable, blocking the ContextCleaner from
-    * reclaiming their blocks — growing without bound in the retrain
-    * count. Scoping drops the references once the retrain's output is
-    * committed, which is what lets checkpoint blocks be GC-reclaimed.
-    *
-    * Single-writer assumption (the maintainer loops already hold it): a
-    * CONCURRENT thread registering frames during the body would see them
-    * released with the scope. Harness runners are sequential, so the
-    * assumption holds everywhere this is called. */
+    * Single-writer assumption: a CONCURRENT thread registering frames
+    * during the body would see them released with the scope. */
   def scopedRelease[T](blocking: Boolean = false)(body: => T): T = {
     val before = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[Dataset[_], java.lang.Boolean]())
@@ -166,10 +158,8 @@ object CacheRegistry {
       }
       keep.forEach(k => tracked.add(k))
       // checkpoint blocks created inside the scope are freed with it —
-      // deterministically, instead of waiting for driver GC (the r18
-      // scoped-release relied on the ContextCleaner noticing the dropped
-      // references; the explicit unpersist makes the maintainer-loop
-      // bound immediate)
+      // deterministically, instead of waiting for driver GC and the
+      // ContextCleaner to notice the dropped references
       val keepR = new java.util.ArrayList[org.apache.spark.rdd.RDD[_]]()
       var r = checkpointRdds.poll()
       while (r != null) {
@@ -180,11 +170,6 @@ object CacheRegistry {
       keepR.forEach(k => checkpointRdds.add(k))
     }
   }
-
-  /** Registered per-query frame count — observability for the scoped
-    * release (tests pin "a retrain leaves the registry where it found
-    * it"). */
-  def trackedCount: Int = tracked.size()
 
   /** Unpersist everything registered since the last call. Bench passes
     * `blocking = true` so a query never competes for storage memory with

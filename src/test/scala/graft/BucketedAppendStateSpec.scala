@@ -7,10 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Merge
 import graft.streaming.BucketedAppendState
 
-/** Direct pins for the maintainers' round-12 storage layer (the
-  * maintainer specs exercise it end-to-end; these isolate the commit
-  * protocol itself): append semantics, replay no-op, small-table
-  * versioning, retention sweep, and both crash windows. */
+/** Direct pins for the round-12 bucketed state store's commit protocol:
+  * append semantics, replay no-op, small-table versioning, retention
+  * sweep, and both crash windows. */
 class BucketedAppendStateSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -346,15 +345,14 @@ class BucketedAppendStateSpec extends AnyFunSuite {
     st.commitFull(0L, Map("t" -> wide))
     assert(BucketedAppendState.measuredBuckets(spark, rootW, wide, n, target) === 8)
 
-    // the maintainer wiring: a store bootstrapped through the bytes dial
-    // records the measured count as its frozen layout
-    val dedupDir = Files.createTempDirectory("bas-sized-dedup").toString
-    val docs = (0L until 64L).map(id =>
-      (id, s"alpha beta gamma delta epsilon token$id", "en", "web"))
-      .toDF("doc_id", "text", "lang", "source")
-    new graft.streaming.StreamingIncrementalDedup(spark, dedupDir, docs,
-      targetBucketBytes = Some(target))
-    val recorded = BucketedAppendState.recordedBuckets(spark, dedupDir)
+    // the bootstrap wiring: a store opened at the bytes dial's count
+    // records that count as its frozen layout at first commit
+    val sizedDir = Files.createTempDirectory("bas-sized-boot").toString
+    val measured = BucketedAppendState.measuredBuckets(spark, sizedDir, wide, n, target)
+    new BucketedAppendState(spark, sizedDir, measured, keyed = Map("t" -> "doc_id"))
+      .commitFull(0L, Map("t" -> wide))
+    val recorded = BucketedAppendState.recordedBuckets(spark, sizedDir)
+    assert(recorded === Some(measured))
     assert(recorded.nonEmpty && recorded.get >= 16,
       s"bytes-dial bootstrap must freeze a recorded layout, got $recorded")
   }

@@ -3,7 +3,8 @@
 # skipping sbt's launch/lock overhead. Usage: run_main.sh <mainClass> [args...]
 # Compile first with `sbt -batch compile` — this script does NOT compile.
 set -u
-CLASSES=/root/repo/target/scala-2.13/classes
+# Classes come from the checkout this script lives in.
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
