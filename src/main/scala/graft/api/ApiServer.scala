@@ -49,6 +49,7 @@ final class ApiServer(spark: SparkSession, dataDir: String, port: Int = 0,
 
   private val ValidStatuses = Set("pending", "running", "completed", "failed")
 
+  ApiServer.noDelay()
   private val server: HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
   server.setExecutor(pool)
   server.createContext("/", (exchange: HttpExchange) => handle(exchange))
@@ -198,6 +199,15 @@ final class ApiServer(spark: SparkSession, dataDir: String, port: Int = 0,
   * job store, an optional blob dir wires /stats' image counters to a real
   * binaryFile listing. */
 object ApiServer {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  /** The JDK server leaves Nagle's algorithm on, and its separate header
+    * and body writes then wait out the client's delayed ACK: about 45 ms
+    * a request over loopback. The server reads the property once, at the
+    * first `HttpServer.create`; a value set at JVM start wins. */
+  private def noDelay(): Unit =
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+
   def main(args: Array[String]): Unit = {
     val dataDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).flatMap(_.toIntOption).getOrElse(3705)

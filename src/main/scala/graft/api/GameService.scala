@@ -1,29 +1,30 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.json4s.JArray
 
 import graft.enrich.StubEnrichmentClient
 import graft.functions.OracleParity.pround
-import graft.functions.VectorFunctions
 import graft.io.Tables
-import graft.operators.{Similarity, TextSearch}
+import graft.operators.TextSearch
 
 /** Query logic behind the reference's GET endpoints (SURVEY §2.10),
   * parameter handling included — silent-ignore of invalid limits, clamps,
   * and the exact failure messages (reference: the src/endpoints GET files).
   * Each method returns a fully-rendered envelope JSON string.
   *
-  * The games/embeddings sides are cached: an API server answers many
-  * queries over one snapshot, so the scan cost is paid once, and every
-  * endpoint query is a top-k/limit plan over the cached frames.
+  * `/vector-search`, `/similar-search`, `/games` and `/stats` answer from
+  * one [[ServingSnapshot]], collected on first use from the games and
+  * embeddings inputs and kept for the service's lifetime; after that they
+  * run no Spark job (`/stats` still reads an image listing, which can
+  * change under a running server). `/search` plans
+  * `TextSearch.scoredSearch` over the persisted games frame the snapshot
+  * was collected from.
   */
 final class GameService(
-    spark: SparkSession,
     gamesIn: () => DataFrame,
     embeddingsIn: () => DataFrame,
-    imageListing: Option[DataFrame] = None) {
+    imageListing: Option[() => DataFrame] = None) {
 
   import JsonEnvelope._
 
@@ -32,35 +33,20 @@ final class GameService(
     g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     g
   }
-  private lazy val embeddings: DataFrame = {
-    val e = embeddingsIn()
-    e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e
-  }
+  private lazy val snapshot: ServingSnapshot = ServingSnapshot.build(games, embeddingsIn())
 
   /** Embedding client standing in for the reference's embedding API call
     * on `/vector-search` (vectorSearch.get.ts:105-121) — deterministic,
     * 64-dim to match the fixture vectors. */
   private val embedClient = new StubEnrichmentClient(64)
 
-  def release(): Unit = {
-    games.unpersist(blocking = false)
-    embeddings.unpersist(blocking = false)
-  }
-
-  private def blankToNullProjection: Seq[Column] = Seq(
-    col("universeId"), col("rootPlaceId"), col("name"),
-    col("description"), col("gameplayDescription"))
+  def release(): Unit = games.unpersist(blocking = false)
 
   /** GET /games?limit — localeCompare-approximating CI name sort (T2,
     * documented divergence SURVEY §7.4), optional limit (> 0, silently
     * ignored otherwise — games.get.ts:54-60), 5-column projection. */
-  def gamesList(limit: Option[String]): String = {
-    val sorted = games
-      .orderBy(lower(col("name")), col("name"), col("universeId"))
-    val limited = parsePositive(limit).map(sorted.limit).getOrElse(sorted)
-    ok(dataFrameToJson(limited.select(blankToNullProjection: _*)))
-  }
+  def gamesList(limit: Option[String]): String =
+    ok(snapshot.games(parsePositive(limit)))
 
   /** GET /search?q&limit — F6 cascade × F7 popularity, top-k, 2dp rounding
     * (search.get.ts:72-215). */
@@ -72,7 +58,7 @@ final class GameService(
         val out = TextSearch.scoredSearch(games, query)
           .orderBy(desc("score"), col("universeId"))
           .limit(k)
-          .select(blankToNullProjection ++ Seq(
+          .select(ServingSnapshot.Display.map(col) ++ Seq(
             col("matchType"), pround(col("score"), 2).as("relevanceScore")): _*)
         ok(dataFrameToJson(out))
     }
@@ -84,91 +70,35 @@ final class GameService(
       case None => fail("Invalid search query")
       case Some(query) =>
         val k = parseLimitedLimit(limit, default = 10, max = 100)
-        val qv = typedlit(embedClient.embed(Seq(query)).head.toSeq)
-        val out = Similarity.vectorScored(games, gameEmbeddings, qv)
-          .orderBy(desc("sim"), col("universeId"))
-          .limit(k)
-          .select(blankToNullProjection :+ pround(col("sim"), 2).as("similarity"): _*)
-        ok(dataFrameToJson(out))
+        ok(snapshot.vectorSearch(embedClient.embed(Seq(query)).head, k))
     }
 
   /** GET /similar-search/:universeId?limit — target lookup, cosine ×
-    * popularity vs all others, top-k; inner join drops orphan embeddings
-    * (documented fix of the reference's crash path —
-    * similarSearch.get.ts:133).
-    *
-    * The target-existence check is folded into the SAME plan rather than
-    * run as a separate `isEmpty` action: an all-null sentinel row is
-    * unioned in iff the target embedding exists (a data row always
-    * carries a universeId, so the sentinel is unambiguous), making each
-    * request exactly one Spark job. The top-k child computes the right
-    * ROWS; their arrival order through the union is a physical-plan detail
-    * (TakeOrderedAndProject + UnionExec child order) no contract
-    * guarantees, so the ≤100 collected data rows are re-sorted driver-side
-    * — negligible cost, robust to AQE re-planning. The UNROUNDED score
-    * rides along for that re-sort (the plan's top-k and the reference,
-    * similarSearch.get.ts:141, both order by the raw score — sorting on
-    * the 2dp-rounded value would reorder ties) and is dropped before
-    * serialization. */
+    * popularity vs all others, top-k; the inner join drops orphan
+    * embeddings (documented fix of the reference's crash path —
+    * similarSearch.get.ts:133). */
   def similarSearch(universeId: String, limit: Option[String]): String =
     universeId.toLongOption match {
       case None => fail("Invalid universe ID")
       case Some(id) =>
         val k = parseLimitedLimit(limit, default = 10, max = 100)
-        val out = Similarity.similarScored(games, gameEmbeddings, id)
-          .orderBy(desc("sim"), col("universeId"))
-          .limit(k)
-          .select(blankToNullProjection ++ Seq(
-            pround(col("sim"), 2).as("similarity"), col("sim")): _*)
-        val sentinel = gameEmbeddings.filter(col("universeId") === id)
-          .select(out.schema.map(f => lit(null).cast(f.dataType).as(f.name)).toSeq: _*)
-        val rows = out.unionByName(sentinel).collect()
-        val (marks, data) = rows.partition(_.isNullAt(0))
-        if (marks.isEmpty) fail(s"No embeddings found for game with universeId $id")
-        else {
-          val simIdx = out.schema.fieldIndex("sim")
-          val idIdx = out.schema.fieldIndex("universeId")
-          val sorted = data.sortBy(r => (-r.getDouble(simIdx), r.getLong(idIdx)))
-          ok(JArray(sorted.toList.map(r =>
-            org.json4s.JObject(rowToJson(r).obj.filterNot(_._1 == "sim")))))
-        }
+        snapshot.similarSearch(id, k)
+          .fold(fail(s"No embeddings found for game with universeId $id"))(ok)
     }
 
   /** GET /stats — A2 completeness counters with the reference's exact keys
-    * (stats.get.ts:44-102). Image existence checks are anti-joins against
-    * the blob-store listing; with no listing wired, every game lacks
+    * (stats.get.ts:44-102). Image existence checks run against a fresh
+    * blob-store listing per call (a listing frame keeps the files it found
+    * when it was made), each game counted once per kind however often the
+    * listing repeats its pair; with no listing wired, every game lacks
     * images — the reference behaves the same with an empty images dir. */
   def stats(): String = {
-    val listing = imageListing.getOrElse {
-      import spark.implicits._
-      Seq.empty[(Long, String)].toDF("universeId", "kind")
+    val imaged = imageListing.fold(Set.empty[(Long, String)]) { listing =>
+      listing().select(col("universeId").cast("long"), col("kind")).distinct().collect()
+        .collect { case Row(id: Long, kind: String) => (id, kind) }.toSet
     }
-    val withImgs = graft.pipeline.Images.Kinds.foldLeft(games) { (df, kind) =>
-      df.join(
-        listing.filter(col("kind") === kind)
-          .select(col("universeId"), lit(1).as(s"has_$kind")),
-        Seq("universeId"), "left")
-    }
-    val withEmb = withImgs.join(
-      gameEmbeddings.select(col("universeId"), lit(1).as("has_emb")),
-      Seq("universeId"), "left")
-    // The reference's two lacking-text predicates differ (stats.get.ts:74-84):
-    // description tests exactly undefined | '' | null — a whitespace-only
-    // description counts as PRESENT — while gameplayDescription is falsy-or-
-    // blank-after-trim.
-    val noDescription = (c: Column) => c.isNull || c === ""
-    val blank = (c: Column) => c.isNull || trim(c) === ""
-    val row = withEmb.agg(
-      count(lit(1)).as("totalGames"),
-      count(when(col("has_icon").isNull, 1)).as("gamesLackingIcons"),
-      count(when(col("has_thumbnail").isNull, 1)).as("gamesLackingThumbnails"),
-      count(when(noDescription(col("description")), 1)).as("gamesLackingDescriptions"),
-      count(when(blank(col("gameplayDescription")), 1)).as("gamesLackingGameplayDescriptions"),
-      count(when(col("has_emb").isNull, 1)).as("gamesLackingEmbeddings"))
-    ok(rowToJson(row.collect()(0)))
+    ok(snapshot.stats(imaged))
   }
-
-  private def gameEmbeddings: DataFrame = embeddings
 
   /** parseInt > 0 or silently absent (games.get.ts:54-60). */
   private def parsePositive(s: Option[String]): Option[Int] =
@@ -187,8 +117,8 @@ object GameService {
     * ([[graft.pipeline.Images.listBlobs]]). */
   def forDir(spark: SparkSession, dir: String,
       imagesDir: Option[String] = None): GameService =
-    new GameService(spark,
+    new GameService(
       () => Tables.games(spark, dir),
       () => Tables.gameEmbeddings(spark, dir),
-      imagesDir.map(d => graft.pipeline.Images.listBlobs(spark, d)))
+      imagesDir.map(d => () => graft.pipeline.Images.listBlobs(spark, d)))
 }

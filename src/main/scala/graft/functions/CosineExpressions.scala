@@ -34,25 +34,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return Double.NaN
-    val n = x.numElements()
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getDouble(i)
-      val yi = y.getDouble(i)
-      dot += xi * yi
-      na += xi * xi
-      nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(
+      a.asInstanceOf[ArrayData].toDoubleArray(), b.asInstanceOf[ArrayData].toDoubleArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
@@ -90,6 +74,27 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
   import org.apache.spark.sql.graftshim.ColumnBridge
+
+  /** The kernel: the interpreted path and the API's serving snapshot
+    * call it, and the generated code above is its line-for-line Java
+    * twin. */
+  def cosine(x: Array[Double], y: Array[Double]): Double = {
+    if (x.length != y.length) return Double.NaN
+    val n = x.length
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x(i)
+      val yi = y(i)
+      dot += xi * yi
+      na += xi * xi
+      nb += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 
   /** Column API: inputs must already be ARRAY<DOUBLE> (callers cast). */
   def column(a: Column, b: Column): Column =

@@ -39,4 +39,11 @@ object OracleParity {
     // reference's zero-vector cosine) explicitly.
     when(isnan(c), c).otherwise(floor(c * p + 0.5) / lit(p))
   }
+
+  /** [[pround]] on a driver-side double, in the same f64 steps: Spark's
+    * floor(double) is a LONG, so the quotient is that long over 10ⁿ. */
+  def pround(x: Double, n: Int): Double = {
+    val p = math.pow(10, n)
+    if (x.isNaN) x else math.floor(x * p + 0.5).toLong / p
+  }
 }

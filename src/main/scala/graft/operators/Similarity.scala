@@ -33,8 +33,9 @@ object Similarity {
     * CompatIO (the reference's own JSON files). NaN similarities (zero
     * vectors) sort FIRST under desc — Spark treats NaN as the largest
     * double, where the reference's JS comparator is unspecified on NaN. */
-  /** Scored frame (all game columns + `sim`) — shared by the oracle query
-    * and the API endpoint's richer projection. */
+  /** Scored frame (all game columns + `sim`) — the oracle query's input,
+    * and the plan the API's serving snapshot must answer like
+    * (ServingSnapshotSpec). */
   def similarScored(games: DataFrame, embeddings: DataFrame, targetId: Long): DataFrame = {
     val target = embeddings.filter(col("universeId") === targetId)
       .select(col("embedding").as("target_embedding"))

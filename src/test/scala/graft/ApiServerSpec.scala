@@ -76,28 +76,53 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assertGolden("/stats", "stats")
   }
 
-  test("similar-search runs one collect action per request (no separate existence job)") {
-    // The existence check is folded into the main plan via the sentinel
-    // union, so a request is ONE action. Under AQE that one collect still
-    // decomposes into at most 3 scheduler jobs (broadcast build, stage
-    // materialization, final stage) — the bound that matters is that the
-    // old separate `isEmpty` action (1-2 extra jobs per request) is gone.
-    @volatile var jobs = 0
+  /** Spark jobs started while `paths` are served. A barrier job run after
+    * the requests bounds the count: the listener bus delivers events in
+    * order, so once the barrier's start arrives every earlier job has been
+    * counted. */
+  private def jobsRunBy(paths: Seq[String]): Int = {
+    assert(get("/stats")._1 === 200) // builds the snapshot if no earlier test did
+    val sc = spark.sparkContext
+    val barrierGroup = "api-spec-barrier"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val barrierSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+        if (js.properties.getProperty("spark.jobGroup.id") == barrierGroup) barrierSeen.countDown()
+        else jobs.incrementAndGet()
     }
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
     try {
-      // hit path and miss path: both must stay within the one-action budget
-      assert(get("/similar-search/42?limit=2")._1 === 200)
-      assert(get("/similar-search/999999123")._1 === 200)
-      // listener events are async: give them a beat to all surface
-      val deadline = System.currentTimeMillis() + 5000
-      while (jobs < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
-      Thread.sleep(250)
-      assert(jobs <= 6, s"expected <= 3 scheduler jobs per request, saw $jobs for 2 requests")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      for (path <- paths) assert(get(path)._1 === 200, path)
+      sc.setJobGroup(barrierGroup, "barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(barrierSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("similar-search runs one collect action per request (no separate existence job)") {
+    // The snapshot answers the hit and the miss path in memory, so the
+    // per-request budget (once one collect, with no separate `isEmpty`
+    // existence job) is now zero jobs.
+    assert(jobsRunBy(Seq("/similar-search/42?limit=2", "/similar-search/999999123")) === 0)
+  }
+
+  test("vector, games and stats requests run no Spark job once the snapshot is built") {
+    assert(jobsRunBy(Seq("/vector-search?q=spark%20engine&limit=5", "/games?limit=3", "/stats")) === 0)
+  }
+
+  test("sequential requests on one connection do not wait out Nagle's algorithm") {
+    // with Nagle on, each response stalls ~45 ms on the client's delayed ACK
+    val http11 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    val ms = (1 to 21).map { _ =>
+      val t0 = System.nanoTime()
+      http11.send(HttpRequest.newBuilder(URI.create(base + "/jobs/xyz")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      (System.nanoTime() - t0) / 1e6
+    }
+    val median = ms.sorted.apply(ms.length / 2)
+    assert(median < 20.0, s"median $median ms over ${ms.map(_.round).mkString(", ")}")
   }
 
   test("failure envelopes match the reference messages") {
@@ -168,7 +193,7 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, 3L, "c", null, null)    // null lacking on both
     ).toDF("universeId", "rootPlaceId", "name", "description", "gameplayDescription")
     val emb = Seq((1L, Array(0.1f))).toDF("universeId", "embedding")
-    val svc = new graft.api.GameService(spark, () => games, () => emb)
+    val svc = new graft.api.GameService(() => games, () => emb)
     try {
       val out = svc.stats()
       assert(out.contains(""""gamesLackingDescriptions":2"""))

@@ -79,4 +79,24 @@ class ImagesSpec extends AnyFunSuite {
       assert(stats.contains(""""gamesLackingThumbnails":499"""))
     } finally svc.release()
   }
+
+  test("/stats re-lists the blob store per call and counts a repeated blob once") {
+    // recursiveFileLookup finds both a/123/icon.png and b/123/icon.png
+    val dir = Files.createTempDirectory("graft-blobdups").toString
+    for (sub <- Seq("a", "b")) {
+      Files.createDirectories(Paths.get(dir, sub, "123"))
+      Files.write(Paths.get(dir, sub, "123", "icon.png"), Array[Byte](1))
+    }
+    assert(Images.listBlobs(spark, dir).count() === 2L)
+    val svc = graft.api.GameService.forDir(spark, SparkTestSession.Sf0001, Some(dir))
+    try {
+      val stats = svc.stats()
+      assert(stats.contains(""""totalGames":500"""), stats)
+      assert(stats.contains(""""gamesLackingIcons":499"""), stats)
+      assert(stats.contains(""""gamesLackingThumbnails":500"""), stats)
+      // a blob written under the running service shows in the next call
+      Files.write(Paths.get(dir, "a", "123", "thumbnail.png"), Array[Byte](1))
+      assert(svc.stats().contains(""""gamesLackingThumbnails":499"""))
+    } finally svc.release()
+  }
 }

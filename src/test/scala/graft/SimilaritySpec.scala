@@ -51,6 +51,46 @@ class SimilaritySpec extends AnyFunSuite {
       foldCosineSimilarity(col("a"), col("b")).as("fold"))
       .filter(col("fast") =!= col("fold")).count()
     assert(mismatches === 0L)
+
+    // the plain kernel, the interpreted expression and the generated code
+    // agree bit for bit (NaN compared as NaN) on random, zero and
+    // mismatched-length inputs
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.functions.CosineSimilarity
+    val arrays = ArrayType(DoubleType, containsNull = false)
+    val expr = CosineSimilarity(
+      BoundReference(0, arrays, nullable = true), BoundReference(1, arrays, nullable = true))
+    val generated = GenerateUnsafeProjection.generate(Seq(expr))
+    val rng = new scala.util.Random(7)
+    val random = Seq.fill(40)(Array.fill(64)(rng.nextGaussian()))
+    val zero = Array.fill(64)(0.0)
+    val inputs = random.zip(random.tail) ++ Seq(
+      (zero, random.head), (random.head, zero), (zero, zero),
+      (Array(1.0, 2.0, 3.0), random.head), (random.head, Array(1.0, 2.0, 3.0)),
+      (Array.emptyDoubleArray, Array.emptyDoubleArray),
+      (Array(Double.NaN, 1.0), Array(1.0, 1.0)))
+    inputs.foreach { case (x, y) =>
+      val row = InternalRow(ArrayData.toArrayData(x), ArrayData.toArrayData(y))
+      val plain = java.lang.Double.doubleToLongBits(CosineSimilarity.cosine(x, y))
+      assert(java.lang.Double.doubleToLongBits(expr.eval(row).asInstanceOf[Double]) === plain)
+      assert(java.lang.Double.doubleToLongBits(generated(row).getDouble(0)) === plain)
+    }
+  }
+
+  test("driver-side pround equals the Column pround on NaN, signed zeros and half-cents") {
+    import graft.functions.OracleParity.pround
+    val edges = Seq(Double.NaN, 0.0, -0.0, 0.005, -0.005, 0.015, -0.015, 0.125, 0.135,
+      0.995, 1.005, -1.005, 2.675, 12345.675, 0.994999999, 1e-300, -1e-300,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    val viaSpark = edges.toDF("x").select(pround(col("x"), 2)).collect().map(_.getDouble(0))
+    edges.zip(viaSpark).foreach { case (x, s) =>
+      assert(java.lang.Double.doubleToLongBits(pround(x, 2)) ===
+        java.lang.Double.doubleToLongBits(s), s"pround($x, 2)")
+    }
   }
 
   test("codegen hyperplane-bucket kernel is identical to the built-in fold, every table family") {
