@@ -62,7 +62,7 @@ object ApiSchema {
     Endpoint("get", "/games", "List games", "games", SArr(gameRow())),
     Endpoint("get", "/search", "Text search across games", "search",
       SArr(gameRow(
-        "matchType" -> SEnum(Seq("title", "description", "gameplayDescription")),
+        "matchType" -> SEnum(graft.functions.TextMatch.MatchTypes),
         "relevanceScore" -> SNum))),
     Endpoint("get", "/vector-search", "Semantic search by embedding", "search",
       SArr(gameRow("similarity" -> SNum))),

@@ -56,7 +56,7 @@ final class ApiServer(spark: SparkSession, dataDir: String, port: Int = 0,
 
   def start(): Int = { server.start(); server.getAddress.getPort }
   def stop(): Unit = {
-    server.stop(0); service.release(); pool.shutdown(); jobPool.shutdown()
+    server.stop(0); pool.shutdown(); jobPool.shutdown()
   }
   def boundPort: Int = server.getAddress.getPort
 

@@ -1,25 +1,22 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 import graft.enrich.StubEnrichmentClient
-import graft.functions.OracleParity.pround
+import graft.functions.TextMatch
 import graft.io.Tables
-import graft.operators.TextSearch
 
 /** Query logic behind the reference's GET endpoints (SURVEY §2.10),
   * parameter handling included — silent-ignore of invalid limits, clamps,
   * and the exact failure messages (reference: the src/endpoints GET files).
   * Each method returns a fully-rendered envelope JSON string.
   *
-  * `/vector-search`, `/similar-search`, `/games` and `/stats` answer from
-  * one [[ServingSnapshot]], collected on first use from the games and
-  * embeddings inputs and kept for the service's lifetime; after that they
-  * run no Spark job (`/stats` still reads an image listing, which can
-  * change under a running server). `/search` plans
-  * `TextSearch.scoredSearch` over the persisted games frame the snapshot
-  * was collected from.
+  * Every endpoint answers from one [[ServingSnapshot]], collected on
+  * first use from the games and embeddings inputs and kept for the
+  * service's lifetime; after that no request runs a Spark job, and the
+  * service persists nothing (`/stats` still reads an image listing, which
+  * can change under a running server).
   */
 final class GameService(
     gamesIn: () => DataFrame,
@@ -28,19 +25,12 @@ final class GameService(
 
   import JsonEnvelope._
 
-  private lazy val games: DataFrame = {
-    val g = gamesIn()
-    g.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    g
-  }
-  private lazy val snapshot: ServingSnapshot = ServingSnapshot.build(games, embeddingsIn())
+  private lazy val snapshot: ServingSnapshot = ServingSnapshot.build(gamesIn(), embeddingsIn())
 
   /** Embedding client standing in for the reference's embedding API call
     * on `/vector-search` (vectorSearch.get.ts:105-121) — deterministic,
     * 64-dim to match the fixture vectors. */
   private val embedClient = new StubEnrichmentClient(64)
-
-  def release(): Unit = games.unpersist(blocking = false)
 
   /** GET /games?limit — localeCompare-approximating CI name sort (T2,
     * documented divergence SURVEY §7.4), optional limit (> 0, silently
@@ -51,16 +41,10 @@ final class GameService(
   /** GET /search?q&limit — F6 cascade × F7 popularity, top-k, 2dp rounding
     * (search.get.ts:72-215). */
   def search(q: Option[String], limit: Option[String]): String =
-    q.map(_.trim).filter(_.nonEmpty) match {
+    q.map(TextMatch.normalizeQuery).filter(_.nonEmpty) match {
       case None => fail("Search query (q) is required")
       case Some(query) =>
-        val k = parseLimitedLimit(limit, default = 10, max = 100)
-        val out = TextSearch.scoredSearch(games, query)
-          .orderBy(desc("score"), col("universeId"))
-          .limit(k)
-          .select(ServingSnapshot.Display.map(col) ++ Seq(
-            col("matchType"), pround(col("score"), 2).as("relevanceScore")): _*)
-        ok(dataFrameToJson(out))
+        ok(snapshot.search(query, parseLimitedLimit(limit, default = 10, max = 100)))
     }
 
   /** GET /vector-search?q&limit — embed the query (stub client), cosine ×

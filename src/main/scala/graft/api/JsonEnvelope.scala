@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -30,13 +30,6 @@ object JsonEnvelope {
     }
     JObject(fields)
   }
-
-  /** Collect a (small — API responses are limit-capped) result and render
-    * it as a JSON array of row objects. Collecting here is correct: this is
-    * the driver-side serialization boundary of a top-k/limited query, not a
-    * distributed operator. */
-  def dataFrameToJson(df: DataFrame): JArray =
-    JArray(df.collect().toList.map(rowToJson))
 
   def anyToJson(v: Any): JValue = v match {
     case null => JNull

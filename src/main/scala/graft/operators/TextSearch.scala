@@ -4,25 +4,22 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.{OracleViews, Tables}
+import graft.functions.TextMatch
 import graft.functions.VectorFunctions.popularityFactor
 import graft.functions.OracleParity.pround
 import graft.model.Constants
 
 /** The reference's text search (`GET /search?q=` — reference:
-  * src/endpoints/search.get.ts:113-188) as ONE declarative select:
+  * src/endpoints/search.get.ts:113-188) as ONE select over one scan: the
+  * [[graft.functions.TextMatch]] expression scores each games row's
+  * lowered text against the query (the first-match-wins cascade title →
+  * description → gameplayDescription, its bands and word fractions), and
+  * the popularity factor multiplies the result. The expression calls the
+  * one plain kernel the API's serving snapshot calls too, so the formula
+  * exists once and the plan stays whole-stage codegen'd, with no UDF.
   *
-  *   - first-match-wins cascade title → description → gameplayDescription
-  *     (a game gets exactly one matchType) via a `when/otherwise` chain;
-  *   - title band 100 (+50 exact / +25 prefix), description 50 + 20·frac,
-  *     gameplay 25 + 15·frac, all × popularity factor;
-  *   - frac = fraction of query words that appear as a SUBSTRING of some
-  *     text word (reference: search.get.ts:147-152), via higher-order
-  *     `filter`/`exists` — fully codegen'd, no UDF;
-  *   - the description/gameplay branches fire only when the WHOLE query is
-  *     a substring of the field (search.get.ts:138-143).
-  *
-  * Everything is a single projection over one scan, so at scale this is a
-  * map-only job: no shuffle at all until the final top-k merge.
+  * At scale this is a map-only job: no shuffle at all until the final
+  * top-k merge.
   */
 object TextSearch {
 
@@ -31,53 +28,21 @@ object TextSearch {
   def clampLimit(n: Int): Int = math.max(1, math.min(n, Constants.MaxLimit))
 
   /** The scored cascade WITHOUT final projection — all game columns plus
-    * (matchType, score). Shared by the oracle query below and the API
-    * endpoint (which projects the reference's 7-column response). */
+    * (matchType, score). Shared by the oracle queries below and the
+    * differential spec of the API's serving snapshot. */
   def scoredSearch(games: DataFrame, normalizedQuery: String): DataFrame = {
-    val nq = normalizedQuery.toLowerCase.trim
-    val qWords: Seq[String] = nq.split("\\s+").toSeq
-
-    // "some TOKEN of text contains q" ≡ "text contains q" whenever q has no
-    // whitespace (an occurrence of a whitespace-free q cannot span a token
-    // boundary) — and q comes from splitting the query on \s+, so it never
-    // does. That turns the reference's descWords.some(w => w.includes(q))
-    // (search.get.ts:147-152) into a per-word contains() on the unsplit
-    // text: no doc-side split, no interpreted exists() lambda, pure
-    // whole-stage codegen. Unrolled over the static query words.
-    def wordFrac(textLower: Column): Column =
-      qWords.map(q => when(textLower.contains(q), 1.0).otherwise(0.0))
-        .reduce(_ + _) / lit(qWords.length.toDouble)
-
-    val pop = popularityFactor(col("playerCount"))
-    val nameL = lower(col("name"))
-    val descL = lower(coalesce(col("description"), lit("")))
-    val gpL = lower(coalesce(col("gameplayDescription"), lit("")))
-
-    val titleCond = nameL.contains(nq)
-    // '' is falsy in JS: blank fields never match (contains('') is excluded
-    // by construction since nq is non-empty).
-    val descCond = descL.contains(nq)
-    val gpCond = gpL.contains(nq)
-
-    val titleScore =
-      (lit(100.0) +
-        when(nameL === nq, 50.0)
-          .when(nameL.startsWith(nq), 25.0)
-          .otherwise(0.0)) * pop
-    val descScore = (lit(50.0) + wordFrac(descL) * 20.0) * pop
-    val gpScore = (lit(25.0) + wordFrac(gpL) * 15.0) * pop
-
-    games
-      .withColumn("matchType",
-        when(titleCond, "title")
-          .when(descCond, "description")
-          .when(gpCond, "gameplayDescription"))
-      .withColumn("score",
-        when(titleCond, titleScore)
-          .when(descCond, descScore)
-          .when(gpCond, gpScore))
-      .filter(col("matchType").isNotNull)
+    val nq = TextMatch.normalizeQuery(normalizedQuery)
+    scored(games, lit(nq), typedlit(TextMatch.queryWords(nq)))
   }
+
+  /** The rows `query` matches, each with its matchType and score. */
+  private def scored(games: DataFrame, query: Column, words: Column): DataFrame =
+    games
+      .withColumn("hit", TextMatch.column(query, words))
+      .filter(col("hit").isNotNull)
+      .withColumn("matchType", col("hit.matchType"))
+      .withColumn("score", col("hit.base") * popularityFactor(col("playerCount")))
+      .drop("hit")
 
   /** Builds the scored search DataFrame for an already-normalized query. */
   def search(games: DataFrame, normalizedQuery: String, limit: Int = Constants.DefaultLimit): DataFrame =
@@ -125,7 +90,7 @@ object TextSearch {
     * 100 TB per query; this is games × queries with the cascade fully
     * column-driven, then a per-query top-k window). */
   def searchMany(games: DataFrame, queriesIn: Seq[String], limitPerQuery: Int): DataFrame = {
-    val qs = queriesIn.map(_.toLowerCase.trim)
+    val qs = queriesIn.map(TextMatch.normalizeQuery)
     val session = games.sparkSession
     import session.implicits._
     scoreManyPairs(games.crossJoin(broadcast(qs.toDF("query"))), limitPerQuery)
@@ -139,39 +104,9 @@ object TextSearch {
     * matches per query (the [[searchIndexedFrames]] argument), so the
     * post-filter rows — and hence the ranks — are identical. */
   private def scoreManyPairs(paired: DataFrame, limitPerQuery: Int): DataFrame = {
-    val pop = popularityFactor(col("playerCount"))
-    val nameL = lower(col("name"))
-    val descL = lower(coalesce(col("description"), lit("")))
-    val gpL = lower(coalesce(col("gameplayDescription"), lit("")))
-    val qWords = split(col("query"), "\\s+")
-
-    // same token-contains ≡ text-contains equivalence as in scoredSearch;
-    // here the query is a COLUMN, so the (tiny) query-word array keeps a
-    // higher-order filter but the DOC side needs no split at all — the
-    // doc-length-proportional work is codegen'd Contains.
-    def wordFrac(textLower: Column): Column =
-      size(filter(qWords, q => textLower.contains(q))).cast("double") /
-        size(qWords).cast("double")
-
-    val titleCond = nameL.contains(col("query"))
-    val descCond = descL.contains(col("query"))
-    val gpCond = gpL.contains(col("query"))
-    val titleScore = (lit(100.0) +
-      when(nameL === col("query"), 50.0)
-        .when(nameL.startsWith(col("query")), 25.0)
-        .otherwise(0.0)) * pop
-    val descScore = (lit(50.0) + wordFrac(descL) * 20.0) * pop
-    val gpScore = (lit(25.0) + wordFrac(gpL) * 15.0) * pop
-
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query")).orderBy(desc("score"), col("universeId"))
-    paired
-      .withColumn("matchType",
-        when(titleCond, "title").when(descCond, "description")
-          .when(gpCond, "gameplayDescription"))
-      .withColumn("score",
-        when(titleCond, titleScore).when(descCond, descScore).when(gpCond, gpScore))
-      .filter(col("matchType").isNotNull)
+    scored(paired, col("query"), split(col("query"), "\\s+"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= clampLimit(limitPerQuery))
       .select(col("query"), col("universeId"), col("matchType"),
@@ -191,8 +126,8 @@ object TextSearch {
       dictionary: DataFrame, queriesIn: Seq[String], limitPerQuery: Int): DataFrame = {
     val session = games.sparkSession
     import session.implicits._
-    val cand = queriesIn.map(_.toLowerCase.trim).map { q =>
-      q.split("\\s+").toSeq.map { w =>
+    val cand = queriesIn.map(TextMatch.normalizeQuery).map { q =>
+      TextMatch.queryWords(q).map { w =>
         postings
           .join(broadcast(dictionary.filter(col("word").contains(w))), Seq("word"))
           .select(col("universeId")).distinct()
@@ -202,7 +137,7 @@ object TextSearch {
   }
 
   private def batchOracle(qs: Seq[String], limit: Int): String = {
-    val values = qs.map(q => s"('${q.toLowerCase.trim}')").mkString(", ")
+    val values = qs.map(q => s"('${TextMatch.normalizeQuery(q)}')").mkString(", ")
     val frac = (field: String) =>
       s"""(len(list_filter(string_split_regex(query, '\\s+'),
          |      q -> len(list_filter(string_split_regex($field, '\\s+'),
@@ -314,8 +249,8 @@ object TextSearch {
     * word set, once per query word. */
   private[graft] def searchIndexedFrames(games: DataFrame, postings: DataFrame,
       dictionary: DataFrame, normalizedQuery: String, limit: Int): DataFrame = {
-    val nq = normalizedQuery.toLowerCase.trim
-    val cand = nq.split("\\s+").toSeq.map { w =>
+    val nq = TextMatch.normalizeQuery(normalizedQuery)
+    val cand = TextMatch.queryWords(nq).map { w =>
       postings
         .join(broadcast(dictionary.filter(col("word").contains(w))), Seq("word"))
         .select(col("universeId")).distinct()

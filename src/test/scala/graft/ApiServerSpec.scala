@@ -31,9 +31,9 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.afterAll()
   }
 
-  private def get(path: String): (Int, String) = {
+  private def get(path: String, at: String = base): (Int, String) = {
     val resp = client.send(
-      HttpRequest.newBuilder(URI.create(base + path)).GET().build(),
+      HttpRequest.newBuilder(URI.create(at + path)).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), resp.body())
   }
@@ -80,8 +80,8 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     * the requests bounds the count: the listener bus delivers events in
     * order, so once the barrier's start arrives every earlier job has been
     * counted. */
-  private def jobsRunBy(paths: Seq[String]): Int = {
-    assert(get("/stats")._1 === 200) // builds the snapshot if no earlier test did
+  private def jobsRunBy(paths: Seq[String], at: String = base): Int = {
+    assert(get("/stats", at)._1 === 200) // builds the snapshot if no earlier request did
     val sc = spark.sparkContext
     val barrierGroup = "api-spec-barrier"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -93,7 +93,7 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     sc.addSparkListener(listener)
     try {
-      for (path <- paths) assert(get(path)._1 === 200, path)
+      for (path <- paths) assert(get(path, at)._1 === 200, path)
       sc.setJobGroup(barrierGroup, "barrier")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(barrierSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
@@ -108,8 +108,18 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobsRunBy(Seq("/similar-search/42?limit=2", "/similar-search/999999123")) === 0)
   }
 
-  test("vector, games and stats requests run no Spark job once the snapshot is built") {
-    assert(jobsRunBy(Seq("/vector-search?q=spark%20engine&limit=5", "/games?limit=3", "/stats")) === 0)
+  test("every GET runs no Spark job and persists nothing once the snapshot is built") {
+    // a fresh server, so the snapshot build falls inside the persist check
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val fresh = new ApiServer(spark, SparkTestSession.Sf0001, port = 0)
+    val at = s"http://localhost:${fresh.start()}"
+    try {
+      assert(jobsRunBy(Seq("/vector-search?q=spark%20engine&limit=5", "/similar-search/42?limit=2",
+        "/search?q=merge&limit=2", "/search?q=nomatchxyz", "/search?q=table%20value&limit=5",
+        "/games?limit=3", "/stats"), at) === 0)
+      assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty)
+    } finally fresh.stop()
   }
 
   test("sequential requests on one connection do not wait out Nagle's algorithm") {
@@ -194,11 +204,9 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     ).toDF("universeId", "rootPlaceId", "name", "description", "gameplayDescription")
     val emb = Seq((1L, Array(0.1f))).toDF("universeId", "embedding")
     val svc = new graft.api.GameService(() => games, () => emb)
-    try {
-      val out = svc.stats()
-      assert(out.contains(""""gamesLackingDescriptions":2"""))
-      assert(out.contains(""""gamesLackingGameplayDescriptions":2"""))
-    } finally svc.release()
+    val out = svc.stats()
+    assert(out.contains(""""gamesLackingDescriptions":2"""))
+    assert(out.contains(""""gamesLackingGameplayDescriptions":2"""))
   }
 
   test("GET /jobs/:id for unknown id is the reference's failure envelope") {
@@ -208,10 +216,8 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("CLI service emits byte-identical envelopes to the HTTP layer") {
     // the CLI reuses GameService; spot-check equality through a fresh one
     val svc = graft.api.GameService.forDir(spark, SparkTestSession.Sf0001)
-    try {
-      assert(svc.stats() === get("/stats")._2)
-      assert(svc.gamesList(Some("3")) === get("/games?limit=3")._2)
-    } finally svc.release()
+    assert(svc.stats() === get("/stats")._2)
+    assert(svc.gamesList(Some("3")) === get("/games?limit=3")._2)
   }
 
   test("a reference-produced jobs.db serves through /jobs with the filter quirks intact") {

@@ -123,6 +123,21 @@ class DocsSpec extends AnyFunSuite {
         s"e2ebench workload) before it lands: ${hits.mkString(", ")}")
   }
 
+  test("the text-match cascade exists once, in the kernel file") {
+    // TextSearch once held two copies of the title → description →
+    // gameplayDescription cascade; the batch plans and the API's serving
+    // snapshot now call graft.functions.TextMatch. A match-type label as a
+    // Scala literal, or a `when(` over a title condition, rebuilds it
+    val needles = Seq("\"title\"".r, "when\\([^)]*(?i:title)".r)
+    val hits = for {
+      p <- scalaSources("src/main")
+      if p.getFileName.toString != "TextMatchExpressions.scala"
+      src = read(p.toString)
+      n <- needles if n.findFirstIn(src).isDefined
+    } yield s"${p.getFileName}: $n"
+    assert(hits.isEmpty, s"the match-type cascade outside the kernel: ${hits.mkString(", ")}")
+  }
+
   test("README's tools/ paragraph names every main under graft.tools") {
     // a one-shot study main that nothing runs must not land unannounced
     val readme = read("README.md").linesIterator.toSeq

@@ -71,13 +71,11 @@ class ImagesSpec extends AnyFunSuite {
       Files.write(Paths.get(dir, id.toString, s"$kind.png"), Array[Byte](1))
     }
     val svc = graft.api.GameService.forDir(spark, SparkTestSession.Sf0001, Some(dir))
-    try {
-      val stats = svc.stats()
-      // sf0.001 has 500 games; 499 lack icons, 498 lack nothing... compute:
-      // 2 games have icons -> 498 lacking; 1 has a thumbnail -> 499 lacking
-      assert(stats.contains(""""gamesLackingIcons":498"""))
-      assert(stats.contains(""""gamesLackingThumbnails":499"""))
-    } finally svc.release()
+    val stats = svc.stats()
+    // sf0.001 has 500 games; 499 lack icons, 498 lack nothing... compute:
+    // 2 games have icons -> 498 lacking; 1 has a thumbnail -> 499 lacking
+    assert(stats.contains(""""gamesLackingIcons":498"""))
+    assert(stats.contains(""""gamesLackingThumbnails":499"""))
   }
 
   test("/stats re-lists the blob store per call and counts a repeated blob once") {
@@ -89,14 +87,12 @@ class ImagesSpec extends AnyFunSuite {
     }
     assert(Images.listBlobs(spark, dir).count() === 2L)
     val svc = graft.api.GameService.forDir(spark, SparkTestSession.Sf0001, Some(dir))
-    try {
-      val stats = svc.stats()
-      assert(stats.contains(""""totalGames":500"""), stats)
-      assert(stats.contains(""""gamesLackingIcons":499"""), stats)
-      assert(stats.contains(""""gamesLackingThumbnails":500"""), stats)
-      // a blob written under the running service shows in the next call
-      Files.write(Paths.get(dir, "a", "123", "thumbnail.png"), Array[Byte](1))
-      assert(svc.stats().contains(""""gamesLackingThumbnails":499"""))
-    } finally svc.release()
+    val stats = svc.stats()
+    assert(stats.contains(""""totalGames":500"""), stats)
+    assert(stats.contains(""""gamesLackingIcons":499"""), stats)
+    assert(stats.contains(""""gamesLackingThumbnails":500"""), stats)
+    // a blob written under the running service shows in the next call
+    Files.write(Paths.get(dir, "a", "123", "thumbnail.png"), Array[Byte](1))
+    assert(svc.stats().contains(""""gamesLackingThumbnails":499"""))
   }
 }

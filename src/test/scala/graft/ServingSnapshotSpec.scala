@@ -2,22 +2,28 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.json4s.JArray
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{GameService, JsonEnvelope, ServingSnapshot}
-import graft.api.JsonEnvelope.{dataFrameToJson, ok}
+import graft.api.JsonEnvelope.ok
 import graft.enrich.StubEnrichmentClient
 import graft.functions.OracleParity.pround
-import graft.operators.Similarity
+import graft.operators.{Similarity, TextSearch}
 
 /** Differential check of [[ServingSnapshot]]: every endpoint it answers
   * gives the same envelope JSON as the Spark plan it replaced, on a
-  * fixture built to hit the edge cases and on sf0.001. */
+  * fixture built to hit the edge cases, on sf0.001 and on sf0.01. */
 class ServingSnapshotSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   private val display = ServingSnapshot.Display.map(col)
+
+  /** A small result as a JSON array of row objects, the rendering the
+    * API used when it answered from Spark plans. */
+  private def dataFrameToJson(df: DataFrame): JArray =
+    JArray(df.collect().toList.map(JsonEnvelope.rowToJson))
 
   /** The batch operators the snapshot mirrors, rendered the same way. */
   private final class SparkAnswers(games: DataFrame, emb: DataFrame) {
@@ -34,6 +40,13 @@ class ServingSnapshotSpec extends AnyFunSuite {
     private def ranked(scored: DataFrame, k: Int): String = ok(dataFrameToJson(
       scored.orderBy(desc("sim"), col("universeId")).limit(k)
         .select(display :+ pround(col("sim"), 2).as("similarity"): _*)))
+
+    def search(q: String, k: Int): String = Option(q.trim).filter(_.nonEmpty).fold(
+      JsonEnvelope.fail("Search query (q) is required")) { query =>
+      ok(dataFrameToJson(TextSearch.scoredSearch(games, query)
+        .orderBy(desc("score"), col("universeId")).limit(k)
+        .select(display :+ col("matchType") :+ pround(col("score"), 2).as("relevanceScore"): _*)))
+    }
 
     def gamesList(limit: Option[Int]): String = {
       val sorted = games.orderBy(lower(col("name")), col("name"), col("universeId"))
@@ -58,7 +71,9 @@ class ServingSnapshotSpec extends AnyFunSuite {
   }
 
   private def assertSame(svc: GameService, spark: SparkAnswers,
-      queries: Seq[String], targets: Seq[Long], ks: Seq[Int]): Unit = {
+      queries: Seq[String], targets: Seq[Long], ks: Seq[Int], searches: Seq[String]): Unit = {
+    for (q <- searches; k <- ks)
+      assert(svc.search(Some(q), Some(k.toString)) === spark.search(q, k), s"search q='$q' k=$k")
     for (q <- queries; k <- ks)
       assert(svc.vectorSearch(Some(q), Some(k.toString)) === spark.vectorSearch(q, k), s"q=$q k=$k")
     for (id <- targets; k <- ks)
@@ -87,7 +102,12 @@ class ServingSnapshotSpec extends AnyFunSuite {
       (Some(8L), 1008L, "lonely", "d", "g", Some(30L)),              // no embedding
       (Some(9L), 1009L, null, "d", "g", Some(70L)),
       (Some(12L), 1012L, "Zeta quest", "d", "g", Some(120L)),
-      (None, 9000L, "ghost", "d", "g", Some(5L))
+      (None, 9000L, "ghost", "d", "g", Some(5L)),                    // null id and id 13
+      (Some(13L), 1013L, "ghost", "d", "g", Some(5L)),               // tie on score
+      // context-sensitive lowering: İ gains a combining dot, a final Σ is ς
+      (Some(14L), 1014L, "İstanbul race", "Σ fan club", "ΟΔΟΣ run", Some(60L)),
+      (Some(15L), 1015L, "ΟΔΟΣ", null, "zeta zeta fan", Some(80L)),
+      (Some(16L), 1016L, "quiet", "   ", "only gameplay zeta", Some(20L))
     ).toDF("universeId", "rootPlaceId", "name", "description", "gameplayDescription",
       "playerCount")
     val emb = Seq[(Option[Long], Array[Float])](
@@ -105,22 +125,25 @@ class ServingSnapshotSpec extends AnyFunSuite {
       (Some(12L), vec()),
       (None, vec())
     ).toDF("universeId", "embedding")
-    val svc = new GameService(() => games, () => emb)
-    try {
-      assertSame(svc, new SparkAnswers(games, emb),
-        queries = Seq("spark engine", "obby", "Émile ünïcode"),
-        targets = Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L, 10L, 999L),
-        ks = Seq(1, 2, 5, 100))
-    } finally svc.release()
+    assertSame(new GameService(() => games, () => emb), new SparkAnswers(games, emb),
+      queries = Seq("spark engine", "obby", "Émile ünïcode"),
+      targets = Seq(1L, 3L, 4L, 5L, 6L, 7L, 8L, 10L, 999L),
+      ks = Seq(1, 2, 5, 100),
+      searches = Seq("zeta quest", "Zeta", "  Zeta quest  ", "zeta zeta", "quest zeta",
+        "émile", "ÉMILE", "İstanbul", "istanbul", "ΟΔΟΣ", "οδοσ", "σ", "σ fan", "ghost",
+        "dup", "gp", "only gameplay", "d", "a", "x", "nomatchxyz", " ", ""))
   }
 
-  test("snapshot answers equal the Spark plans on sf0.001") {
-    val dir = SparkTestSession.Sf0001
-    val svc = GameService.forDir(spark, dir)
-    try {
-      assertSame(svc, new SparkAnswers(graft.io.Tables.games(spark, dir),
-          graft.io.Tables.gameEmbeddings(spark, dir)),
-        queries = Seq("spark engine", "merge"), targets = Seq(42L, 1L, 500L), ks = Seq(3, 100))
-    } finally svc.release()
-  }
+  for (dir <- Seq(SparkTestSession.Sf0001, "/root/testdata/sf0.01"))
+    test(s"snapshot answers equal the Spark plans on ${dir.split('/').last}") {
+      val games = graft.io.Tables.games(spark, dir)
+      // the 25 commonest words of game names, plus the batch queries
+      val nameWords = games.select(explode(split(lower(col("name")), "\\s+")).as("w"))
+        .groupBy("w").count().orderBy(desc("count"), col("w")).limit(25)
+        .collect().map(_.getString(0)).toSeq
+      assertSame(GameService.forDir(spark, dir),
+        new SparkAnswers(games, graft.io.Tables.gameEmbeddings(spark, dir)),
+        queries = Seq("spark engine", "merge"), targets = Seq(42L, 1L, 500L), ks = Seq(3, 100),
+        searches = nameWords ++ Seq("merge", "table value", "spark engine", "the line"))
+    }
 }

@@ -81,6 +81,57 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("text-match kernel, interpreted and generated expression agree; f6 plans codegen'd") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.TextMatch
+    val text = (i: Int) => BoundReference(i, StringType, nullable = true)
+    val expr = TextMatch(text(0), text(1), text(2), text(3),
+      BoundReference(4, ArrayType(StringType, containsNull = false), nullable = true))
+    val generated = GenerateUnsafeProjection.generate(Seq(expr))
+    val rng = new scala.util.Random(5)
+    val tokens = Seq("ab", "ba", "a", "é", "σ", "ς", "i̇", "😀", "")
+    def phrase(): String =
+      Seq.fill(rng.nextInt(4))(tokens(rng.nextInt(tokens.length))).mkString(" ")
+    val random = Seq.fill(400)((phrase(), phrase(), phrase(), phrase()))
+    val edges = Seq(
+      ("", "", "", "ab"), ("", "", "", ""), ("ab ba", "", "", "ab ba"), ("ab ba", "", "", "ab"),
+      (null, "ab", "ab", "ab"), ("é σ", "σ é ς", "", "ς é"), ("x", "ab ab", "ba", "ab ab"),
+      ("x", "", "i̇ 😀", "😀 i̇"), ("x", "y", "z", "zz"))
+    val bits = java.lang.Double.doubleToLongBits _
+    def read(r: InternalRow) = Option(r).map(h => (h.getUTF8String(0).toString, bits(h.getDouble(1))))
+    (random ++ edges).foreach { case (n, d, g, q0) =>
+      val q = TextMatch.normalizeQuery(q0)
+      val Seq(nu, du, gu, qu) = Seq(n, d, g, q).map(UTF8String.fromString)
+      val words = ArrayData.toArrayData(TextMatch.queryWords(q).map(UTF8String.fromString).toArray)
+      val plain = Option(TextMatch.score(nu, du, gu, qu, words))
+        .map(h => (h.matchType.toString, bits(h.base)))
+      val row = InternalRow(nu, du, gu, qu, words)
+      assert(read(expr.eval(row).asInstanceOf[InternalRow]) === plain, (n, d, g, q))
+      val out = generated(row)
+      assert(read(if (out.isNullAt(0)) null else out.getStruct(0, 2)) === plain, (n, d, g, q))
+    }
+
+    // every f6 plan evaluates the expression inside whole-stage codegen
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val matching = (p: org.apache.spark.sql.execution.SparkPlan) =>
+      p.expressions.exists(_.exists(_.isInstanceOf[TextMatch]))
+    graft.operators.TextSearch.queries.foreach { case (name, q) =>
+      val df = q(spark, SparkTestSession.Sf0001)
+      df.collect() // settles the adaptive plan
+      val plan = df.queryExecution.executedPlan
+      val all = Aqe.collect(plan) { case p if matching(p) => p }
+      val codegend = Aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+        .flatMap(w => Aqe.collect(w.child) { case p if matching(p) => p })
+      assert(all.nonEmpty && all.forall(p => codegend.exists(_ eq p)), s"$name:\n$plan")
+    }
+  }
+
   test("driver-side pround equals the Column pround on NaN, signed zeros and half-cents") {
     import graft.functions.OracleParity.pround
     val edges = Seq(Double.NaN, 0.0, -0.0, 0.005, -0.005, 0.015, -0.015, 0.125, 0.135,
