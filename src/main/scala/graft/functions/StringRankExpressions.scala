@@ -25,8 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * shuffle). Comparison is [[UTF8String.compareTo]] — Spark's binary
   * UTF8 collation, the SAME ordering the stats fragments' `min(col)`/
   * `max(col)` and the read side's `>=`/`<=` use, so a layout produced
-  * here is exactly the layout [[graft.operators.Merge.readTableWhereStrings]]
-  * prunes best on.
+  * here is exactly the layout [[graft.operators.Merge.readTableWhere]]
+  * prunes best on with string bounds.
   */
 case class StringRankBucket(child: Expression, cuts: Array[UTF8String])
     extends UnaryExpression {

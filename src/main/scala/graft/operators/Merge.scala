@@ -5,6 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.io.{OracleViews, Tables}
 
+/** A committed manifest the lake cannot read: no `#format 2` line, no
+  * `#schema` line, or a bucket line without its file count and bytes.
+  * Every writer produces all three, so such a file was made or edited
+  * by something else; readers refuse it instead of guessing. */
+final class CorruptManifestException(message: String)
+  extends IllegalStateException(message)
+
 /** The reference's core merge-upsert (J1 family — reference:
   * src/lib/commands/gatherGames.ts:56-91 and variants at
   * gatherGamesRolimons.ts:220-257, gatherGamesFromSearch.ts:64-92):
@@ -141,11 +148,6 @@ object Merge {
   // writer methods drifted toward duplication as the lake surface grew)
   private def genPathOf(table: org.apache.hadoop.fs.Path, b: Int, g: Int) =
     new org.apache.hadoop.fs.Path(table, s"bucket=$b/gen=$g")
-  private def dirBytesOf(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).map(st =>
-      if (st.isDirectory) dirBytesOf(fs, st.getPath) else st.getLen).sum
 
   /** Per-round accounting of [[upsertIncrementalRounds]] — the evidence
     * for "rewritten bytes ∝ touched buckets, not table size". */
@@ -231,7 +233,7 @@ object Merge {
     val initialStats = initialBuckets.toSeq.flatMap(b =>
       statOfGenDir(fs, genPath(b, 0)).map(b -> _)).toMap
     commitManifest(fs, table, 0, initialBuckets.map(_ -> 0).toMap,
-      TableMeta(schema = Some(initial.schema)), initialStats)
+      TableMeta(schema = initial.schema), initialStats)
     freshRounds.map(fresh0 =>
       upsertRound(spark, tablePath, fresh0, key,
         overwriteCols, coalesceCols, keepCols, buckets, hooks, retainVersions))
@@ -253,7 +255,6 @@ object Merge {
     val hc = spark.sparkContext.hadoopConfiguration
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(hc)
-    def dirBytes(p: org.apache.hadoop.fs.Path): Long = dirBytesOf(fs, p)
     def genPath(b: Int, g: Int) = genPathOf(table, b, g)
     val (version, current) = readManifest(fs, table)
     val round = version + 1
@@ -275,9 +276,9 @@ object Merge {
     val touchedState = current.filter { case (b, _) => touchedSet.contains(b) }
     val existingTouched =
       (if (touchedState.nonEmpty)
-        loadState(spark, tablePath, touchedState, meta0.schema, mapping)
+        loadState(spark, tablePath, meta0, genDirs(touchedState))
       else // all-new buckets: typed empty frame under the committed schema
-        loadState(spark, tablePath, current, meta0.schema, mapping).limit(0))
+        loadState(spark, tablePath, meta0, genDirs(current)).limit(0))
         .drop("bucket", "gen")
     // SCHEMA EVOLUTION: a batch may carry columns the table predates —
     // pad the existing side with typed nulls so the merge policies see
@@ -327,39 +328,25 @@ object Merge {
     val newStats: Map[Int, BucketStat] = touched.flatMap(b =>
       statOfGenDir(fs, genPath(b, gen)).map(b -> _)).toMap
     val rewritten = newStats.values.map(_.bytes).sum
+    // the schema this round commits; the new generation is read back
+    // under it for its fragments
+    val metaNew = meta0.copy(schema = mergedData.schema)
     // maintain the skipping sidecars for the NEW generation only (verdict
     // r13 #5 — point/range reads stay pruned between clustered rewrites);
     // gen labels are write-once per attempt, so fragment writes are
     // race-free even before the commit decides
     val fragInfo = labeled(spark, "merge:gen-fragments") {
       writeGenFragments(spark, tablePath, table, gen,
-        touched.filter(newStats.contains).map(b => genPath(b, gen).toString),
-        meta0)
+        touched.filter(newStats.contains), metaNew)
     }
     hooks.beforeCommit(round)
-    // carry-over gens a pre-round-15 writer committed get their #frag
-    // lines recorded in this round's manifest (round-16: migration is
-    // automatic at the next write, not a manual refreshFragments call);
-    // same for carried buckets a pre-round-16 manifest committed without
-    // per-bucket stats — measured once here, recorded forever
-    val adopted = labeled(spark, "merge:adopt-legacy") {
-      adoptLegacyFrags(spark, fs, table, current, meta0.frags)
-    }
-    val stats0 = readBucketStatsAt(fs, table, version)
-    val adoptedStats = adoptLegacyBucketStats(fs, table,
-      current.filter { case (b, _) => !touched.contains(b) }, stats0)
-    val meta = meta0.copy(schema = Some(mergedData.schema),
-      frags = meta0.frags ++ adopted ++ fragInfo.map(gen -> _))
-    val (committedVersion, committed, statsAll) = commitWithRetry(fs, table,
+    val meta = metaNew.copy(frags = meta0.frags ++ fragInfo.map(gen -> _))
+    val (committedVersion, statsAll) = commitWithRetry(fs, table,
       round, current, touched.map(_ -> gen).toMap, meta,
-      carriedStats = stats0 ++ adoptedStats, newStats = newStats,
-      adoptedStats = adoptedStats)
+      carriedStats = readBucketStatsAt(fs, table, version), newStats = newStats)
     hooks.afterCommit(committedVersion)
     sweepRetention(fs, table, committedVersion, retainVersions, meta.takedownGrace)
-    // manifest-served; a bucket only a stats-less legacy writer committed
-    // (possible across a mixed-version race) falls back to one listing
-    val tableBytes = committed.map { case (b, g) =>
-      statsAll.get(b).map(_.bytes).getOrElse(dirBytes(genPath(b, g))) }.sum
+    val tableBytes = statsAll.values.map(_.bytes).sum
     // AUTO-COMPACT (round 16 — Delta's auto-OPTIMIZE, the policy the
     // manifest stats make free): the dial decision reads the stats map
     // this commit just produced — ZERO FS calls when every bucket is
@@ -439,14 +426,6 @@ object Merge {
     fragmentGens(fs, table)
       .filter { case (_, g) => referencedGens.contains(g) && !liveGens.contains(g) }
       .foreach { case (p, _) => fs.delete(p, true) }
-    // legacy (pre-format-2) per-version sidecar FILES expire with their
-    // manifests, same as before the metadata moved into the manifest
-    Seq("stats-v", "bloom-v", "schema-v", "mapping-v").foreach { prefix =>
-      fs.listStatus(manifestDir(table)).map(_.getPath)
-        .filter(p => p.getName.startsWith(prefix) &&
-          p.getName.stripPrefix(prefix).toInt < keepFrom)
-        .foreach(p => fs.delete(p, true))
-    }
   }
 
   /** Every skipping-sidecar fragment under `_manifests`, with the
@@ -455,7 +434,7 @@ object Merge {
       fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path)
       : Seq[(org.apache.hadoop.fs.Path, Int)] =
     fs.listStatus(manifestDir(table)).map(_.getPath).toSeq.flatMap { p =>
-      Seq("statsg-", "bloomg-", "bloomgmeta-", "genmark-")
+      Seq("statsg-", "bloomg-", "genmark-")
         .find(p.getName.startsWith)
         .map(prefix => p -> p.getName.stripPrefix(prefix).toInt)
     }
@@ -558,82 +537,44 @@ object Merge {
     val meta0 = readMetaAt(fsys, table, version)
     // TRUE deletes; NULL keeps (coalesce pins the three-valued boundary)
     val delPred = coalesce(predicate, lit(false))
-    val hit = loadState(spark, tablePath, current, meta0.schema, meta0.mapping)
-      .filter(delPred)
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val hit = rowsPerBucket(
+      loadState(spark, tablePath, meta0, genDirs(current)).filter(delPred))
     deleteCommit(spark, tablePath, table, fsys, version, current, meta0,
       delPred, hit, retainVersions, takedownGraceVersions, hooks,
       autoCompactAtFiles)
   }
 
+  private def rowsPerBucket(df: DataFrame): Map[Int, Long] =
+    df.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
   /** KEY-BASED TAKEDOWN — [[deleteWhere]] specialized to `column IN (values)`,
-    * the shape takedown requests actually have, with the FIND phase served
-    * through the Bloom fragments: instead of scanning the whole table to name
-    * the touched buckets (the `del_s` growth measured by
-    * graft.tools.DeleteScale @ c6e9ec7 at ×100 — the scan, not the rewrite, was
-    * the growing term), [[pointProbe]] opens only the files whose filter fires.
-    * No false negatives means the candidate set provably covers every matching
-    * row; tables without fragments fall back to the plain predicate scan —
+    * the shape takedown requests actually have (numeric ids as often as
+    * URL / content-hash strings), with the FIND phase served through the
+    * Bloom fragments: instead of scanning the whole table to name the
+    * touched buckets (the `del_s` growth measured by
+    * graft.tools.DeleteScale @ c6e9ec7 at ×100 — the scan, not the rewrite,
+    * was the growing term), [[pointProbe]] opens only the files whose filter
+    * fires. No false negatives means the candidate set provably covers every
+    * matching row; generations without fragments are scanned whole —
     * pruning is an optimization, never a correctness dependency. The rewrite
     * and commit are [[deleteWhere]]'s exactly (strict OCC, grace policy,
     * fragments for the new generation). */
   def deleteKeys(spark: SparkSession, tablePath: String, column: String,
-      values: Seq[Long], retainVersions: Int = 1,
+      values: Seq[Any], retainVersions: Int = 1,
       takedownGraceVersions: Int = Int.MaxValue,
       hooks: IncHooks = IncHooks.none,
       autoCompactAtFiles: Option[Int] = None): DeleteStats = {
     require(values.nonEmpty, "deleteKeys needs at least one value")
-    deleteKeysCore(spark, tablePath,
-      col(column).isin(values.map(java.lang.Long.valueOf): _*),
-      () => pointProbe(spark, tablePath, column, values),
-      retainVersions, takedownGraceVersions, hooks, autoCompactAtFiles)
-  }
-
-  /** [[deleteKeys]] for STRING keys (round 16): takedown requests are as
-    * often URL / content-hash / domain shaped as numeric-id shaped; the
-    * find phase rides the same Bloom fragments (built over the column's
-    * native values) through [[pointProbeStrings]], and the rewrite/commit
-    * tail is [[deleteKeys]]'s exactly. */
-  def deleteKeysStrings(spark: SparkSession, tablePath: String, column: String,
-      values: Seq[String], retainVersions: Int = 1,
-      takedownGraceVersions: Int = Int.MaxValue,
-      hooks: IncHooks = IncHooks.none,
-      autoCompactAtFiles: Option[Int] = None): DeleteStats = {
-    require(values.nonEmpty, "deleteKeysStrings needs at least one value")
-    deleteKeysCore(spark, tablePath, col(column).isin(values: _*),
-      () => pointProbeStrings(spark, tablePath, column, values),
-      retainVersions, takedownGraceVersions, hooks, autoCompactAtFiles)
-  }
-
-  private def deleteKeysCore(spark: SparkSession, tablePath: String,
-      pred: Column, probe: () => PointProbeReport, retainVersions: Int,
-      takedownGraceVersions: Int, hooks: IncHooks,
-      autoCompactAtFiles: Option[Int] = None): DeleteStats = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fsys = fs(spark, table)
     val (version, current) = readManifest(fsys, table)
     val meta0 = readMetaAt(fsys, table, version)
-    val delPred = coalesce(pred, lit(false))
-    val report = probe()
-    val hit: Map[Int, Long] =
-      if (report.prunedGens == 0)
-        // no usable fragments anywhere: the plain predicate scan
-        loadState(spark, tablePath, current, meta0.schema, meta0.mapping)
-          .filter(delPred).groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      else if (report.relPaths.isEmpty) Map.empty
-      else {
-        val direct = spark.read.option("basePath", tablePath)
-          .parquet(report.relPaths.map(rel => s"$tablePath/$rel"): _*)
-        meta0.mapping.foldLeft(direct) { case (d, (logical, physical)) =>
-          if (logical != physical && d.columns.contains(physical))
-            d.withColumnRenamed(physical, logical)
-          else d
-        }.filter(delPred)
-          .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      }
+    val delPred = coalesce(col(column).isin(values: _*), lit(false))
+    val kept = probeFiles(spark, tablePath, current, meta0, column, values).relPaths
+    val hit =
+      if (kept.isEmpty) Map.empty[Int, Long]
+      else rowsPerBucket(loadState(spark, tablePath, meta0, kept).filter(delPred))
     deleteCommit(spark, tablePath, table, fsys, version, current, meta0,
       delPred, hit, retainVersions, takedownGraceVersions, hooks,
       autoCompactAtFiles)
@@ -650,15 +591,13 @@ object Merge {
       autoCompactAtFiles: Option[Int] = None): DeleteStats = {
     if (hit.isEmpty) return DeleteStats(version, 0, 0L)
     val round = version + 1
-    val schema = meta0.schema
-    val mapping = meta0.mapping
     val touched = hit.keys.toSeq.sorted
     val deletedRows = hit.values.sum
     val touchedEntries = current.filter { case (b, _) => touched.contains(b) }
     val gen = freshGenFor(fs, table, round)
     toPhysical(
-      loadState(spark, tablePath, touchedEntries, schema, mapping)
-        .filter(!delPred).drop("gen").withColumn("gen", lit(gen)), mapping)
+      loadState(spark, tablePath, meta0, genDirs(touchedEntries))
+        .filter(!delPred).drop("gen").withColumn("gen", lit(gen)), meta0.mapping)
       .write.mode("append").partitionBy("bucket", "gen").parquet(tablePath)
     // a fully-deleted bucket writes no dir and leaves the manifest; the
     // presence check and the stats measurement are the same one listing
@@ -666,39 +605,26 @@ object Merge {
       statOfGenDir(fs, genPathOf(table, b, gen)).map(b -> _)).toMap
     val present = touched.filter(newStats.contains)
     val rewritten = newStats.values.map(_.bytes).sum
-    val fragInfo = writeGenFragments(spark, tablePath, table, gen,
-      present.map(b => genPathOf(table, b, gen).toString), meta0)
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      loadState(spark, tablePath, touchedEntries, schema, mapping)
-        .drop("bucket", "gen").schema.fields)
+    val fragInfo = writeGenFragments(spark, tablePath, table, gen, present, meta0)
     // the grace policy persists in the manifest once set, so every later
     // writer's retention sweep honors it (verdict r13 #7)
     val grace =
       if (takedownGraceVersions == Int.MaxValue) meta0.takedownGrace
       else Some(meta0.takedownGrace.fold(takedownGraceVersions)(
         math.min(_, takedownGraceVersions)))
-    val meta = meta0.copy(schema = Some(schema.getOrElse(dataSchema)),
-      takedownGrace = grace,
-      frags = meta0.frags ++
-        adoptLegacyFrags(spark, fs, table, current, meta0.frags) ++
-        fragInfo.map(gen -> _))
+    val meta = meta0.copy(takedownGrace = grace,
+      frags = meta0.frags ++ fragInfo.map(gen -> _))
     hooks.beforeCommit(round)
-    val stats0 = readBucketStatsAt(fs, table, version)
-    val adoptedStats = adoptLegacyBucketStats(fs, table,
-      current.filter { case (b, _) => !touched.contains(b) }, stats0)
     // strict: a predicate delete's read set is the whole table (ADVICE
     // r13 #3) — any concurrent bucket change conflicts, never auto-merged
-    val (committedVersion, committed, statsAll) = commitWithRetry(fs, table,
+    val (committedVersion, statsAll) = commitWithRetry(fs, table,
       round, current, present.map(_ -> gen).toMap, meta,
       removedBuckets = touched.filterNot(present.contains),
       strict = true,
-      carriedStats = stats0 ++ adoptedStats, newStats = newStats,
-      adoptedStats = adoptedStats)
+      carriedStats = readBucketStatsAt(fs, table, version), newStats = newStats)
     hooks.afterCommit(committedVersion)
     sweepRetention(fs, table, committedVersion, retainVersions, meta.takedownGrace)
-    val tableBytes = committed.map { case (b, g) =>
-      statsAll.get(b).map(_.bytes)
-        .getOrElse(dirBytesOf(fs, genPathOf(table, b, g))) }.sum
+    val tableBytes = statsAll.values.map(_.bytes).sum
     // same dial as upsertRound's (round 16): the delete's rewrite reads
     // the touched buckets' prior files whole, so its write width is the
     // READ's partition count — a wide bucket stays wide across takedowns
@@ -716,14 +642,9 @@ object Merge {
   }
 
   /** Per-bucket accounting of [[compact]] — files before/after, so the
-    * small-file claim is a measurement. `statListings` counts the
-    * per-bucket listStatus fallbacks the PLANNING phase paid: 0 on a
-    * table whose manifest carries per-bucket stats (round 16 — planning
-    * is a driver-memory read), one per bucket a pre-round-16 writer
-    * committed without them (measured once, recorded at this commit). */
+    * small-file claim is a measurement. */
   final case class CompactStats(
-      version: Int, buckets: Int, filesBefore: Long, filesAfter: Long,
-      statListings: Long = 0L)
+      version: Int, buckets: Int, filesBefore: Long, filesAfter: Long)
 
   /** OPTIMIZE / small-file compaction: rewrite every committed bucket
     * whose gen dir holds more than `targetFiles` data files into a single
@@ -754,58 +675,46 @@ object Merge {
     val (version, current) = readManifest(fs, table)
     val round = version + 1
     // PLANNING is a manifest read (round 16): per-bucket file counts ride
-    // the bucket lines, so naming the oversized buckets costs zero FS
-    // calls on a stats-bearing table; buckets a pre-round-16 writer
-    // committed without stats are measured once here and recorded at this
-    // commit (the same one-write-round migration as fragment adoption)
+    // the bucket lines, so naming the oversized buckets costs zero FS calls
     val stats0 = readBucketStatsAt(fs, table, version)
-    val measured = scala.collection.mutable.Map.empty[Int, BucketStat]
-    def statOf(b: Int, g: Int): BucketStat =
-      stats0.getOrElse(b, measured.getOrElseUpdate(b,
-        statOfGenDir(fs, genPath(b, g)).getOrElse(BucketStat(0L, 0L))))
     // onlyAboveFiles decouples the SELECTION dial from the rewrite
     // target: the auto-compact policy rewrites only dial-crossing
     // offenders, but rewrites them all the way down to `targetFiles`
     val threshold = onlyAboveFiles.getOrElse(targetFiles)
-    val oversized = current.filter { case (b, g) => statOf(b, g).files > threshold }
-    val filesBefore = current.map { case (b, g) => statOf(b, g).files }.sum
+    val oversized = current.filter { case (b, _) => stats0(b).files > threshold }
+    val filesBefore = stats0.values.map(_.files).sum
     if (oversized.isEmpty) // already compact — don't burn a version
-      return CompactStats(version, 0, filesBefore, filesBefore, measured.size.toLong)
-    val gen = freshGenFor(fs, table, round)
-    labeled(spark, "compact:rewrite") {
-      oversized.toSeq.sorted.foreach { case (b, g) =>
-        spark.read.option("basePath", tablePath).parquet(s"$tablePath/bucket=$b/gen=$g")
-          .drop("bucket", "gen").coalesce(targetFiles)
-          .write.parquet(genPath(b, gen).toString)
-      }
-    }
-    val newStats: Map[Int, BucketStat] = oversized.keys.toSeq.flatMap(b =>
-      statOfGenDir(fs, genPath(b, gen)).map(b -> _)).toMap
+      return CompactStats(version, 0, filesBefore, filesBefore)
     // layout-only version: schema, mapping, and sidecar policy carry
     // forward unchanged; the compacted generation gets fresh fragments so
     // skipping reads stay pruned across an OPTIMIZE
     val meta0 = readMetaAt(fs, table, version)
+    val gen = freshGenFor(fs, table, round)
+    val rewrittenBuckets = oversized.keys.toSeq.sorted
+    labeled(spark, "compact:rewrite") {
+      rewrittenBuckets.foreach { b =>
+        toPhysical(loadState(spark, tablePath, meta0, genDirs(Map(b -> oversized(b))))
+          .drop("bucket", "gen"), meta0.mapping)
+          .coalesce(targetFiles).write.parquet(genPath(b, gen).toString)
+      }
+    }
+    val newStats: Map[Int, BucketStat] = rewrittenBuckets.flatMap(b =>
+      statOfGenDir(fs, genPath(b, gen)).map(b -> _)).toMap
     val fragInfo = writeGenFragments(spark, tablePath, table, gen,
-      oversized.keys.toSeq.sorted.map(b => genPath(b, gen).toString), meta0)
-    val meta = meta0.copy(frags = meta0.frags ++
-      adoptLegacyFrags(spark, fs, table, current, meta0.frags) ++
-      fragInfo.map(gen -> _))
+      rewrittenBuckets, meta0)
+    val meta = meta0.copy(frags = meta0.frags ++ fragInfo.map(gen -> _))
     // OCC with benign-retry (ADVICE r16 #1): a concurrent DISJOINT-bucket
     // writer landing between this planning read and the commit is merged
     // like any merge round's — compaction only claims the buckets it
     // rewrote. A winner that rewrote one of the OVERSIZED buckets is a
     // real conflict (this rewrite's input is stale) and still throws.
     hooks.beforeCommit(round)
-    val (committedVersion, committedAll, statsAll) = commitWithRetry(fs, table,
+    val (committedVersion, statsAll) = commitWithRetry(fs, table,
       round, current, oversized.keys.map(_ -> gen).toMap, meta,
-      carriedStats = stats0 ++ measured, newStats = newStats,
-      adoptedStats = measured.toMap)
+      carriedStats = stats0, newStats = newStats)
     sweepRetention(fs, table, committedVersion, retainVersions, meta.takedownGrace)
-    // keysIterator, NOT keys.map — a Set would dedup equal counts
-    val filesAfter = committedAll.keysIterator.map(b =>
-      statsAll.get(b).map(_.files).getOrElse(0L)).sum
-    CompactStats(committedVersion, oversized.size, filesBefore, filesAfter,
-      measured.size.toLong)
+    CompactStats(committedVersion, oversized.size, filesBefore,
+      statsAll.values.map(_.files).sum)
   }
 
   /** OPTIMIZE-with-clustering (the ZORDER analogue for one dimension):
@@ -844,7 +753,7 @@ object Merge {
     * second predicate scans everything). Same manifest-committed
     * layout-only rewrite as [[cluster]] — `j1_merge_skipping_z` shares
     * the merge oracle with a two-predicate WHERE. The per-file sidecar
-    * records min/max for every `zCols` member; [[readTableWhereAll]]
+    * records min/max for every `zCols` member; [[readTableWhere]]
     * prunes on their conjunction. Cost = one range-normalization agg
     * (k columns' global min/max, one row) + the same one-shuffle rewrite
     * and stats pass as one-dimension clustering. */
@@ -858,8 +767,8 @@ object Merge {
     // arithmetic — a string domain has no usable span (URL/domain values
     // cluster in a hair-thin lexicographic band), but its RANK is
     // uniform by construction. Round 16 made the READ side string-typed
-    // (readTableWhereStrings / pointProbeStrings); this closes the
-    // write side: a table can now be Z-LAID-OUT for the takedown-shaped
+    // (string bounds in readTableWhere, string keys in pointProbe); this
+    // closes the write side: a table can now be Z-LAID-OUT for the takedown-shaped
     // string predicates it already knows how to prune.
     val isStr = zCols.map(c =>
       c -> (current.schema(c).dataType ==
@@ -966,26 +875,17 @@ object Merge {
     val (version, current) = readManifest(fs, table)
     val round = version + 1
     val gen = freshGenFor(fs, table, round)
-    // before-counts from the manifest's per-bucket stats; one listing per
-    // legacy (stats-less) bucket only
-    val stats0 = readBucketStatsAt(fs, table, version)
-    var planListed = 0L
-    val filesBefore = current.map { case (b, g) =>
-      stats0.get(b).map(_.files).getOrElse {
-        planListed += 1
-        statOfGenDir(fs, genPath(b, g)).fold(0L)(_.files) } }.sum
+    // before-counts from the manifest's per-bucket stats
+    val filesBefore = readBucketStatsAt(fs, table, version).values.map(_.files).sum
     val meta0 = readMetaAt(fs, table, version)
-    val mapping = meta0.mapping
     labeled(spark, "cluster:rewrite-write") {
       toPhysical(
-        loadState(spark, tablePath, current, meta0.schema,
-          mapping).drop("gen")
+        loadState(spark, tablePath, meta0, genDirs(current)).drop("gen")
           .repartitionByRange(current.size * filesPerBucket,
             col("bucket") +: sortKeys: _*)
-          .withColumn("gen", lit(gen)), mapping)
+          .withColumn("gen", lit(gen)), meta0.mapping)
         .write.mode("append").partitionBy("bucket", "gen").parquet(tablePath)
     }
-    val genPaths = current.keys.toSeq.sorted.map(b => s"$tablePath/bucket=$b/gen=$gen")
     // the clustered rewrite DEFINES the table's sidecar policy: these
     // columns' fragments are maintained by every later writer's new
     // generation (round-13 verdict #5 — the sidecar no longer dies at the
@@ -995,7 +895,8 @@ object Merge {
     // age-gated vacuum, never readable (ADVICE r13 #1's second half).
     val metaPolicy = meta0.copy(statsCols = statCols, bloomCols = bloomCols)
     val fragInfo = labeled(spark, "cluster:gen-fragments") {
-      writeGenFragments(spark, tablePath, table, gen, genPaths, metaPolicy)
+      writeGenFragments(spark, tablePath, table, gen, current.keys.toSeq.sorted,
+        metaPolicy)
     }
     val meta = metaPolicy.copy(frags = metaPolicy.frags ++ fragInfo.map(gen -> _))
     val committed = current.keys.map(_ -> gen).toMap
@@ -1006,14 +907,15 @@ object Merge {
     commitManifest(fs, table, round, committed, meta, newStats)
     sweepRetention(fs, table, round, retainVersions, meta.takedownGrace)
     val filesAfter = newStats.values.map(_.files).sum
-    CompactStats(round, committed.size, filesBefore, filesAfter, planListed)
+    CompactStats(round, committed.size, filesBefore, filesAfter)
   }
 
   // -------------------------------------------------------------------
   // SKIPPING-SIDECAR FRAGMENTS (round-14): min/max stats and Bloom
   // filters are written PER GENERATION (`_manifests/statsg-<gen>`,
-  // `bloomg-<gen>`), not per version. Two structural wins over the
-  // round-13 per-version sidecars:
+  // `bloomg-<gen>`), not per version, and the manifest that commits a
+  // generation records its fragment layout as a `#frag` line (round 15).
+  // Two structural wins over the round-13 per-version sidecars:
   //   - CONCURRENCY-SAFE BY CONSTRUCTION: gen labels are write-once per
   //     attempt, so no two writers can ever collide on a fragment name —
   //     the ADVICE r13 #1 race (a losing clusterRewrite's sidecar
@@ -1021,49 +923,38 @@ object Merge {
   //     cannot exist.
   //   - INCREMENTAL MAINTENANCE (round-13 verdict #5): a merge round,
   //     delete, or compaction writes fragments for ITS new generation
-  //     only (cost ∝ the change), and a read prunes per generation —
-  //     files in a generation without fragments are simply kept
-  //     (pruning degrades gracefully instead of dying table-wide at the
-  //     first post-cluster version).
+  //     only (cost ∝ the change), and a read prunes per generation — a
+  //     generation without a `#frag` entry has no fragment and is read
+  //     whole (pruning degrades gracefully instead of dying table-wide at
+  //     the first post-cluster version).
   // Fragments store TABLE-RELATIVE file paths (ADVICE r11 #2) and every
   // kept file is validated against the manifest's (bucket, gen) entries
   // before any I/O — a fragment can never route a read to a file the
   // committed version does not own.
-  //
-  // LEGACY NOTE (ADVICE r14 #3): pre-round-14 tables carry per-VERSION
-  // `stats-v`/`bloom-v` sidecars that no reader consults anymore — those
-  // tables read correctly but unpruned until either a clusterRewrite or
-  // (cheaper — no data rewrite) one [[refreshFragments]] call backfills
-  // per-generation fragments. Round-14 tables' on-disk fragments keep
-  // working through the FS-probe fallback, and refreshFragments adopts
-  // them into the manifest so reads stop paying the per-gen probes.
   // -------------------------------------------------------------------
 
   private def fragStatsPath(table: org.apache.hadoop.fs.Path, gen: Int) =
     new org.apache.hadoop.fs.Path(manifestDir(table), s"statsg-$gen")
   private def fragBloomPath(table: org.apache.hadoop.fs.Path, gen: Int) =
     new org.apache.hadoop.fs.Path(manifestDir(table), s"bloomg-$gen")
-  private def fragBloomMetaPath(table: org.apache.hadoop.fs.Path, gen: Int) =
-    new org.apache.hadoop.fs.Path(manifestDir(table), s"bloomgmeta-$gen")
 
   /** Write the stats and/or Bloom fragments for one freshly-written
-    * generation (no-op when the table has no sidecar policy). One read of
-    * the new generation's files feeds both aggregations — the write-time
-    * price of read-time skipping, now priced ∝ the generation instead of
-    * the table. Returns the generation's [[FragInfo]] for the caller to
-    * embed in its manifest commit (round-15: reads learn fragment layout
-    * from the manifest, not per-gen FS probes). */
+    * generation's `buckets` (no-op when the table has no sidecar policy).
+    * The generation is read back under `meta`'s schema — the one its
+    * writer commits — and one read feeds both aggregations: the
+    * write-time price of read-time skipping, priced ∝ the generation
+    * instead of the table. Returns the generation's [[FragInfo]] for the
+    * caller to embed in its manifest commit. */
   private def writeGenFragments(spark: SparkSession, tablePath: String,
-      table: org.apache.hadoop.fs.Path, gen: Int, genPaths: Seq[String],
+      table: org.apache.hadoop.fs.Path, gen: Int, buckets: Seq[Int],
       meta: TableMeta): Option[FragInfo] = {
-    if (genPaths.isEmpty || (meta.statsCols.isEmpty && meta.bloomCols.isEmpty))
+    if (buckets.isEmpty || (meta.statsCols.isEmpty && meta.bloomCols.isEmpty))
       return None
-    def phys(c: String) = meta.mapping.getOrElse(c, c)
-    val data = spark.read.option("basePath", tablePath).parquet(genPaths: _*)
+    val data = loadState(spark, tablePath, meta, buckets.map(b => s"bucket=$b/gen=$gen"))
     def fileKey = regexp_extract(input_file_name(), "bucket=.*$", 0).as("file")
     if (meta.statsCols.nonEmpty) {
       val aggs = meta.statsCols.flatMap(c =>
-        Seq(min(col(phys(c))).as(s"min_$c"), max(col(phys(c))).as(s"max_$c")))
+        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
       // one row per file of THIS generation — manifest-order small
       labeled(spark, "frag:stats-write") {
         data.groupBy(fileKey).agg(aggs.head, aggs.tail: _*)
@@ -1088,44 +979,24 @@ object Merge {
       // row groups; partition count scales with the fragment's rows
       val parts = math.max(1L, math.min(512L, totalRows / 4 / 1000000L)).toInt
       labeled(spark, "frag:bloom-write") {
-        meta.bloomCols.map { lc =>
-          data.select(fileKey, col(phys(lc)).as("v")).where(col("v").isNotNull)
+        meta.bloomCols.map { c =>
+          data.select(fileKey, col(c).as("v")).where(col("v").isNotNull)
             .select(col("file"), explode(array((0 until BloomHashes).map(i =>
               pmod(xxhash64(col("v"), lit(i)), lit(m))): _*)).as("pos"))
             .groupBy(col("file"), (col("pos") / 64).cast("long").as("word_idx"))
             .agg(expr("bit_or(shiftleft(1L, cast(pos % 64 as int)))").as("bits"))
-            .select(col("file"), lit(lc).as("col"), col("word_idx"), col("bits"))
+            .select(col("file"), lit(c).as("col"), col("word_idx"), col("bits"))
         }.reduce(_ unionByName _)
           .repartitionByRange(parts, col("col"), col("word_idx"))
           .sortWithinPartitions(col("col"), col("word_idx"))
           .write.mode("overwrite").parquet(fragBloomPath(table, gen).toString)
       }
-      // fragment header (driver-readable without a Spark job): the bit
-      // width and covered columns the probe needs BEFORE the heavy scan
-      val out = fs(spark, table).create(fragBloomMetaPath(table, gen), true)
-      try out.write(s"m=$m\ncols=${meta.bloomCols.mkString(",")}\n"
-        .getBytes("UTF-8"))
-      finally out.close()
       Some(FragInfo(meta.statsCols, m, meta.bloomCols))
     }
   }
 
   private def fs(spark: SparkSession, table: org.apache.hadoop.fs.Path) =
     table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The generation's bloom-fragment header: (m, covered columns). */
-  private def readBloomMeta(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[(Long, Seq[String])] = {
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    val kv = text.linesIterator.filter(_.contains('=')).map { l =>
-      val i = l.indexOf('='); l.take(i) -> l.drop(i + 1)
-    }.toMap
-    kv.get("m").map(m => (m.trim.toLong,
-      kv.get("cols").map(_.split(',').toSeq).getOrElse(Seq.empty)))
-  }
 
   /** Parse a fragment's table-relative file path into (bucket, gen);
     * None when it is not of the expected shape. */
@@ -1137,99 +1008,121 @@ object Merge {
     }
   }
 
-  /** DATA-SKIPPING read: `clusterCol BETWEEN lo AND hi` served through the
-    * current version's per-file stats sidecar — only files whose
-    * [min, max] intersects the range are opened (NULL rows never match a
-    * BETWEEN, so null-stats files prune too). Falls back to the plain
-    * manifest read when the current version has no sidecar (any merge
-    * round after the last [[cluster]] invalidates it by committing a new
-    * version) — pruning is an optimization, never a correctness
-    * dependency, which is exactly what lets `j1_merge_skipping` share the
-    * merge CTEs' oracle with a WHERE clause. */
+  /** A committed state's generations, ascending, each with its buckets. */
+  private def byGen(state: Map[Int, Int]): Seq[(Int, Seq[Int])] =
+    state.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (g, entries) => g -> entries.keys.toSeq.sorted }
+
+  /** The ONE keep decision's output: the table-relative paths a pruned
+    * read opens, and how many generations a fragment pruned. A generation
+    * absent from `fragmentKept` is read whole; a pruned one contributes
+    * exactly its kept files. A fragment can never route the read outside
+    * the committed version: a malformed path falls its generation back to
+    * whole, and an entry whose bucket has since been rewritten at a NEWER
+    * gen is dropped — that bucket's rows live in the newer generation,
+    * covered by its own piece of this loop. */
+  private def keptPaths(state: Map[Int, Int], fragmentKept: Map[Int, Seq[String]])
+      : (Seq[String], Int) = {
+    var pruned = 0
+    val paths = byGen(state).flatMap { case (g, buckets) =>
+      val whole = buckets.map(b => s"bucket=$b/gen=$g")
+      fragmentKept.get(g) match {
+        case Some(keep) if keep.forall(rel => parseRelFile(rel).nonEmpty) =>
+          pruned += 1
+          keep.filter(rel => parseRelFile(rel).exists {
+            case (b, g2) => g2 == g && state.get(b).contains(g) })
+        case _ => whole
+      }
+    }
+    (paths, pruned)
+  }
+
+  /** The shared tail of every pruned read: the kept paths under the
+    * committed schema, filtered by `pred`; nothing kept reads as the
+    * committed state's empty frame (same columns, no file opened). */
+  private def readKept(spark: SparkSession, tablePath: String,
+      state: Map[Int, Int], meta: TableMeta, kept: Seq[String],
+      pred: Column): DataFrame =
+    (if (kept.isEmpty) loadState(spark, tablePath, meta, genDirs(state)).limit(0)
+     else loadState(spark, tablePath, meta, kept)).filter(pred)
+
+  /** DATA-SKIPPING read: the conjunction of `column BETWEEN lo AND hi`
+    * ranges, served through the committed generations' per-file stats
+    * fragments — only files whose [min, max] intersects every covered
+    * range are opened (NULL stats make the conjunction NULL, so all-null
+    * files prune too, matching a BETWEEN's null semantics). Bounds may be
+    * numeric or string, mixed freely in one decision (the takedown-audit
+    * shape `name BETWEEN … AND playerCount BETWEEN …`): string stats hold
+    * each file's FULL min/max value and both sides compare in Spark's
+    * binary UTF8 order, the same `>=`/`<=` the data filter uses, so
+    * pruning can never disagree with filtering. A range on a column
+    * without stats (not in the last cluster's `statCols`) filters but
+    * does not prune — a lake reader's rule, and what makes the
+    * one-dimension layout an honest control for the Z-order gate.
+    * Generations without stats are read whole — pruning is an
+    * optimization, never a correctness dependency, which is what lets
+    * the `j1_merge_skipping*` gates share the merge CTEs' oracle.
+    *
+    * Job shape (round 15): every contributing fragment joins ONE unioned
+    * scan with the keep decision evaluated IN the scan — the driver
+    * collects only surviving (gen, file) rows, one job for any number of
+    * generations — and the kept files are read under the committed
+    * schema, with no footer inference. */
   def readTableWhere(spark: SparkSession, tablePath: String,
-      clusterCol: String, lo: Long, hi: Long): DataFrame =
-    readTableWhereAll(spark, tablePath, Seq((clusterCol, lo, hi)))
-
-  /** The multi-predicate data-skipping read: every `(col, lo, hi)` range
-    * whose column the sidecar carries stats for must intersect a file's
-    * recorded [min, max] for the file to be opened; predicates on columns
-    * WITHOUT stats (not in the last cluster's `statCols`) don't prune but
-    * still filter — exactly a lake reader's behavior, and what makes the
-    * one-dimension layout an honest control for the Z-order gate (its
-    * playerCount stats prune, its universeId predicate can't). No sidecar
-    * at all falls back to the plain manifest read — pruning is an
-    * optimization, never a correctness dependency. */
-  def readTableWhereAll(spark: SparkSession, tablePath: String,
-      preds: Seq[(String, Long, Long)]): DataFrame =
-    readTableWhereAllTyped(spark, tablePath,
-      preds.map { case (c, lo, hi) => (c, lit(lo), lit(hi)) })
-
-  /** STRING-typed range pruning (round-16, verdict r15 #6): the same
-    * stats-fragment keep-decision with lexicographic bounds — the
-    * Delta/Iceberg norm for string column stats. Sound because the
-    * fragments store each file's FULL min/max value (`min(col)`/
-    * `max(col)` at write time — no prefix truncation, so there is no
-    * truncated-upper-bound subtlety to get wrong; a deployment that
-    * later truncates long strings for sidecar size must round the upper
-    * bound UP, Delta-style). Comparison collation is Spark's binary
-    * UTF8 ordering on BOTH sides — the same `>=`/`<=` the data filter
-    * uses, so pruning can never disagree with filtering. */
-  def readTableWhereStrings(spark: SparkSession, tablePath: String,
-      preds: Seq[(String, String, String)]): DataFrame =
-    readTableWhereAllTyped(spark, tablePath,
-      preds.map { case (c, lo, hi) => (c, lit(lo), lit(hi)) })
-
-  /** MIXED-type skipping read (round 17): numeric and string range
-    * predicates prune TOGETHER in one keep-decision — the takedown-audit
-    * shape (`name BETWEEN … AND playerCount BETWEEN …`) the string-Z
-    * layout exists to serve. Both families route through the same
-    * unioned fragment scan; either list may be empty (degenerating to
-    * the single-type faces). */
-  def readTableWhereMixed(spark: SparkSession, tablePath: String,
-      numPreds: Seq[(String, Long, Long)],
-      strPreds: Seq[(String, String, String)]): DataFrame =
-    readTableWhereAllTyped(spark, tablePath,
-      numPreds.map { case (c, lo, hi) => (c, lit(lo), lit(hi)) } ++
-        strPreds.map { case (c, lo, hi) => (c, lit(lo), lit(hi)) })
+      ranges: Seq[(String, Any, Any)]): DataFrame = {
+    require(ranges.nonEmpty, "readTableWhere needs at least one range")
+    val table = new org.apache.hadoop.fs.Path(tablePath)
+    val (state, meta) = latest(spark, tablePath)
+    val pred = ranges.map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
+      .reduce(_ && _)
+    // per generation: the ranges its stats fragment covers
+    val prunable: Seq[(Int, Seq[(String, Any, Any)])] = byGen(state).flatMap {
+      case (g, _) =>
+        val covered = meta.frags.get(g).fold(Seq.empty[String])(_.statsCols)
+        val rs = ranges.filter(r => covered.contains(r._1))
+        if (rs.isEmpty) None else Some(g -> rs)
+    }
+    val survivors: Map[Int, Seq[String]] =
+      if (prunable.isEmpty) Map.empty
+      else prunable.map { case (g, rs) =>
+        val keep = rs.map { case (c, lo, hi) =>
+          col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi) }.reduce(_ && _)
+        spark.read.schema(fragStatsSchema(meta, rs.map(_._1)))
+          .parquet(fragStatsPath(table, g).toString)
+          .filter(keep).select(lit(g).as("gen"), col("file"))
+      }.reduce(_ unionByName _).collect()
+        .groupBy(_.getInt(0))
+        .map { case (g, rs) => g -> rs.map(_.getString(1)).toSeq }
+    val fragmentKept = prunable.map { case (g, _) =>
+      g -> survivors.getOrElse(g, Seq.empty) }.toMap
+    readKept(spark, tablePath, state, meta, keptPaths(state, fragmentKept)._1, pred)
+  }
 
   /** Committed data-file count at the current version, manifest-served:
-    * the per-bucket stats lines carry file counts, so the usual cost is
-    * ZERO Spark jobs and zero listings (one listStatus only per
-    * legacy stats-less bucket). Round 18: the skipping gates' printed
+    * the per-bucket stats lines carry file counts, so the cost is ZERO
+    * Spark jobs and zero listings. Round 18: the skipping gates' printed
     * `files_total` used `readTable(...).inputFiles`, which built a whole
     * file index (a parallel-listing Spark job at >32 dirs) just to count
     * files the manifest already knows. */
   def tableFileCount(spark: SparkSession, tablePath: String): Long = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fsys = fs(spark, table)
-    val (version, state) = readManifest(fsys, table)
-    val stats = readBucketStatsAt(fsys, table, version)
-    state.map { case (b, g) =>
-      stats.get(b).map(_.files).getOrElse(
-        statOfGenDir(fsys, genPathOf(table, b, g)).fold(0L)(_.files))
-    }.sum
+    readBucketStatsAt(fsys, table, readManifest(fsys, table)._1)
+      .values.map(_.files).sum
   }
 
-  /** The stats fragment's schema, derived from the table's committed
-    * schema: `file` plus (min_c, max_c) in the generation's statsCols
-    * order, each typed as its source column (round 18 — passing it skips
-    * the per-read footer-inference job the bare `spark.read.parquet`
-    * paid on every skipping read). */
-  private def fragStatsSchema(meta: TableMeta, statsCols: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] =
-    meta.schema.flatMap { st =>
-      // a statsCol the committed schema no longer carries (never written
-      // by this code, but cheap to guard) falls back to footer inference
-      val fields = statsCols.map(c => st.fields.find(_.name == c))
-      if (fields.exists(_.isEmpty)) None
-      else Some(org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("file",
-          org.apache.spark.sql.types.StringType) +:
-          fields.flatten.flatMap { f =>
-            Seq(org.apache.spark.sql.types.StructField(s"min_${f.name}", f.dataType),
-              org.apache.spark.sql.types.StructField(s"max_${f.name}", f.dataType))
-          }))
-    }
+  /** A stats fragment's read schema for the ranged columns: `file` plus
+    * (min_c, max_c) typed as the column's committed type (round 18 —
+    * passing it skips the footer-inference job a bare
+    * `spark.read.parquet` paid on every skipping read). */
+  private def fragStatsSchema(meta: TableMeta, cols: Seq[String])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    StructType(StructField("file", StringType) +: cols.distinct.flatMap { c =>
+      val t = meta.schema(c).dataType
+      Seq(StructField(s"min_$c", t), StructField(s"max_$c", t))
+    })
+  }
 
   /** The Bloom fragment's fixed writer schema ([[writeGenFragments]]) —
     * passed to every probe scan so no point read pays footer inference. */
@@ -1242,109 +1135,6 @@ object Merge {
       org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("bits",
       org.apache.spark.sql.types.LongType)))
-
-  private def readTableWhereAllTyped(spark: SparkSession, tablePath: String,
-      preds: Seq[(String, Column, Column)]): DataFrame = {
-    require(preds.nonEmpty, "readTableWhereAll needs at least one predicate")
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fsys = fs(spark, table)
-    val (version, state) = readManifest(fsys, table)
-    val pred = preds.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi }
-      .reduce(_ && _)
-    val meta = readMetaAt(fsys, table, version)
-    def full() = loadState(spark, tablePath, state, meta.schema, meta.mapping)
-      .filter(pred)
-    // per-GENERATION pruning: each gen with a stats fragment contributes
-    // only its intersecting files; gens without one (written before the
-    // sidecar policy, or by a writer that crashed mid-fragment) keep all
-    // their files — graceful degradation, never a correctness dependency.
-    // Job shape (round-15, verdict r14 #8 + ADVICE #5): the per-gen
-    // fragment layout comes from the manifest's #frag entries (FS probes
-    // only for pre-round-15 gens), every contributing fragment joins ONE
-    // unioned scan with the keep-decision EVALUATED IN THE SCAN — the
-    // driver collects only surviving (gen, file) rows, never one row per
-    // file, and pays one job instead of O(#gens) sequential ones (an
-    // incrementally-merged table carries one surviving gen per past round
-    // between compactions).
-    val byGen = state.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (g, entries) => g -> entries.keys.toSeq.sorted }
-    // classify each gen: Some(statPreds) = prunable through its fragment,
-    // None = read whole (no fragment, or no overlap with the predicates)
-    val prunable: Seq[(Int, Seq[(String, Column, Column)],
-        Option[org.apache.spark.sql.types.StructType])] = byGen.flatMap {
-      case (g, _) =>
-        // (statsCols, explicit fragment schema) — the schema is derivable
-        // only for manifest-described gens (round 18: passing it skips the
-        // per-read footer-inference the bare spark.read.parquet paid);
-        // pre-round-15 gens discover their layout FROM the footer, so they
-        // keep inference by construction
-        val fragStatsCols: Option[(Seq[String],
-            Option[org.apache.spark.sql.types.StructType])] =
-          meta.frags.get(g) match {
-            case Some(fi) =>
-              if (fi.statsCols.isEmpty) None
-              else Some(fi.statsCols -> fragStatsSchema(meta, fi.statsCols))
-            case None => // pre-round-15 gen: fall back to the FS + footer
-              val sp = fragStatsPath(table, g)
-              if (!fsys.exists(sp)) None
-              else Some(spark.read.parquet(sp.toString).columns.toSeq
-                .filter(_.startsWith("min_")).map(_.stripPrefix("min_")) -> None)
-          }
-        val statPreds = preds.filter(p => fragStatsCols.exists(_._1.contains(p._1)))
-        if (statPreds.isEmpty) None
-        else Some((g, statPreds, fragStatsCols.flatMap(_._2)))
-    }
-    // one unioned, predicate-pushed scan; only survivors reach the driver.
-    // NULL stats (an all-null file) make the conjunction NULL → filtered
-    // out → pruned, matching a BETWEEN's null semantics.
-    val keptByGen: Map[Int, Seq[String]] =
-      if (prunable.isEmpty) Map.empty
-      else prunable.map { case (g, sps, schemaOpt) =>
-        val keepExpr = sps.map { case (c, lo, hi) =>
-          col(s"max_$c") >= lo && col(s"min_$c") <= hi }.reduce(_ && _)
-        schemaOpt.fold(spark.read)(spark.read.schema)
-          .parquet(fragStatsPath(table, g).toString)
-          .filter(keepExpr).select(lit(g).as("gen"), col("file"))
-      }.reduce(_ unionByName _).collect()
-        .groupBy(_.getInt(0))
-        .map { case (g, rs) => g -> rs.map(_.getString(1)).toSeq }
-    val prunableGens = prunable.map(_._1).toSet
-    var anyPruned = false
-    val relPaths: Seq[String] = byGen.flatMap { case (g, buckets) =>
-      val whole = buckets.map(b => s"bucket=$b/gen=$g")
-      if (!prunableGens.contains(g)) whole
-      else {
-        val keep = keptByGen.getOrElse(g, Seq.empty)
-        // a fragment can never route the read outside the committed
-        // version: a malformed path falls the gen back; a well-formed
-        // entry whose bucket has since been rewritten at a NEWER gen
-        // is simply dropped — that bucket's rows live in the newer
-        // generation, covered by its own piece of this loop
-        if (keep.exists(rel => parseRelFile(rel).isEmpty)) whole
-        else {
-          anyPruned = true
-          keep.filter(rel => parseRelFile(rel).exists {
-            case (b, g2) => g2 == g && state.get(b).contains(g) })
-        }
-      }
-    }
-    if (relPaths.isEmpty) return full().limit(0)
-    if (!anyPruned) return full()
-    // same explicit PHYSICAL schema as loadState (round 19): the pruned
-    // direct read was the one remaining data scan paying a per-read
-    // footer-inference job
-    val directReader = spark.read.option("basePath", tablePath)
-    val physicalSchema = meta.schema.map(st =>
-      org.apache.spark.sql.types.StructType(st.fields.map(f =>
-        f.copy(name = meta.mapping.getOrElse(f.name, f.name)))))
-    val direct = physicalSchema.fold(directReader)(directReader.schema)
-      .parquet(relPaths.map(rel => s"$tablePath/$rel"): _*)
-    meta.mapping.foldLeft(direct) { case (d, (logical, physical)) =>
-      if (logical != physical && d.columns.contains(physical))
-        d.withColumnRenamed(physical, logical)
-      else d
-    }.filter(pred)
-  }
 
   // -------------------------------------------------------------------
   // BLOOM FRAGMENTS (round-12 verdict #5; per-gen since round 14): min/max
@@ -1371,85 +1161,50 @@ object Merge {
     * this). */
   private[graft] final case class PointProbeReport(
       relPaths: Seq[String], scannedSidecarRows: Long,
-      prunedGens: Int, unfragmentedGens: Int, fsProbes: Int = 0)
+      prunedGens: Int, unfragmentedGens: Int)
+
+  /** Decide the file set for `column IN (values)` at the latest version —
+    * see [[probeFiles]]. */
+  private[graft] def pointProbe(spark: SparkSession, tablePath: String,
+      column: String, values: Seq[Any]): PointProbeReport = {
+    val (state, meta) = latest(spark, tablePath)
+    probeFiles(spark, tablePath, state, meta, column, values)
+  }
 
   /** Decide the file set for `column IN (values)` per generation: gens
     * with a Bloom fragment covering `column` contribute only their firing
-    * files; gens without one keep all their files.
+    * files; gens without one keep all their files. Values are probed
+    * under the column's COMMITTED type (a long probe against an int
+    * column would hash differently — a Bloom false negative), through the
+    * writer's own `xxhash64` expression, so engine hash parity is
+    * structural; string keys hash their native values the same way.
     *
     * Job shape (round-14 review finding): an incrementally-merged table's
     * manifest references one generation PER PAST ROUND for untouched
     * buckets, so a per-gen read-and-collect loop would run O(#gens)
-    * sequential driver-blocking jobs. Instead: ONE probe-positions job
-    * per DISTINCT filter width m (usually one), and ONE unioned scan of
-    * every covered fragment, collected once — per-gen work after that is
-    * driver arithmetic over the already-bounded row set. */
-  private[graft] def pointProbe(spark: SparkSession, tablePath: String,
-      column: String, values: Seq[Long]): PointProbeReport = {
+    * sequential driver-blocking jobs. Instead: the probe positions are
+    * evaluated on the driver over a one-row local frame (no job), and ONE
+    * unioned scan of every covered fragment is collected once — per-gen
+    * work after that is driver arithmetic over the already-bounded row
+    * set. */
+  private def probeFiles(spark: SparkSession, tablePath: String,
+      state: Map[Int, Int], meta: TableMeta, column: String,
+      values: Seq[Any]): PointProbeReport = {
     import spark.implicits._
-    pointProbeDf(spark, tablePath, column, values.toDF("v"))
-  }
-
-  /** [[pointProbe]] for STRING keys (round 16): real takedown requests
-    * are as often URL / content-hash / domain shaped as numeric-id
-    * shaped, and the Bloom fragments already hash the column's NATIVE
-    * values ([[writeGenFragments]]'s `xxhash64(col, i)`), so the probe
-    * side only needs to hash the same way — the committed-type cast is a
-    * no-op for a string probe against a string column. */
-  private[graft] def pointProbeStrings(spark: SparkSession, tablePath: String,
-      column: String, values: Seq[String]): PointProbeReport = {
-    import spark.implicits._
-    pointProbeDf(spark, tablePath, column, values.toDF("v"))
-  }
-
-  private def pointProbeDf(spark: SparkSession, tablePath: String,
-      column: String, valuesDf: DataFrame): PointProbeReport = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fsys = fs(spark, table)
-    val (version, state) = readManifest(fsys, table)
-    val meta = readMetaAt(fsys, table, version)
-    // probe under the column's committed type (a long probe against an
-    // int column would hash differently); with no committed schema, the
-    // probe's OWN type — defaulting to LongType here would cast a string
-    // probe to null and hash garbage, a Bloom FALSE NEGATIVE (pruning
-    // must never be a correctness dependency, and a wrong-position probe
-    // breaks exactly that)
-    val dt = meta.schema.flatMap(_.find(_.name == column)).map(_.dataType)
-      .getOrElse(valuesDf.schema.head.dataType)
-    val byGen: Seq[(Int, Seq[Int])] = state.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (g, entries) => g -> entries.keys.toSeq.sorted }
-    // driver-side split: gens with a fragment covering the column vs
-    // whole. Fragment layout comes from the manifest's #frag entries
-    // (round-15, verdict r14 #5) — ZERO per-gen FS round-trips for any
-    // generation a round-15+ writer committed; gens absent from the map
-    // (pre-upgrade tables) fall back to the per-gen FS probe, counted in
-    // the report so the spec can pin "≤ a constant" for fresh tables.
-    var fsProbes = 0
-    val fragged: Seq[(Int, Long)] = byGen.flatMap { case (g, _) =>
-      meta.frags.get(g) match {
-        case Some(fi) =>
-          if (fi.bloomM > 0 && fi.bloomCols.contains(column)) Some(g -> fi.bloomM)
-          else None
-        case None =>
-          fsProbes += 1
-          readBloomMeta(fsys, fragBloomMetaPath(table, g)) match {
-            case Some((m, cols)) if cols.contains(column) && {
-                fsProbes += 1; fsys.exists(fragBloomPath(table, g)) } =>
-              Some(g -> m)
-            case _ => None
-          }
-      }
+    val fragged: Seq[(Int, Long)] = byGen(state).flatMap { case (g, _) =>
+      meta.frags.get(g).filter(fi => fi.bloomM > 0 && fi.bloomCols.contains(column))
+        .map(g -> _.bloomM)
     }
-    val fraggedGens = fragged.map(_._1).toSet
-    // positions first (through the writer's own hash expressions — engine
-    // hash parity is structural): one tiny job per distinct m
-    val probesByM: Map[Long, Array[Array[Long]]] =
-      fragged.map(_._2).distinct.map { m =>
-        m -> valuesDf
-          .select((0 until BloomHashes).map(i =>
-            pmod(xxhash64(col("v").cast(dt), lit(i)), lit(m)).as(s"p$i")): _*)
-          .collect().map(r => Array.tabulate(BloomHashes)(r.getLong))
-      }.toMap
+    // positions per value, one local evaluation per distinct width m
+    val probesByM: Map[Long, Seq[Array[Long]]] = fragged.map(_._2).distinct.map { m =>
+      val probeValues = array(values.map(lit): _*)
+        .cast(org.apache.spark.sql.types.ArrayType(meta.schema(column).dataType))
+      val perHash = Seq(0).toDF("x").select((0 until BloomHashes).map(i =>
+        transform(probeValues, v => pmod(xxhash64(v, lit(i)), lit(m)))): _*).head()
+      m -> values.indices.map(j =>
+        Array.tabulate(BloomHashes)(i => perHash.getSeq[Long](i)(j)))
+    }.toMap
     // one unioned, word_idx-pushed scan over every covered fragment
     val rowsByGen: Map[Int, Array[org.apache.spark.sql.Row]] =
       if (fragged.isEmpty) Map.empty
@@ -1461,211 +1216,52 @@ object Merge {
             col("word_idx").isin(wordIdxs.map(java.lang.Long.valueOf): _*))
           .select(lit(g).as("gen"), col("file"), col("word_idx"), col("bits"))
       }.reduce(_ unionByName _).collect().groupBy(_.getInt(0))
-    var scanned = 0L; var pruned = 0; var unfragmented = 0
-    val relPaths: Seq[String] = byGen.flatMap { case (g, buckets) =>
-      val whole = buckets.map(b => s"bucket=$b/gen=$g")
-      if (!fraggedGens.contains(g)) { unfragmented += 1; whole }
-      else {
-        val m = fragged.find(_._1 == g).get._2
-        val probes = probesByM(m)
-        val rows = rowsByGen.getOrElse(g, Array.empty)
-        scanned += rows.length
-        val words: Map[String, Map[Long, Long]] = rows.groupBy(_.getString(1))
-          .map { case (f, rs) =>
-            f -> rs.map(r => r.getLong(2) -> r.getLong(3)).toMap }
-        // a file fires when EVERY probe bit of at least one value is set
-        // (no false negatives — a file absent from the filtered rows has
-        // none of the probe words set and cannot hold a value)
-        val keep = words.keys.toSeq.sorted.filter { f =>
-          val wm = words(f)
-          probes.exists(ps => ps.forall { pos =>
-            (wm.getOrElse(pos / 64, 0L) & (1L << (pos % 64).toInt)) != 0L
-          })
-        }
-        // malformed paths fall the gen back; entries for buckets since
-        // rewritten at a newer gen are dropped (their rows live in the
-        // newer generation, covered by its own piece of this loop)
-        if (keep.exists(rel => parseRelFile(rel).isEmpty)) {
-          unfragmented += 1; whole
-        } else {
-          pruned += 1
-          keep.filter(rel => parseRelFile(rel).exists {
-            case (b, g2) => g2 == g && state.get(b).contains(g) })
-        }
+    val fragmentKept: Map[Int, Seq[String]] = fragged.map { case (g, m) =>
+      val words: Map[String, Map[Long, Long]] =
+        rowsByGen.getOrElse(g, Array.empty[org.apache.spark.sql.Row])
+          .groupBy(_.getString(1))
+          .map { case (f, rs) => f -> rs.map(r => r.getLong(2) -> r.getLong(3)).toMap }
+      // a file fires when EVERY probe bit of at least one value is set
+      // (no false negatives — a file absent from the filtered rows has
+      // none of the probe words set and cannot hold a value)
+      g -> words.keys.toSeq.sorted.filter { f =>
+        probesByM(m).exists(ps => ps.forall { pos =>
+          (words(f).getOrElse(pos / 64, 0L) & (1L << (pos % 64).toInt)) != 0L
+        })
       }
-    }
-    PointProbeReport(relPaths, scanned, pruned, unfragmented, fsProbes)
+    }.toMap
+    val (relPaths, pruned) = keptPaths(state, fragmentKept)
+    PointProbeReport(relPaths, rowsByGen.values.map(_.length.toLong).sum,
+      pruned, byGen(state).size - pruned)
   }
 
   /** POINT-LOOKUP skipping read: `column IN (values)` served through the
-    * committed generations' Bloom fragments ([[pointProbe]]) — no false
+    * committed generations' Bloom fragments ([[probeFiles]]) — no false
     * negatives by construction, false positives just open an extra file,
     * and generations without a fragment are read whole (which is what
     * lets `j1_merge_point_read` share the merge CTEs' oracle: pruning is
-    * an optimization, never a correctness dependency). */
+    * an optimization, never a correctness dependency). Numeric and string
+    * keys alike; a pruned read runs two jobs, the fragment scan and the
+    * read. */
   def readTableWhereIn(spark: SparkSession, tablePath: String,
-      column: String, values: Seq[Long]): DataFrame = {
+      column: String, values: Seq[Any]): DataFrame = {
     require(values.nonEmpty, "readTableWhereIn needs at least one value")
-    readTableWhereInCore(spark, tablePath,
-      col(column).isin(values.map(java.lang.Long.valueOf): _*),
-      pointProbe(spark, tablePath, column, values))
+    val (state, meta) = latest(spark, tablePath)
+    readKept(spark, tablePath, state, meta,
+      probeFiles(spark, tablePath, state, meta, column, values).relPaths,
+      col(column).isin(values: _*))
   }
-
-  /** [[readTableWhereIn]] for STRING keys — same Bloom-served file set
-    * via [[pointProbeStrings]]. */
-  def readTableWhereInStrings(spark: SparkSession, tablePath: String,
-      column: String, values: Seq[String]): DataFrame = {
-    require(values.nonEmpty, "readTableWhereInStrings needs at least one value")
-    readTableWhereInCore(spark, tablePath, col(column).isin(values: _*),
-      pointProbeStrings(spark, tablePath, column, values))
-  }
-
-  private def readTableWhereInCore(spark: SparkSession, tablePath: String,
-      pred: Column, report: PointProbeReport): DataFrame = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fsys = fs(spark, table)
-    val (version, state) = readManifest(fsys, table)
-    val meta = readMetaAt(fsys, table, version)
-    def full() = loadState(spark, tablePath, state, meta.schema, meta.mapping)
-      .filter(pred)
-    if (report.relPaths.isEmpty) return full().limit(0)
-    if (report.prunedGens == 0) return full()
-    val direct = spark.read.option("basePath", tablePath)
-      .parquet(report.relPaths.map(rel => s"$tablePath/$rel"): _*)
-    meta.mapping.foldLeft(direct) { case (d, (logical, physical)) =>
-      if (logical != physical && d.columns.contains(physical))
-        d.withColumnRenamed(physical, logical)
-      else d
-    }.filter(pred)
-  }
-
-  /** AUTO-ADOPT fragment metadata at the write round (round-16, verdict
-    * r15 #1 — kills the last sequential-jobs read shape): `#frag` entries
-    * for every generation `state` references that `knownFrags` does not
-    * yet describe. Pre-round-15 writers left fragment LAYOUT discoverable
-    * only by per-gen FS probes — [[pointProbe]]'s `exists`/readBloomMeta
-    * round-trips and [[readTableWhereAll]]'s sequential driver footer
-    * reads, O(#legacy gens) per read until someone remembered to call
-    * [[refreshFragments]]. Every upsert/delete/compact already commits a
-    * manifest, so adoption rides along: each legacy generation's on-disk
-    * layout is read ONCE (2–3 FS calls + at most one parquet footer) and
-    * recorded; after that commit the fallbacks are dead code for this
-    * table. A generation with NOTHING on disk is recorded as an
-    * explicitly-EMPTY [[FragInfo]] (`#frag g 0 - -`) so later reads and
-    * commits know definitively there is nothing to probe — and
-    * [[refreshFragments]] treats the empty entry as backfillable, so an
-    * explicit COMPUTE backfill still works after adoption. On a fully
-    * described table (every round-15+ write) the unknown set is empty and
-    * this costs nothing. */
-  private def adoptLegacyFrags(spark: SparkSession,
-      fsys: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
-      state: Map[Int, Int], knownFrags: Map[Int, FragInfo]): Map[Int, FragInfo] = {
-    val unknown = (state.values.toSet -- knownFrags.keySet).toSeq.sorted
-    unknown.map { g =>
-      val statsOnDisk: Seq[String] =
-        if (!fsys.exists(fragStatsPath(table, g))) Seq.empty
-        else spark.read.parquet(fragStatsPath(table, g).toString)
-          .columns.toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-      val bloomOnDisk = readBloomMeta(fsys, fragBloomMetaPath(table, g))
-        .filter(_ => fsys.exists(fragBloomPath(table, g)))
-      g -> FragInfo(statsOnDisk,
-        bloomOnDisk.map(_._1).getOrElse(0L),
-        bloomOnDisk.map(_._2).getOrElse(Seq.empty))
-    }.toMap
-  }
-
-  /** BACKFILL data-skipping fragments WITHOUT rewriting data (round-15;
-    * ADVICE r14 #3's migration path): for every generation the current
-    * version references,
-    *
-    *   - a generation whose fragments exist on disk but are missing from
-    *     the manifest (written by a pre-round-15 writer) is ADOPTED: its
-    *     layout is read once from the FS and recorded as a `#frag` entry;
-    *   - a generation with no fragments at all gets them COMPUTED — one
-    *     read of that generation's files, same as any writer pays for its
-    *     new gen;
-    *
-    * then ONE metadata-only version commits the complete fragment map
-    * (and the sidecar policy, when `statsCols`/`bloomCols` set it for a
-    * table that never had one). This is the cheap way to (re)gain
-    * skipping on an existing table: no data rewrite (unlike [[cluster]]),
-    * and point reads need no clustering at all — Bloom fragments prune
-    * on ANY layout. Pre-round-14 tables (whose per-version `stats-v`
-    * sidecars stopped being consulted when fragments replaced them) run
-    * this once instead of re-clustering. Returns [[RefreshFragmentsStats]]
-    * — the generation count AND whether a version committed are separate
-    * fields (ADVICE r15 #4: the old Int return read 0 for a policy-only
-    * commit, misleading callers using it to detect "no version burned"). */
-  def refreshFragments(spark: SparkSession, tablePath: String,
-      statsCols: Seq[String] = Seq.empty, bloomCols: Seq[String] = Seq.empty,
-      retainVersions: Int = 2): RefreshFragmentsStats = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fsys = fs(spark, table)
-    val (version, state) = readManifest(fsys, table)
-    val meta0 = readMetaAt(fsys, table, version)
-    val policy = meta0.copy(
-      statsCols = if (statsCols.nonEmpty) statsCols else meta0.statsCols,
-      bloomCols = if (bloomCols.nonEmpty) bloomCols else meta0.bloomCols)
-    require(policy.statsCols.nonEmpty || policy.bloomCols.nonEmpty,
-      s"$tablePath has no sidecar policy and none was given — nothing to backfill")
-    val byGen = state.groupBy(_._2).toSeq.sortBy(_._1)
-      .map { case (g, entries) => g -> entries.keys.toSeq.sorted }
-    val newFrags: Seq[(Int, FragInfo)] = byGen.flatMap { case (g, buckets) =>
-      // an explicitly-EMPTY entry (auto-adopted by a write round for a gen
-      // with nothing on disk) is still backfillable — only a gen with real
-      // fragments recorded is done
-      if (meta0.frags.get(g).exists(fi => fi.statsCols.nonEmpty || fi.bloomM > 0))
-        None
-      else {
-        // adopt an on-disk fragment set a pre-round-15 writer left behind
-        val statsOnDisk: Seq[String] =
-          if (!fsys.exists(fragStatsPath(table, g))) Seq.empty
-          else spark.read.parquet(fragStatsPath(table, g).toString)
-            .columns.toSeq.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        val bloomOnDisk: Option[(Long, Seq[String])] =
-          readBloomMeta(fsys, fragBloomMetaPath(table, g))
-            .filter(_ => fsys.exists(fragBloomPath(table, g)))
-        if (statsOnDisk.nonEmpty || bloomOnDisk.nonEmpty)
-          Some(g -> FragInfo(statsOnDisk,
-            bloomOnDisk.map(_._1).getOrElse(0L),
-            bloomOnDisk.map(_._2).getOrElse(Seq.empty)))
-        else // nothing on disk: compute fragments for this generation
-          writeGenFragments(spark, tablePath, table, g,
-            buckets.map(b => genPathOf(table, b, g).toString), policy)
-            .map(g -> _)
-      }
-    }
-    if (newFrags.isEmpty &&
-        policy.statsCols == meta0.statsCols && policy.bloomCols == meta0.bloomCols)
-      // fully fragmented already under an unchanged policy — don't burn a
-      // version
-      return RefreshFragmentsStats(0, None)
-    val meta = policy.copy(frags = meta0.frags ++ newFrags)
-    val (committedVersion, _, _) =
-      commitWithRetry(fsys, table, version + 1, state, Map.empty, meta,
-        carriedStats = readBucketStatsAt(fsys, table, version))
-    sweepRetention(fsys, table, committedVersion, retainVersions, meta.takedownGrace)
-    RefreshFragmentsStats(newFrags.size, Some(committedVersion))
-  }
-
-  /** What one [[refreshFragments]] call did: `generations` adopted or
-    * backfilled, and the version it committed — None when the table was
-    * already fully fragmented under an unchanged policy (no version
-    * burned). A policy-only change reads as (0, Some(v)): no generation
-    * needed work, but a version DID commit to record the new sidecar
-    * policy for later writers. */
-  final case class RefreshFragmentsStats(
-      generations: Int, committedVersion: Option[Int])
 
   // -------------------------------------------------------------------
   // Schema in the log (Delta-style): each version commits its DATA
-  // schema (key + data columns, no partition cols) as a sidecar, so
+  // schema (key + data columns, no partition cols) as its manifest's
+  // `#schema` line, so
   // readers never footer-scan 10^5 files to discover columns, and SCHEMA
   // EVOLUTION falls out: a round whose batch carries a new column
   // commits a widened schema, and reading OLD generations under it fills
   // the missing column with null (the parquet reader's behavior under an
   // explicit schema) — exactly Delta's ADD COLUMN semantics. Time travel
-  // stays faithful: each version reads under ITS OWN schema sidecar.
+  // stays faithful: each version reads under ITS OWN schema.
   // -------------------------------------------------------------------
 
   /** The wider of two numeric types within one family (integral or
@@ -1683,33 +1279,10 @@ object Merge {
     if (a == b) Some(a) else pick(integral).orElse(pick(fractional))
   }
 
-  private def schemaPath(table: org.apache.hadoop.fs.Path, version: Int) =
-    new org.apache.hadoop.fs.Path(manifestDir(table), s"schema-v$version")
-
-  /** LEGACY reader (pre-format-2 tables only — since round 14 the schema
-    * travels inside the manifest, [[readMetaAt]]): the schema a version
-    * committed — None for tables written before the sidecar existed
-    * (readers then fall back to footer inference). The committed schema
-    * is the LOGICAL one (user-facing names); physical parquet names are
-    * recovered through [[readMappingAt]]. */
-  private def readSchemaAt(fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path, version: Int)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val p = schemaPath(table, version)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(text)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
-  }
-
   // -------------------------------------------------------------------
   // COLUMN MAPPING (Delta's rename-without-rewrite): physical parquet
   // column names NEVER change once written; a RENAME commits a new
-  // version whose mapping sidecar binds the new LOGICAL name to the
+  // version whose `#mapping` line binds the new LOGICAL name to the
   // unchanged physical one. Readers read under physical names and
   // project to logical; writers translate logical back to physical
   // before appending, so every generation — pre- and post-rename —
@@ -1717,26 +1290,6 @@ object Merge {
   // each version reads under ITS OWN schema + mapping, so historical
   // reads surface the OLD name.
   // -------------------------------------------------------------------
-
-  private def mappingPath(table: org.apache.hadoop.fs.Path, version: Int) =
-    new org.apache.hadoop.fs.Path(manifestDir(table), s"mapping-v$version")
-
-  /** LEGACY reader (pre-format-2 tables only): logical → physical for
-    * columns whose names diverged; identity entries are omitted (absent
-    * file = fully identity). */
-  private def readMappingAt(fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path, version: Int): Map[String, String] = {
-    val p = mappingPath(table, version)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { l =>
-        val Array(lo, ph) = l.split(','); lo -> ph
-      }.toMap
-    }
-  }
 
   /** Rename `from` to `to` as a metadata-only commit: no data touched,
     * the manifest carries over, the new version's schema holds the new
@@ -1749,8 +1302,7 @@ object Merge {
     val (version, current) = readManifest(fs, table)
     val round = version + 1
     val meta0 = readMetaAt(fs, table, version)
-    val schema = meta0.schema.getOrElse(
-      sys.error(s"renameColumn needs a committed schema on $tablePath"))
+    val schema = meta0.schema
     require(schema.fieldNames.contains(from), s"no column $from to rename")
     require(!schema.fieldNames.contains(to), s"column $to already exists")
     val mapping = meta0.mapping
@@ -1762,7 +1314,7 @@ object Merge {
     // keep-all for pre-rename generations — correctness is untouched)
     def ren(cs: Seq[String]) = cs.map(c => if (c == from) to else c)
     commitManifest(fs, table, round, current, meta0.copy(
-      schema = Some(renamedSchema),
+      schema = renamedSchema,
       mapping = (mapping - from) + (to -> physical),
       statsCols = ren(meta0.statsCols), bloomCols = ren(meta0.bloomCols)),
       // metadata-only commit: per-bucket stats carry forward untouched
@@ -1798,7 +1350,7 @@ object Merge {
     * when set, retention is clamped to at most that many pre-delete
     * versions, bounding takedown-to-physical latency table-wide. */
   private[graft] final case class TableMeta(
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      schema: org.apache.spark.sql.types.StructType,
       mapping: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Seq.empty,
       bloomCols: Seq[String] = Seq.empty,
@@ -1811,11 +1363,7 @@ object Merge {
     * (0 = no Bloom fragment) with its covered columns. With this in the
     * manifest, a point or range read learns every generation's fragment
     * layout from the ONE manifest file it already read — zero per-gen FS
-    * probes (the round-14 residual: [[pointProbe]] paid O(live
-    * generations) driver `exists`/`readBloomMeta` round-trips before its
-    * single pushed-down scan). Generations absent from the map (written
-    * by pre-round-15 code) fall back to the FS probe — and
-    * [[refreshFragments]] adopts them into the manifest. */
+    * probes. A generation absent from the map has no fragment. */
   private[graft] final case class FragInfo(
       statsCols: Seq[String], bloomM: Long, bloomCols: Seq[String])
 
@@ -1831,9 +1379,7 @@ object Merge {
     * O(buckets)-listStatus-per-operation loops in the lake are gone (at a
     * 10⁵-bucket table, compact() paid 3·10⁵ serial NameNode RPCs per run
     * BEFORE it moved any data; the round-14 retention-sweep fix killed
-    * the same shape on the delete path). Two-field legacy lines read as
-    * stats-unknown and are adopted (measured once, recorded) by the next
-    * write round or compact — the [[refreshFragments]] migration story. */
+    * the same shape on the delete path). */
   private[graft] final case class BucketStat(files: Long, bytes: Long)
 
   /** One listStatus of a gen dir → its data-file count and bytes; None
@@ -1852,48 +1398,46 @@ object Merge {
       Some(BucketStat(data.length.toLong, data.map(_.getLen).sum))
     }
 
-  /** The per-bucket stats a committed manifest carries (buckets on
-    * legacy two-field lines are simply absent — stats-unknown). */
+  /** One committed manifest's bucket lines: bucket → (gen, stats). A line
+    * without its file count and bytes is refused. */
+  private def manifestEntries(
+      fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
+      version: Int): Map[Int, (Int, BucketStat)] =
+    manifestLines(fs, table, version).filterNot(_.startsWith("#")).map { l =>
+      l.split(',') match {
+        case Array(b, g, files, bytes) =>
+          b.toInt -> (g.toInt, BucketStat(files.toLong, bytes.toLong))
+        case _ => throw new CorruptManifestException(
+          s"$table manifest-v$version: bucket line '$l' has no file count and bytes")
+      }
+    }.toMap
+
+  /** The per-bucket stats a committed manifest carries. */
   private[graft] def readBucketStatsAt(
       fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
       version: Int): Map[Int, BucketStat] =
-    manifestLines(fs, table, version).filterNot(_.startsWith("#")).flatMap { l =>
-      val parts = l.split(',')
-      if (parts.length >= 4)
-        Some(parts(0).toInt -> BucketStat(parts(2).toLong, parts(3).toLong))
-      else None
-    }.toMap
+    manifestEntries(fs, table, version).map { case (b, (_, st)) => b -> st }
 
-  /** Measure-and-record stats for carried-over buckets a pre-round-16
-    * manifest committed without them: one listStatus per missing bucket,
-    * ONCE — the recorded values ride every later manifest. */
-  private def adoptLegacyBucketStats(
-      fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
-      entries: Map[Int, Int], known: Map[Int, BucketStat])
-      : Map[Int, BucketStat] =
-    entries.collect {
-      case (b, g) if !known.contains(b) =>
-        statOfGenDir(fs, genPathOf(table, b, g)).map(b -> _)
-    }.flatten.toMap
-
-  /** Atomic commit: write `#`-prefixed metadata lines plus `bucket,gen`
-    * lines to a temp file, claim `manifest-v<version>` PUT-IF-ABSENT
-    * ([[ManifestIo.commitFile]] — round-12 verdict: the old
-    * delete-then-rename was last-write-wins, so a concurrent writer or
-    * stale retry silently replaced a committed version). A commit of an
-    * existing version throws [[VersionConflictException]];
-    * [[upsertRound]] catches it and retries at the next version when the
-    * conflict is benign (disjoint buckets). */
+  /** Atomic commit: write `#`-prefixed metadata lines plus
+    * `bucket,gen,files,bytes` lines to a temp file, claim
+    * `manifest-v<version>` PUT-IF-ABSENT ([[ManifestIo.commitFile]] —
+    * round-12 verdict: the old delete-then-rename was last-write-wins, so
+    * a concurrent writer or stale retry silently replaced a committed
+    * version). A commit of an existing version throws
+    * [[VersionConflictException]]; [[upsertRound]] catches it and retries
+    * at the next version when the conflict is benign (disjoint buckets). */
   private def commitManifest(
       fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
       version: Int, state: Map[Int, Int], meta: TableMeta,
-      stats: Map[Int, BucketStat] = Map.empty): Unit = {
+      stats: Map[Int, BucketStat]): Unit = {
+    val unmeasured = state.keySet -- stats.keySet
+    require(unmeasured.isEmpty,
+      s"no file count and bytes for bucket(s) ${unmeasured.toSeq.sorted.mkString(",")}")
     // fragment entries only for generations this version references —
     // entries for replaced gens would be dead weight in every later read
     val liveGens = state.values.toSet
     def colsOrDash(cs: Seq[String]) = if (cs.isEmpty) "-" else cs.mkString(",")
-    val metaLines = Seq("#format 2") ++
-      meta.schema.map(s => s"#schema ${s.json}").toSeq ++
+    val metaLines = Seq("#format 2", s"#schema ${meta.schema.json}") ++
       meta.mapping.toSeq.sorted.map { case (l, ph) => s"#mapping $l,$ph" } ++
       (if (meta.statsCols.nonEmpty)
         Seq(s"#statscols ${meta.statsCols.mkString(",")}") else Seq.empty) ++
@@ -1905,41 +1449,39 @@ object Merge {
           s"#frag $g ${fi.bloomM} ${colsOrDash(fi.statsCols)} ${colsOrDash(fi.bloomCols)}" }
     ManifestIo.commitFile(fs, manifestDir(table), s"manifest-v$version",
       (metaLines ++ state.toSeq.sorted.map { case (b, g) =>
-        stats.get(b).fold(s"$b,$g")(st => s"$b,$g,${st.files},${st.bytes}") })
+        val st = stats(b); s"$b,$g,${st.files},${st.bytes}" })
         .mkString("", "\n", "\n"))
   }
 
-  /** A version's committed metadata. Format-2 manifests carry it inline;
-    * legacy (round-13) tables fall back to their schema-v/mapping-v
-    * sidecar files, so persisted history tables stay readable. */
+  /** A version's committed metadata, from its manifest's `#` lines. */
   private[graft] def readMetaAt(
       fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
       version: Int): TableMeta = {
     val lines = manifestLines(fs, table, version)
-    if (!lines.exists(_.startsWith("#format")))
-      TableMeta(readSchemaAt(fs, table, version), readMappingAt(fs, table, version))
-    else {
-      def tagged(tag: String): Seq[String] =
-        lines.filter(_.startsWith(s"#$tag ")).map(_.stripPrefix(s"#$tag "))
-      TableMeta(
-        schema = tagged("schema").headOption.map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]),
-        mapping = tagged("mapping").map { l =>
-          val Array(lo, ph) = l.split(','); lo -> ph }.toMap,
-        statsCols = tagged("statscols").headOption
-          .map(_.split(',').toSeq).getOrElse(Seq.empty),
-        bloomCols = tagged("bloomcols").headOption
-          .map(_.split(',').toSeq).getOrElse(Seq.empty),
-        takedownGrace = tagged("takedowngrace").headOption.map(_.trim.toInt),
-        frags = tagged("frag").map { l =>
-          val parts = l.split(' ')
-          def cols(s: String) = if (s == "-") Seq.empty[String] else s.split(',').toSeq
-          parts(0).toInt -> FragInfo(cols(parts(2)), parts(1).toLong, cols(parts(3)))
-        }.toMap)
-    }
+    def tagged(tag: String): Seq[String] =
+      lines.filter(_.startsWith(s"#$tag ")).map(_.stripPrefix(s"#$tag "))
+    TableMeta(
+      schema = tagged("schema").headOption.map(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+        .getOrElse(throw new CorruptManifestException(
+          s"$table manifest-v$version has no #schema line")),
+      mapping = tagged("mapping").map { l =>
+        val Array(lo, ph) = l.split(','); lo -> ph }.toMap,
+      statsCols = tagged("statscols").headOption
+        .map(_.split(',').toSeq).getOrElse(Seq.empty),
+      bloomCols = tagged("bloomcols").headOption
+        .map(_.split(',').toSeq).getOrElse(Seq.empty),
+      takedownGrace = tagged("takedowngrace").headOption.map(_.trim.toInt),
+      frags = tagged("frag").map { l =>
+        val parts = l.split(' ')
+        def cols(s: String) = if (s == "-") Seq.empty[String] else s.split(',').toSeq
+        parts(0).toInt -> FragInfo(cols(parts(2)), parts(1).toLong, cols(parts(3)))
+      }.toMap)
   }
 
+  /** A committed manifest's non-empty lines; a file without the
+    * `#format 2` line every writer puts first is refused. */
   private def manifestLines(
       fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
       version: Int): Seq[String] = {
@@ -1950,7 +1492,11 @@ object Merge {
     val in = fs.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-    text.linesIterator.filter(_.nonEmpty).toSeq
+    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
+    if (!lines.contains("#format 2"))
+      throw new CorruptManifestException(
+        s"$table manifest-v$version has no '#format 2' line")
+    lines
   }
 
   /** A fresh GENERATION label for one writer attempt at `round`: gen dirs
@@ -2005,7 +1551,7 @@ object Merge {
     * overlap or metadata change surfaces as a conflict error telling the
     * caller to re-run the round against the latest version — its merged
     * rows were computed from stale data and must not be committed.
-    * Returns (committed version, committed state).
+    * Returns (committed version, committed per-bucket stats).
     *
     * Note on the retention sweep: a writer racing others should keep
     * `retainVersions` ≥ the concurrent-writer lag — the sweep removes
@@ -2035,10 +1581,9 @@ object Merge {
       meta: TableMeta,
       removedBuckets: Seq[Int] = Seq.empty,
       strict: Boolean = false,
-      carriedStats: Map[Int, BucketStat] = Map.empty,
-      newStats: Map[Int, BucketStat] = Map.empty,
-      adoptedStats: Map[Int, BucketStat] = Map.empty)
-      : (Int, Map[Int, Int], Map[Int, BucketStat]) = {
+      carriedStats: Map[Int, BucketStat],
+      newStats: Map[Int, BucketStat])
+      : (Int, Map[Int, BucketStat]) = {
     var attemptVersion = round
     var base = base0
     var attempts = 0
@@ -2057,7 +1602,7 @@ object Merge {
       try {
         commitManifest(fs, table, attemptVersion, stateMap,
           meta.copy(frags = mergedFrags), statsMap)
-        return (attemptVersion, stateMap, statsMap)
+        return (attemptVersion, statsMap)
       } catch {
         case c: VersionConflictException =>
           attempts += 1
@@ -2085,15 +1630,14 @@ object Merge {
           // round legitimately reorders columns vs the initial load — a
           // compact/cluster racing such a round carries the OLD order and
           // must not read that as a schema change
-          def norm(s: Option[org.apache.spark.sql.types.StructType]) =
-            s.map(st => org.apache.spark.sql.types.StructType(st.fields.map(
+          def norm(st: org.apache.spark.sql.types.StructType) =
+            org.apache.spark.sql.types.StructType(st.fields.map(
               _.copy(nullable = true,
                 metadata = org.apache.spark.sql.types.Metadata.empty))
-              .sortBy(_.name)))
+              .sortBy(_.name))
           val wmeta = readMetaAt(fs, table, wv)
           if (norm(wmeta.schema) != norm(meta.schema) ||
-              wmeta.copy(schema = None, frags = Map.empty) !=
-                meta.copy(schema = None, frags = Map.empty))
+              wmeta.copy(schema = meta.schema, frags = meta.frags) != meta)
             throw new VersionConflictException(
               s"concurrent writer changed the schema/mapping/layout of $table — " +
                 "metadata conflicts are not auto-merged; re-run the round")
@@ -2101,22 +1645,8 @@ object Merge {
           base = wstate
           // this writer's own entries win for its own gens (it wrote them)
           mergedFrags = wmeta.frags ++ meta.frags
-          // the winner's stats are authoritative for buckets IT committed,
-          // but this writer's adopted-legacy measurements must survive the
-          // rebase (ADVICE r16 #4): a benign conflict would otherwise
-          // re-commit legacy buckets stats-less — the one-round migration
-          // silently not completing, and the listings re-paid next round.
-          // ONLY for buckets the winner left at this writer's base gen,
-          // though (ADVICE r17 #2): an adopted measurement describes the
-          // gen this writer READ — if the winner rewrote that bucket
-          // (old-binary racer, no stats), re-attaching the old gen's
-          // file/byte stats to the winner's NEW gen would carry a wrong
-          // measurement forward until the bucket's next rewrite; dropping
-          // it leaves the bucket stats-less and re-measured, the honest
-          // pre-adoption behavior
-          carried = adoptedStats.filter { case (b, _) =>
-            wstate.get(b) == base0.get(b) } ++
-            readBucketStatsAt(fs, table, wv)
+          // the winner's stats are authoritative for every bucket it carries
+          carried = readBucketStatsAt(fs, table, wv)
       }
     }
     sys.error("unreachable")
@@ -2149,10 +1679,16 @@ object Merge {
   private def readManifestAt(
       fs: org.apache.hadoop.fs.FileSystem, table: org.apache.hadoop.fs.Path,
       version: Int): Map[Int, Int] =
-    manifestLines(fs, table, version).filterNot(_.startsWith("#")).map { l =>
-      // 2-field legacy lines and 4-field stats-bearing lines both parse
-      val parts = l.split(','); parts(0).toInt -> parts(1).toInt
-    }.toMap
+    manifestEntries(fs, table, version).map { case (b, (g, _)) => b -> g }
+
+  /** The latest committed (bucket → gen, metadata) of `tablePath`. */
+  private def latest(spark: SparkSession, tablePath: String)
+      : (Map[Int, Int], TableMeta) = {
+    val table = new org.apache.hadoop.fs.Path(tablePath)
+    val fsys = fs(spark, table)
+    val (version, state) = readManifest(fsys, table)
+    (state, readMetaAt(fsys, table, version))
+  }
 
   /** The versions of `tablePath` that are still time-travel-readable
     * (bounded by the writer's `retainVersions`). */
@@ -2167,11 +1703,8 @@ object Merge {
     * manifest's `bucket=<b>/gen=<g>` dirs, with `basePath` so `bucket`
     * (and `gen`) stay partition columns and bucket filters still prune. */
   def readTable(spark: SparkSession, tablePath: String): DataFrame = {
-    val table = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (version, state) = readManifest(fs, table)
-    val meta = readMetaAt(fs, table, version)
-    loadState(spark, tablePath, state, meta.schema, meta.mapping)
+    val (state, meta) = latest(spark, tablePath)
+    loadState(spark, tablePath, meta, genDirs(state))
   }
 
   /** TIME TRAVEL: read `tablePath` exactly as it stood when `version` was
@@ -2187,32 +1720,31 @@ object Merge {
   def readTableAt(spark: SparkSession, tablePath: String, version: Int): DataFrame = {
     val table = new org.apache.hadoop.fs.Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = readMetaAt(fs, table, version)
-    loadState(spark, tablePath, readManifestAt(fs, table, version),
-      meta.schema, meta.mapping)
+    loadState(spark, tablePath, readMetaAt(fs, table, version),
+      genDirs(readManifestAt(fs, table, version)))
   }
 
-  /** `schema`: the version's committed LOGICAL schema (sidecar) — passing
-    * it (a) skips footer inference at 10⁵-file scale, (b) fills columns
-    * the generation predates with null (schema evolution), and (c) reads
-    * narrow generations upcast under a widened type. `mapping` translates
-    * logical to the on-disk PHYSICAL names for the read, and the result
-    * is projected back to logical — rename support. None/empty falls
-    * back to inference (pre-sidecar tables). Partition columns (bucket,
-    * gen) are appended by directory discovery either way. */
-  private def loadState(
-      spark: SparkSession, tablePath: String, state: Map[Int, Int],
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
-      mapping: Map[String, String] = Map.empty): DataFrame = {
-    val paths = state.toSeq.sorted.map { case (b, g) => s"$tablePath/bucket=$b/gen=$g" }
-    val reader = spark.read.option("basePath", tablePath)
-    val physicalSchema = schema.map(st => org.apache.spark.sql.types.StructType(
-      st.fields.map(f => f.copy(name = mapping.getOrElse(f.name, f.name)))))
-    val df = physicalSchema.fold(reader)(reader.schema).parquet(paths: _*)
-    mapping.foldLeft(df) { case (d, (logical, physical)) =>
-      if (logical != physical && d.columns.contains(physical))
-        d.withColumnRenamed(physical, logical)
-      else d
+  /** A committed state's generation dirs, table-relative. */
+  private def genDirs(state: Map[Int, Int]): Seq[String] =
+    state.toSeq.sorted.map { case (b, g) => s"bucket=$b/gen=$g" }
+
+  /** THE reader of committed data: the table-relative `paths` (whole
+    * `bucket=<b>/gen=<g>` dirs or single files a keep decision chose),
+    * read under the version's committed PHYSICAL schema and projected
+    * back to logical names. The explicit schema (a) skips footer
+    * inference at 10⁵-file scale, (b) fills columns a generation predates
+    * with null (schema evolution), and (c) reads narrow generations
+    * upcast under a widened type; the mapping keeps renames
+    * metadata-only. `basePath` keeps `bucket` and `gen` as partition
+    * columns, appended by directory discovery. */
+  private def loadState(spark: SparkSession, tablePath: String,
+      meta: TableMeta, paths: Seq[String]): DataFrame = {
+    val physicalSchema = org.apache.spark.sql.types.StructType(meta.schema.fields
+      .map(f => f.copy(name = meta.mapping.getOrElse(f.name, f.name))))
+    val df = spark.read.option("basePath", tablePath).schema(physicalSchema)
+      .parquet(paths.map(rel => s"$tablePath/$rel"): _*)
+    meta.mapping.foldLeft(df) { case (d, (logical, physical)) =>
+      if (logical != physical) d.withColumnRenamed(physical, logical) else d
     }
   }
 
@@ -2270,8 +1802,7 @@ object Merge {
     val m2 = readManifestAt(fs, table, toVersion)
     // a bucket changed if its generation moved OR it left the manifest
     // entirely (deleteWhere drops fully-deleted buckets)
-    val changed = (m1.keySet ++ m2.keySet)
-      .filter(b => m1.get(b) != m2.get(b))
+    val changed = changedBucketsBetween(spark, tablePath, fromVersion, toVersion).toSet
     val dataCols = (c: DataFrame) =>
       c.columns.filterNot(n => n == key || n == "bucket" || n == "gen").toSeq
     def outCols(keyCol: Column, opCol: Column, cols: Seq[String],
@@ -2282,10 +1813,8 @@ object Merge {
     // between the versions reads as null on the old side, so evolution
     // surfaces as ordinary updates (null -> value) with null preimages
     val toMeta = readMetaAt(fs, table, toVersion)
-    val toSchema = toMeta.schema
-    val toMapping = toMeta.mapping
     if (changed.isEmpty) {
-      val empty = loadState(spark, tablePath, m2, toSchema, toMapping).limit(0)
+      val empty = loadState(spark, tablePath, toMeta, genDirs(m2)).limit(0)
       return empty.select(outCols(col(key), lit("insert"),
         dataCols(empty), col, col): _*)
     }
@@ -2293,7 +1822,7 @@ object Merge {
     val oldEntries = m1.filter { case (b, _) => changed.contains(b) }
     def side(entries: Map[Int, Int], other: => DataFrame): DataFrame =
       if (entries.isEmpty) other.limit(0)
-      else loadState(spark, tablePath, entries, toSchema, toMapping)
+      else loadState(spark, tablePath, toMeta, genDirs(entries))
         .drop("bucket", "gen")
     lazy val newSide: DataFrame = side(newEntries, oldSide)
     lazy val oldSide: DataFrame = side(oldEntries, newSide)
@@ -2891,7 +2420,7 @@ object Merge {
       keepCols = Seq("gameplayDescription"),
       buckets = IncBuckets)
     cluster(spark, tablePath, "playerCount", filesPerBucket = 4)
-    val pruned = readTableWhere(spark, tablePath, "playerCount", SkipLo, SkipHi)
+    val pruned = readTableWhere(spark, tablePath, Seq(("playerCount", SkipLo, SkipHi)))
     val total = tableFileCount(spark, tablePath)
     println(s"SKIP files_kept=${pruned.inputFiles.length} files_total=$total")
     pruned
@@ -2924,7 +2453,7 @@ object Merge {
     * one-dimension clustering prunes on playerCount only; real lake
     * tables skip on 2+ predicates). Runs the incremental rounds, clusters
     * on the INTERLEAVED-BITS key of (playerCount, universeId), reads the
-    * two-predicate range through [[readTableWhereAll]] — the pruned rows
+    * two-predicate range through [[readTableWhere]] — the pruned rows
     * must hash-match the oracle's two-predicate filtered unrolled merge
     * (layout-only + no dropped row, the same proof shape as
     * `j1_merge_skipping`). The SKIPZ line also prices the CONTROL: the
@@ -2947,9 +2476,9 @@ object Merge {
       ("universeId", ZSkipIdLo, ZSkipIdHi))
     // control first: one-dimension layout, same two-predicate read
     cluster(spark, tablePath, "playerCount", filesPerBucket = 4)
-    val files1d = readTableWhereAll(spark, tablePath, preds).inputFiles.length
+    val files1d = readTableWhere(spark, tablePath, preds).inputFiles.length
     clusterZ(spark, tablePath, Seq("playerCount", "universeId"), filesPerBucket = 4)
-    val pruned = readTableWhereAll(spark, tablePath, preds)
+    val pruned = readTableWhere(spark, tablePath, preds)
     val total = tableFileCount(spark, tablePath)
     println(s"SKIPZ files_kept_z=${pruned.inputFiles.length} " +
       s"files_kept_1d=$files1d files_total=$total")
@@ -2979,13 +2508,13 @@ object Merge {
   private val ZsPcHi = 49L
 
   /** `j1_merge_skipping_zs`: the STRING-Z READ gate (round 18, verdict
-    * r17 #2 — the round-17 string-Z layout and `readTableWhereMixed`
+    * r17 #2 — the round-17 string-Z layout and mixed-type ranges
     * were spec-pinned but had no oracle row, unlike their numeric twin).
     * Runs the incremental rounds, Z-clusters on (name, playerCount) —
     * the string dimension rank-normalized via [[StringRankBucket]] —
     * then reads BOTH round-17 faces through the fragment-pruned path:
-    * the takedown-shaped string WHERE ([[readTableWhereStrings]]) and
-    * the mixed numeric+string WHERE ([[readTableWhereMixed]]), returned
+    * the takedown-shaped string WHERE and the mixed numeric+string WHERE
+    * (both [[readTableWhere]]), returned
     * as one tagged union so a single hash gate covers both. Layout is
     * result-invariant, so the oracle is the same unrolled merge with
     * the matching WHEREs — zero drift IS the claim, exactly
@@ -3005,10 +2534,9 @@ object Merge {
       keepCols = Seq("gameplayDescription"),
       buckets = IncBuckets)
     clusterZ(spark, tablePath, Seq("name", "playerCount"), filesPerBucket = 4)
-    val str = readTableWhereStrings(spark, tablePath,
-      Seq(("name", ZsNameLo, ZsNameHi)))
-    val mixed = readTableWhereMixed(spark, tablePath,
-      Seq(("playerCount", ZsPcLo, ZsPcHi)), Seq(("name", ZsNameLo, ZsNameHi)))
+    val str = readTableWhere(spark, tablePath, Seq(("name", ZsNameLo, ZsNameHi)))
+    val mixed = readTableWhere(spark, tablePath,
+      Seq(("playerCount", ZsPcLo, ZsPcHi), ("name", ZsNameLo, ZsNameHi)))
     val total = tableFileCount(spark, tablePath)
     println(s"SKIPZS files_kept_str=${str.inputFiles.length} " +
       s"files_kept_mixed=${mixed.inputFiles.length} files_total=$total")

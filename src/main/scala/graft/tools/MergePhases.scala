@@ -60,14 +60,14 @@ object MergePhases {
         }
         val preds = Seq(("playerCount", 150L, 299L), ("universeId", 50L, 249L))
         time("read-1d") {
-          Merge.readTableWhereAll(spark, tablePath, preds).inputFiles.length
+          Merge.readTableWhere(spark, tablePath, preds).inputFiles.length
         }
         time("cluster-z") {
           Merge.clusterZ(spark, tablePath, Seq("playerCount", "universeId"),
             filesPerBucket = 4)
         }
         val pruned = time("read-z") {
-          val p = Merge.readTableWhereAll(spark, tablePath, preds)
+          val p = Merge.readTableWhere(spark, tablePath, preds)
           p.inputFiles.length
           p
         }

@@ -155,4 +155,18 @@ class DocsSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"tools mains missing from README's tools/ paragraph: ${missing.mkString(", ")}")
   }
+
+  test("the Merge lake reads committed generations in one place, loadState") {
+    // five read paths once built their own `basePath` reader without the
+    // committed schema, and one of them returned a different schema than
+    // readTable for the same rows; a new read path calls loadState instead
+    val src = read("src/main/scala/graft/operators/Merge.scala")
+    val start = src.indexOf("private def loadState(")
+    assert(start >= 0, "Merge.loadState is gone")
+    val end = src.indexOf("\n  }\n", start)
+    val sites = java.util.regex.Pattern.quote("option(\"basePath\"").r
+      .findAllMatchIn(src).map(_.start).toSeq
+    assert(sites.nonEmpty && sites.forall(i => i > start && i < end),
+      s"option(\"basePath\" outside loadState at offsets ${sites.mkString(", ")}")
+  }
 }

@@ -377,7 +377,7 @@ class MergeSpec extends AnyFunSuite {
     assert(Merge.readTable(spark, table).selectExpr(ttCols: _*)
       .orderBy("universeId").collect() === before)
     // the pruned read returns exactly the filtered rows...
-    val pruned = Merge.readTableWhere(spark, table, "playerCount", 6L, 6L)
+    val pruned = Merge.readTableWhere(spark, table, Seq(("playerCount", 6L, 6L)))
     val want = before.filter(r => !r.isNullAt(5) && r.getLong(5) == 6L)
     assert(pruned.selectExpr(ttCols: _*).orderBy("universeId").collect() === want)
     // ...while opening strictly fewer files than the full table holds
@@ -390,7 +390,7 @@ class MergeSpec extends AnyFunSuite {
       over, coal, keep, buckets = 16)
     val after = Merge.readTable(spark, table).selectExpr(ttCols: _*)
       .orderBy("universeId").collect()
-    val fallback = Merge.readTableWhere(spark, table, "playerCount", 6L, 6L)
+    val fallback = Merge.readTableWhere(spark, table, Seq(("playerCount", 6L, 6L)))
     assert(fallback.selectExpr(ttCols: _*).orderBy("universeId").collect() ===
       after.filter(r => !r.isNullAt(5) && r.getLong(5) == 6L))
     assert(st.version === 3, s"cluster must commit v3 after 2 rounds, got $st")
@@ -505,7 +505,7 @@ class MergeSpec extends AnyFunSuite {
     // control: one-dimension layout — playerCount stats prune, the
     // universeId predicate filters but cannot prune
     Merge.cluster(spark, table, "playerCount", filesPerBucket = 8)
-    val oneD = Merge.readTableWhereAll(spark, table, preds)
+    val oneD = Merge.readTableWhere(spark, table, preds)
     assert(oneD.selectExpr(ttCols: _*).orderBy("universeId").collect() === want)
     val files1d = oneD.inputFiles.length
 
@@ -514,7 +514,7 @@ class MergeSpec extends AnyFunSuite {
     // pure layout change: contents identical through the plain reader
     assert(Merge.readTable(spark, table).selectExpr(ttCols: _*)
       .orderBy("universeId").collect() === before)
-    val z = Merge.readTableWhereAll(spark, table, preds)
+    val z = Merge.readTableWhere(spark, table, preds)
     assert(z.selectExpr(ttCols: _*).orderBy("universeId").collect() === want)
     val total = Merge.readTable(spark, table).inputFiles.length
     assert(z.inputFiles.nonEmpty && z.inputFiles.length < total,
@@ -578,7 +578,7 @@ class MergeSpec extends AnyFunSuite {
     // control: numeric 1-D layout — the takedown-shaped string predicate
     // has no stats column and cannot prune a single file
     Merge.cluster(spark, table, "playerCount", filesPerBucket = 8)
-    val ctl = Merge.readTableWhereStrings(spark, table, Seq(("name", lo, hi)))
+    val ctl = Merge.readTableWhere(spark, table, Seq(("name", lo, hi)))
     assert(ctl.selectExpr(ttCols: _*).orderBy("universeId").collect() === want)
     val totalCtl = Merge.readTable(spark, table).inputFiles.length
     assert(ctl.inputFiles.length === totalCtl,
@@ -590,13 +590,13 @@ class MergeSpec extends AnyFunSuite {
     assert(Merge.readTable(spark, table).selectExpr(ttCols: _*)
       .orderBy("universeId").collect() === before,
       "clusterZ is a pure layout change")
-    val z = Merge.readTableWhereStrings(spark, table, Seq(("name", lo, hi)))
+    val z = Merge.readTableWhere(spark, table, Seq(("name", lo, hi)))
     assert(z.selectExpr(ttCols: _*).orderBy("universeId").collect() === want)
     val total = Merge.readTable(spark, table).inputFiles.length
     assert(z.inputFiles.nonEmpty && z.inputFiles.length < total,
       s"string z-dimension must prune, opened ${z.inputFiles.length} of $total")
     val numPred = Seq(("playerCount", 0L, n / 4 - 1))
-    val zn = Merge.readTableWhereAll(spark, table, numPred)
+    val zn = Merge.readTableWhere(spark, table, numPred)
     assert(zn.inputFiles.length < total,
       s"numeric co-dimension still prunes, opened ${zn.inputFiles.length} of $total")
     assert(zn.selectExpr(ttCols: _*).orderBy("universeId").collect() ===
@@ -604,8 +604,7 @@ class MergeSpec extends AnyFunSuite {
     // MIXED read: both families prune in ONE keep-decision — the
     // takedown-audit shape; never more files than either single-type
     // face, zero row drift against the conjunction filter
-    val zm = Merge.readTableWhereMixed(spark, table, numPred,
-      Seq(("name", lo, hi)))
+    val zm = Merge.readTableWhere(spark, table, numPred :+ (("name", lo, hi)))
     assert(zm.inputFiles.length <=
       math.min(z.inputFiles.length, zn.inputFiles.length),
       s"mixed pruning must be the intersection: ${zm.inputFiles.length} " +
@@ -654,11 +653,6 @@ class MergeSpec extends AnyFunSuite {
     assert(report.scannedSidecarRows <= 2L * 4 * total,
       s"probe collected ${report.scannedSidecarRows} sidecar rows for " +
         s"2 values * 4 hashes * $total files")
-    // fragment layout travels IN the manifest (round-15, verdict r14 #5):
-    // a probe against a round-15 table pays ZERO per-generation FS
-    // metadata calls before its single pushed-down scan
-    assert(report.fsProbes === 0,
-      s"expected manifest-served fragment metadata, paid ${report.fsProbes} FS probes")
 
     // a later merge round MAINTAINS the sidecar (round-13 verdict #5):
     // the new generation gets its own fragment at append time, so point
@@ -673,90 +667,16 @@ class MergeSpec extends AnyFunSuite {
       s"point read after a post-cluster merge round must stay pruned " +
         s"(opened ${after.inputFiles.length} of $totalAfter)")
 
-    // PRE-ROUND-15 tables: the manifest carries no #frag entries, but the
-    // fragments sit on disk — the probe falls back to per-gen FS metadata
-    // calls and stays pruned (the round-14 behavior, kept working)
-    val tdir = new org.apache.hadoop.fs.Path(table, "_manifests")
-    val hfs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def stripFragLines(): Unit = {
-      val latest = hfs.listStatus(tdir).map(_.getPath.getName)
-        .filter(_.startsWith("manifest-v")).map(_.stripPrefix("manifest-v").toInt)
-        .max
-      val mf = java.nio.file.Paths.get(s"$table/_manifests/manifest-v$latest")
-      val kept = java.nio.file.Files.readAllLines(mf).asScala
-        .filterNot(_.startsWith("#frag")).asJava
-      java.nio.file.Files.write(mf, kept)
-    }
-    stripFragLines()
-    val legacyProbe = Merge.pointProbe(spark, table, "universeId", Seq(350L))
-    assert(legacyProbe.fsProbes > 0 && legacyProbe.prunedGens > 0,
-      "a pre-round-15 manifest must fall back to FS fragment probes and still prune")
-    val legacyRead = Merge.readTableWhereIn(spark, table, "universeId", Seq(350L))
-    assert(legacyRead.collect().map(_.getString(2)).toSeq === Seq("r2-350"))
-    // refreshFragments ADOPTS the on-disk fragments into the manifest —
-    // one metadata-only version, and probes stop paying FS round-trips
-    assert(Merge.refreshFragments(spark, table).generations > 0,
-      "refreshFragments must adopt the on-disk fragments")
-    val adopted = Merge.pointProbe(spark, table, "universeId", Seq(350L))
-    assert(adopted.fsProbes === 0 && adopted.prunedGens > 0,
-      "adopted fragments must serve probes from the manifest alone")
-
-    // a generation WITHOUT any fragment (pre-policy data on a pre-round-15
-    // table) is read whole — pruning degrades gracefully, correctness
-    // never depends on it
-    stripFragLines()
-    hfs.listStatus(tdir).map(_.getPath)
-      .filter(p => p.getName.startsWith("bloomg") )
-      .foreach(p => hfs.delete(p, true))
+    // a generation WITHOUT a #frag entry has no fragment and is read
+    // whole — pruning degrades gracefully, correctness never depends on it
+    val latest = Merge.tableVersions(spark, table).max
+    val mf = java.nio.file.Paths.get(s"$table/_manifests/manifest-v$latest")
+    java.nio.file.Files.write(mf, java.nio.file.Files.readAllLines(mf).asScala
+      .filterNot(_.startsWith("#frag")).asJava)
     val fb = Merge.readTableWhereIn(spark, table, "universeId", Seq(350L))
     assert(fb.collect().map(_.getString(2)).toSeq === Seq("r2-350"))
     assert(fb.inputFiles.length === totalAfter,
       "fragment-less generations must fall back to the full manifest read")
-  }
-
-  test("refreshFragments: skipping on an existing table with no rewrite (round 15)") {
-    val tmp = java.nio.file.Files.createTempDirectory("merge-refresh").toString
-    val table = s"$tmp/games"
-    val over = Seq("rootPlaceId", "name", "playerCount")
-    val coal = Seq("description")
-    val keep = Seq("gameplayDescription")
-    // three rounds, NO sidecar policy ever set — three live generations
-    Merge.upsertIncrementalRounds(spark, table,
-      mkTT(0L until 120L, "base"),
-      Seq(mkTT(Seq(3L, 21L), "r1"), mkTT(Seq(40L, 77L), "r2")),
-      "universeId", over, coal, keep, buckets = 8, retainVersions = 10)
-    val before = Merge.readTable(spark, table)
-    val expected = before.selectExpr(ttCols: _*).orderBy("universeId").collect()
-    val dataBytesBefore = before.inputFiles.sorted.toSeq
-    val versionsBefore = Merge.tableVersions(spark, table).max
-    // backfill: computes fragments for every generation, commits ONE
-    // metadata-only version, rewrites no data files
-    val backfilled = Merge.refreshFragments(spark, table,
-      statsCols = Seq("playerCount"), bloomCols = Seq("universeId"))
-    assert(backfilled.generations > 0, "expected generations to backfill")
-    assert(backfilled.committedVersion.contains(versionsBefore + 1))
-    assert(Merge.tableVersions(spark, table).max === versionsBefore + 1)
-    assert(Merge.readTable(spark, table).inputFiles.sorted.toSeq === dataBytesBefore,
-      "refreshFragments must not rewrite data files")
-    // point reads now prune via manifest-served Bloom fragments — no
-    // clustering needed, Bloom works on any layout
-    val probe = Merge.pointProbe(spark, table, "universeId", Seq(3L))
-    assert(probe.fsProbes === 0 && probe.prunedGens > 0 &&
-      probe.unfragmentedGens === 0)
-    val hit = Merge.readTableWhereIn(spark, table, "universeId", Seq(3L))
-    assert(hit.collect().map(_.getString(2)).toSeq === Seq("r1-3"))
-    assert(hit.inputFiles.length < Merge.readTable(spark, table).inputFiles.length)
-    // range reads answer correctly through the backfilled stats fragments
-    val ranged = Merge.readTableWhere(spark, table, "playerCount", 10L, 20L)
-    assert(ranged.selectExpr(ttCols: _*).orderBy("universeId").collect() ===
-      expected.filter { r =>
-        val pc = r.getLong(r.fieldIndex("playerCount")); pc >= 10L && pc <= 20L })
-    // idempotent: a second call finds nothing to do and burns no version —
-    // committedVersion (not the generation count) is the no-version-burned
-    // signal (ADVICE r15 #4: a policy-only change commits with 0 gens)
-    val again = Merge.refreshFragments(spark, table)
-    assert(again.generations === 0 && again.committedVersion.isEmpty)
-    assert(Merge.tableVersions(spark, table).max === versionsBefore + 1)
   }
 
   test("string-typed range pruning: lexicographic stats prune files, zero row drift (round 16)") {
@@ -778,7 +698,7 @@ class MergeSpec extends AnyFunSuite {
       .filter(col("name") >= lo && col("name") <= hi)
       .selectExpr(ttCols: _*).orderBy("universeId").collect()
     assert(expected.nonEmpty, "fixture sanity: the string range must match rows")
-    val pruned = Merge.readTableWhereStrings(spark, table, Seq(("name", lo, hi)))
+    val pruned = Merge.readTableWhere(spark, table, Seq(("name", lo, hi)))
     // zero row drift vs the plain filter…
     assert(pruned.selectExpr(ttCols: _*).orderBy("universeId").collect() === expected)
     // …while opening strictly fewer files (the lexicographic keep-decision
@@ -790,65 +710,12 @@ class MergeSpec extends AnyFunSuite {
     // dependency)
     Merge.upsertRound(spark, table, mkTT(Seq(12L), "r2"), "universeId",
       over, coal, keep, buckets = 8, retainVersions = 10)
-    val after = Merge.readTableWhereStrings(spark, table, Seq(("name", lo, hi)))
+    val after = Merge.readTableWhere(spark, table, Seq(("name", lo, hi)))
     val expectedAfter = Merge.readTable(spark, table)
       .filter(col("name") >= lo && col("name") <= hi)
       .selectExpr(ttCols: _*).orderBy("universeId").collect()
     assert(after.selectExpr(ttCols: _*).orderBy("universeId").collect() === expectedAfter)
     assert(after.inputFiles.length < Merge.readTable(spark, table).inputFiles.length)
-  }
-
-  test("auto-adopt: ONE write round records legacy #frag lines — next reads pay zero FS probes (round 16)") {
-    val tmp = java.nio.file.Files.createTempDirectory("merge-adopt").toString
-    val table = s"$tmp/games"
-    val over = Seq("rootPlaceId", "name", "playerCount")
-    val coal = Seq("description")
-    val keep = Seq("gameplayDescription")
-    // a clustered table with on-disk fragments across several generations
-    Merge.upsertIncrementalRounds(spark, table,
-      mkTT(0L until 240L, "base"), Seq(mkTT(Seq(3L, 21L), "r1")),
-      "universeId", over, coal, keep, buckets = 8, retainVersions = 10)
-    Merge.cluster(spark, table, "playerCount", filesPerBucket = 4,
-      bloomCols = Seq("universeId"), retainVersions = 10)
-    Merge.upsertRound(spark, table, mkTT(Seq(40L, 77L), "r2"), "universeId",
-      over, coal, keep, buckets = 8, retainVersions = 10)
-    // simulate a pre-round-15 writer: strip every #frag line from the
-    // latest manifest, leaving layout discoverable only by FS probes
-    val tdir = new org.apache.hadoop.fs.Path(table, "_manifests")
-    val hfs = tdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val latest = hfs.listStatus(tdir).map(_.getPath.getName)
-      .filter(_.startsWith("manifest-v")).map(_.stripPrefix("manifest-v").toInt).max
-    val mf = java.nio.file.Paths.get(s"$table/_manifests/manifest-v$latest")
-    java.nio.file.Files.write(mf, java.nio.file.Files.readAllLines(mf).asScala
-      .filterNot(_.startsWith("#frag")).asJava)
-    assert(Merge.pointProbe(spark, table, "universeId", Seq(3L)).fsProbes > 0,
-      "setup: the stripped manifest must force the FS-probe fallback")
-
-    // ONE ordinary write round — adoption rides its manifest commit
-    Merge.upsertRound(spark, table, mkTT(Seq(199L), "r3"), "universeId",
-      over, coal, keep, buckets = 8, retainVersions = 10)
-    val probe = Merge.pointProbe(spark, table, "universeId", Seq(3L))
-    assert(probe.fsProbes === 0,
-      s"one write round must adopt legacy #frag lines (paid ${probe.fsProbes} FS probes)")
-    assert(probe.prunedGens > 0, "adopted bloom fragments must keep pruning")
-    // structural pin for ZERO legacy footer reads on range reads too:
-    // every generation the committed version references is described by
-    // the manifest, so readTableWhereAll's legacy branch is unreachable
-    val liveGens = Merge.readTable(spark, table)
-      .select("gen").distinct().collect().map(_.getInt(0)).toSet
-    val v = Merge.tableVersions(spark, table).max
-    val meta = Merge.readMetaAt(hfs, new org.apache.hadoop.fs.Path(table), v)
-    assert(liveGens.subsetOf(meta.frags.keySet),
-      s"adopted manifest must describe every live gen " +
-        s"(live $liveGens vs described ${meta.frags.keySet})")
-    // and the reads stay correct + pruned
-    val total = Merge.readTable(spark, table).inputFiles.length
-    val hit = Merge.readTableWhereIn(spark, table, "universeId", Seq(3L))
-    assert(hit.collect().map(_.getString(2)).toSeq === Seq("r1-3"))
-    assert(hit.inputFiles.length < total)
-    val ranged = Merge.readTableWhere(spark, table, "playerCount", 1L, 3L)
-    assert(ranged.inputFiles.length < total,
-      "adopted stats fragments must keep range pruning")
   }
 
   test("deleteWhere: touched-bucket rewrite, time travel across the delete, VACUUM makes it physical") {
@@ -1227,7 +1094,7 @@ class MergeSpec extends AnyFunSuite {
       // landed with its commit), so probes pay zero FS round-trips and
       // the pruned point read serves the winner's row
       val report = Merge.pointProbe(spark, table, "universeId", Seq(3L))
-      assert(report.fsProbes === 0 && report.unfragmentedGens === 0,
+      assert(report.unfragmentedGens === 0,
         s"winner's fragments must be manifest-served: $report")
       val hit = Merge.readTableWhereIn(spark, table, "universeId", Seq(3L))
       assert(hit.collect().map(_.getString(2)).toSeq === Seq("proc2-3"))
@@ -1269,15 +1136,15 @@ class MergeSpec extends AnyFunSuite {
       // manifest-described, bloom point reads prune and serve, range
       // reads prune with zero row drift
       val report = Merge.pointProbe(spark, table, "universeId", Seq(3L))
-      assert(report.fsProbes === 0 && report.prunedGens > 0 &&
-        report.unfragmentedGens === 0, s"winner's fragments must serve: $report")
+      assert(report.prunedGens > 0 && report.unfragmentedGens === 0,
+        s"winner's fragments must serve: $report")
       val total = all.inputFiles.length
       val hit = Merge.readTableWhereIn(spark, table, "universeId", Seq(3L))
       assert(hit.collect().map(_.getString(2)).toSeq === Seq("base-3"))
       assert(hit.inputFiles.length < total)
       val expected = all.filter(col("playerCount") >= 1L && col("playerCount") <= 3L)
         .selectExpr(ttCols: _*).orderBy("universeId").collect()
-      val ranged = Merge.readTableWhere(spark, table, "playerCount", 1L, 3L)
+      val ranged = Merge.readTableWhere(spark, table, Seq(("playerCount", 1L, 3L)))
       assert(ranged.selectExpr(ttCols: _*).orderBy("universeId").collect() === expected)
     } finally child.destroyForcibly()
   }
@@ -1550,28 +1417,30 @@ class MergeSpec extends AnyFunSuite {
     val before = Merge.readTable(spark, table).selectExpr(ttCols: _*)
       .orderBy("universeId").collect()
     val st = Merge.compact(spark, table)
-    assert(st.buckets > 0 && st.statListings === 0L,
-      s"stats-bearing table must plan without listing, got $st")
+    assert(st.buckets > 0 && bucketLines.forall(_.length === 4),
+      s"compaction must plan from and record the stats, got $st")
     assert(Merge.readTable(spark, table).selectExpr(ttCols: _*)
       .orderBy("universeId").collect() === before, "compaction changed content")
-    // LEGACY manifest (pre-round-16 writer): strip the stats fields — the
-    // planner falls back to one listing per bucket, ONCE
+    // a manifest whose bucket lines lost their stats is refused with a
+    // named error, never planned by listing the bucket dirs
+    val version = Merge.tableVersions(spark, table).max
     java.nio.file.Files.write(latestManifest,
       java.nio.file.Files.readAllLines(latestManifest).asScala.map { l =>
         if (l.startsWith("#")) l else l.split(',').take(2).mkString(",")
       }.asJava)
-    val st2 = Merge.compact(spark, table)
-    assert(st2.statListings > 0L,
-      s"stripped manifest must force the listing fallback, got $st2")
-    // one ordinary write round re-records stats for every carried bucket —
-    // the same one-write-round migration as fragment adoption
-    Merge.upsertRound(spark, table, mkTT(Seq(7L), "r2"), "universeId",
-      over, coal, keep, buckets = 16, retainVersions = 10)
-    assert(bucketLines.forall(_.length === 4),
-      "a write round must adopt stats for every carried-over bucket")
-    val st3 = Merge.compact(spark, table)
-    assert(st3.statListings === 0L,
-      s"post-migration OPTIMIZE must plan from the manifest again, got $st3")
+    val refused = intercept[graft.operators.CorruptManifestException](
+      Merge.compact(spark, table))
+    assert(refused.getMessage.contains(s"manifest-v$version") &&
+      refused.getMessage.contains(table) &&
+      refused.getMessage.contains("no file count and bytes"),
+      s"the refusal must name the table and version, got: ${refused.getMessage}")
+    // so is a manifest without the format line every writer puts first
+    java.nio.file.Files.write(latestManifest,
+      java.nio.file.Files.readAllLines(latestManifest).asScala
+        .filterNot(_ == "#format 2").asJava)
+    val unformatted = intercept[graft.operators.CorruptManifestException](
+      Merge.readTable(spark, table))
+    assert(unformatted.getMessage.contains(s"manifest-v$version has no '#format 2' line"))
   }
 
   test("string-keyed point reads and takedowns ride the Bloom fragments (round 16)") {
@@ -1586,8 +1455,7 @@ class MergeSpec extends AnyFunSuite {
     // the clustered rewrite sets the Bloom policy over the STRING column
     Merge.cluster(spark, table, "universeId", filesPerBucket = 3,
       retainVersions = 10, bloomCols = Seq("name"))
-    val report = Merge.pointProbeStrings(spark, table, "name", Seq("base-7"))
-    assert(report.fsProbes === 0, "fragment layout must come from the manifest")
+    val report = Merge.pointProbe(spark, table, "name", Seq("base-7"))
     assert(report.prunedGens > 0, s"the string probe must prune, got $report")
     val totalFiles = {
       val mdir = java.nio.file.Paths.get(s"$table/_manifests")
@@ -1602,14 +1470,14 @@ class MergeSpec extends AnyFunSuite {
       s"pruned read must open fewer than all $totalFiles files, got ${report.relPaths.length}")
     // pruning is never a correctness dependency: the Bloom-served read
     // returns exactly the plain filter's rows
-    val served = Merge.readTableWhereInStrings(spark, table, "name", Seq("base-7"))
+    val served = Merge.readTableWhereIn(spark, table, "name", Seq("base-7"))
       .selectExpr(ttCols: _*).orderBy("universeId").collect()
     val plain = Merge.readTable(spark, table)
       .filter(col("name") === "base-7")
       .selectExpr(ttCols: _*).orderBy("universeId").collect()
     assert(served === plain && plain.nonEmpty)
     // string-keyed takedown: the find phase rides the same fragments
-    val st = Merge.deleteKeysStrings(spark, table, "name", Seq("base-7"),
+    val st = Merge.deleteKeys(spark, table, "name", Seq("base-7"),
       retainVersions = 1, takedownGraceVersions = 0)
     assert(st.deletedRows === 1L, s"expected one row down, got $st")
     assert(Merge.readTable(spark, table).filter(col("name") === "base-7").isEmpty)
@@ -1826,46 +1694,96 @@ class MergeSpec extends AnyFunSuite {
       s"the dial re-checks at the next write and bounds the bucket, got $after")
   }
 
-  test("benign commit retry keeps adopted legacy stats — the one-round migration completes under conflict (ADVICE r17)") {
-    val tmp = java.nio.file.Files.createTempDirectory("merge-adstat").toString
+  /** Spark jobs `body` starts, each as the long call site of its stages
+    * (top line: the last Spark method before user code). A barrier job in
+    * its own group bounds the count: the listener bus delivers events in
+    * order, so once the barrier's start arrives every job of `body` has
+    * been seen. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"merge-spec-${java.util.UUID.randomUUID}"
+    val barrierGroup = s"$group-barrier"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val barrierSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(js.stageInfos.headOption.fold("")(_.details))
+          case Some(`barrierGroup`) => barrierSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "merge spec")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(barrierGroup, "barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(barrierSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Jobs started while a DataFrame was being built, not run: schema
+    * inference from parquet footers (or a parallel file listing). */
+  private def readerJobs(jobs: Seq[String]): Seq[String] =
+    jobs.filter(_.linesIterator.nextOption().exists(_.contains("DataFrameReader")))
+
+  test("point reads answer under the committed schema after a round evolves one bucket") {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val tmp = java.nio.file.Files.createTempDirectory("merge-pt-schema").toString
     val table = s"$tmp/games"
     val over = Seq("rootPlaceId", "name", "playerCount")
     val coal = Seq("description")
     val keep = Seq("gameplayDescription")
-    Merge.upsertIncrementalRounds(spark, table, mkTT(0L until 64L, "base"),
-      Seq.empty, "universeId", over, coal, keep, buckets = 4,
-      retainVersions = 10)
-    val mdir = java.nio.file.Paths.get(s"$table/_manifests")
-    def latestN: Int = java.nio.file.Files.list(mdir).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("manifest-v"))
-      .map(_.stripPrefix("manifest-v").toInt).max
-    def stripStats(p: java.nio.file.Path): Seq[String] =
-      java.nio.file.Files.readAllLines(p).asScala.toSeq.map { l =>
-        if (l.startsWith("#")) l else l.split(',').take(2).mkString(",")
-      }
-    // simulate a pre-round-16 table: the current manifest has no stats
-    java.nio.file.Files.write(mdir.resolve(s"manifest-v$latestN"),
-      stripStats(mdir.resolve(s"manifest-v$latestN")).asJava)
-    // the racing "winner" is an OLD-binary writer: it claims the next
-    // version with the SAME state but stats-less lines, so the rebased
-    // carried stats read back empty — only this writer's adopted
-    // measurements can complete the migration
-    var fired = false
-    Merge.upsertRound(spark, table, mkTT(Seq(0L), "r1"), "universeId",
-      over, coal, keep, buckets = 4, retainVersions = 10,
-      hooks = Merge.IncHooks(beforeCommit = _ => if (!fired) {
-        fired = true
-        val n = latestN
-        java.nio.file.Files.write(mdir.resolve(s"manifest-v${n + 1}"),
-          stripStats(mdir.resolve(s"manifest-v$n")).asJava)
-      }))
-    assert(fired)
-    val lines = java.nio.file.Files.readAllLines(
-      mdir.resolve(s"manifest-v$latestN")).asScala
-      .filter(l => l.nonEmpty && !l.startsWith("#")).map(_.split(','))
-    assert(lines.nonEmpty && lines.forall(_.length === 4),
-      s"adopted legacy stats must survive the benign retry, got " +
-        lines.map(_.mkString(",")).mkString(" | "))
+    Merge.upsertIncrementalRounds(spark, table,
+      mkTT(0L until 80L, "base").withColumn("playerCount", col("playerCount").cast("int")),
+      Seq.empty, "universeId", over, coal, keep, buckets = 4)
+    Merge.cluster(spark, table, "playerCount", filesPerBucket = 4,
+      bloomCols = Seq("universeId"))
+    assert(Merge.readTable(spark, table).schema("playerCount").dataType === IntegerType)
+    // one round touching bucket 0 only (key 4): it adds `score` and widens
+    // playerCount to long; bucket 1 (key 5) keeps its int, score-less files
+    Merge.upsertRound(spark, table, mkTT(Seq(4L), "r1").withColumn("score", lit(0.5)),
+      "universeId", over :+ "score", coal, keep, buckets = 4)
+    val all = Merge.readTable(spark, table)
+    assert(all.schema("playerCount").dataType === LongType && all.columns.contains("score"))
+    for (keys <- Seq(Seq(5L), Seq(4L), Seq(4L, 5L))) {
+      assert(Merge.pointProbe(spark, table, "universeId", keys).prunedGens > 0,
+        s"precondition: the read of $keys is fragment-pruned")
+      val got = Merge.readTableWhereIn(spark, table, "universeId", keys)
+      val want = all.filter(col("universeId").isin(keys: _*))
+      assert(got.schema === want.schema, s"keys $keys")
+      assert(got.collect().sortBy(_.getLong(0)).toSeq ===
+        want.collect().sortBy(_.getLong(0)).toSeq, s"keys $keys")
+    }
+  }
+
+  test("job shape: a pruned point read runs two jobs and an upsert round infers no schema") {
+    val tmp = java.nio.file.Files.createTempDirectory("merge-jobs").toString
+    val table = s"$tmp/games"
+    val over = Seq("rootPlaceId", "name", "playerCount")
+    val coal = Seq("description")
+    val keep = Seq("gameplayDescription")
+    Merge.upsertIncrementalRounds(spark, table, mkTT(0L until 80L, "base"),
+      Seq.empty, "universeId", over, coal, keep, buckets = 4)
+    Merge.cluster(spark, table, "playerCount", filesPerBucket = 4,
+      bloomCols = Seq("universeId"))
+    assert(Merge.pointProbe(spark, table, "universeId", Seq(3L)).prunedGens > 0)
+    // the fragment scan and the read of the kept files — no footer inference
+    val read = jobsOf {
+      assert(Merge.readTableWhereIn(spark, table, "universeId", Seq(3L))
+        .collect().map(_.getString(2)).toSeq === Seq("base-3"))
+    }
+    assert(read.length === 2, s"point read jobs:\n${read.mkString("\n--\n")}")
+    // a round on a table with a sidecar policy writes fragments for its new
+    // generation, reading it back under the schema it commits
+    val round = jobsOf {
+      Merge.upsertRound(spark, table, mkTT(Seq(3L, 6L), "r1"), "universeId",
+        over, coal, keep, buckets = 4)
+    }
+    assert(round.nonEmpty && readerJobs(round).isEmpty,
+      s"schema-inference jobs in an upsert round:\n${readerJobs(round).mkString("\n--\n")}")
   }
 }
 
