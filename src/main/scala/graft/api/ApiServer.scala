@@ -58,7 +58,6 @@ final class ApiServer(spark: SparkSession, dataDir: String, port: Int = 0,
   def stop(): Unit = {
     server.stop(0); pool.shutdown(); jobPool.shutdown()
   }
-  def boundPort: Int = server.getAddress.getPort
 
   private def handle(exchange: HttpExchange): Unit = {
     val method = exchange.getRequestMethod.toUpperCase

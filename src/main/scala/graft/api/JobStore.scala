@@ -127,20 +127,6 @@ final class JobStore {
       }
     }
 
-  /** DELETE FROM jobs WHERE id = ? (jobManager.ts:203-207); true iff a row
-    * was deleted, like the reference's `result.changes > 0`. */
-  def deleteJob(id: String): Boolean = jobs.remove(id).isDefined
-
-  /** Retention sweep — DELETE WHERE created_at < datetime('now', '-N days')
-    * (jobManager.ts:209-216, default 30). Returns the number deleted, like
-    * the reference's `result.changes`. `now` is injectable for tests; the
-    * cutoff comparison is strict-less-than, matching SQLite's `<`. */
-  def deleteOld(olderThanDays: Int = 30, now: Instant = Instant.now()): Int = {
-    val cutoff = now.minus(java.time.Duration.ofDays(olderThanDays.toLong))
-    val old = jobs.values.collect { case j if j.createdAt.isBefore(cutoff) => j.id }.toSeq
-    old.count(id => jobs.remove(id).isDefined)
-  }
-
   private def ordered: Seq[JobRecord] =
     jobs.values.toSeq.sortBy(j => (-j.createdAt.toEpochMilli, -j.seq))
 

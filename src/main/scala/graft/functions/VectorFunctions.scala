@@ -63,13 +63,10 @@ object VectorFunctions {
   // generator. Integer arithmetic only, so Spark and DuckDB build
   // bit-identical hyperplanes.
 
-  /** Hyperplane j over 64-dim vectors: element i = ((i·53 + j·97) mod 101 − 50)/100. */
-  def hyperplane(j: Int): Column = hyperplaneT(53, j)
-
   /** Hyperplane family parameterized by multiplier — each multiplier gives
     * an independent table of planes for multi-table LSH: element i =
-    * ((i·mult + j·97) mod 101 − 50)/100. [[hyperplane]] is the mult=53
-    * family used by the single-table queries. */
+    * ((i·mult + j·97) mod 101 − 50)/100. The mult=53 family serves the
+    * single-table queries. */
   def hyperplaneT(mult: Int, j: Int): Column =
     transform(sequence(lit(0), lit(63)),
       i => ((i * mult + lit(j * 97)) % 101 - 50).cast("double") / 100.0)

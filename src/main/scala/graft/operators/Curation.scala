@@ -132,32 +132,22 @@ object Curation {
   def shardManifest(spark: SparkSession, dir: String): DataFrame =
     shardManifestOf(Tables.documents(spark, dir))
 
-  /** The manifest's pre-aggregation projection — shared with
-    * [[graft.streaming.StreamingShardManifest]] (one expression tree, so
-    * streamed ≡ batch is a shared-definition fact, the StreamingProfile /
-    * StreamingCms convention). */
-  private[graft] def manifestRows(d: DataFrame): DataFrame = {
+  /** The manifest of any documents frame. Every aggregate column is
+    * commutative/associative (count, sum, min, max, xor), so the rollup
+    * map-side-combines with [[Shards]] rows of state at any corpus size. */
+  private[graft] def shardManifestOf(d: DataFrame): DataFrame = {
     val h = h32(col("doc_id"), "shuf42")
     d.select(col("doc_id"), (h % Shards).as("shard"),
-      wsTokens(col("text")).as("n_tok"),
-      conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long").as("dhp"))
-  }
-
-  /** The manifest aggregate: every column is commutative/associative
-    * (count, sum, min, max, xor) — mergeable with bounded state, which is
-    * both the 100 TB map-side-combine property AND what lets the same
-    * aggregation run under complete-mode streaming with [[Shards]] rows
-    * of state. */
-  private[graft] def manifestAgg(rows: DataFrame): DataFrame =
-    rows.groupBy(col("shard"))
+        wsTokens(col("text")).as("n_tok"),
+        conv(substring(md5(col("text")), 1, 15), 16, 10).cast("long").as("dhp"))
+      .groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("n_tokens"),
         min(col("doc_id")).as("min_doc_id"),
         max(col("doc_id")).as("max_doc_id"),
         expr("bit_xor(dhp)").as("content_xor"))
-
-  private[graft] def shardManifestOf(d: DataFrame): DataFrame =
-    manifestAgg(manifestRows(d)).orderBy(col("shard"))
+      .orderBy(col("shard"))
+  }
 
   val shardManifestSql: String =
     s"""WITH k AS (
@@ -1305,22 +1295,6 @@ object Curation {
       graft.tools.IndexStore.readOrBuild(spark, dir, "bpe-vocab")(
         bpeBuildSteps(spark, dir)._2))
 
-  /** The shared tokenize-and-look-up projection: exploded corpus words
-    * LEFT-joined to the broadcast (word → token count) vocabulary. The
-    * batch fertility query and the streaming drift monitor
-    * ([[graft.streaming.StreamingBpeMonitor]]) both aggregate over THIS
-    * tree (the StreamingQualityFilter convention), so their parity is a
-    * property of one expression, not of two copies. The left join is what
-    * lets the stream see out-of-vocabulary words (null n_tok) — on the
-    * training corpus itself OOV is impossible, so the batch aggregate is
-    * unchanged by the outer-ness. */
-  private[graft] def fertilityTokens(docs: DataFrame, vocab: DataFrame): DataFrame =
-    docs
-      .select(col("source"), explode(split(lower(col("text")), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
-      .join(broadcast(vocab.select(col("word"),
-        size(split(col("seq"), " ")).cast("long").as("n_tok"))), Seq("word"), "left")
-
   /** Tokenizer APPLY — the serving half of [[bpeTrain]]: tokenize the
     * corpus with the learned vocabulary and report per-source fertility
     * (tokens per word), the number a tokenizer team watches per domain and
@@ -1330,10 +1304,14 @@ object Curation {
     * rollup per source; no shuffle of document text, ever. (A production
     * 100k-merge vocab is a few MB — comfortably broadcastable.) OOV is
     * impossible by construction here (the vocab was trained on this
-    * corpus); an inference-time corpus would LEFT join with a char-count
-    * fallback. */
+    * corpus), so the LEFT join below adds no row; an inference-time corpus
+    * would also need a char-count fallback for its null n_tok. */
   def bpeFertility(spark: SparkSession, dir: String): DataFrame = {
-    fertilityTokens(Tables.documentsParallel(spark, dir), storedBpeVocab(spark, dir))
+    Tables.documentsParallel(spark, dir)
+      .select(col("source"), explode(split(lower(col("text")), "\\s+")).as("word"))
+      .filter(col("word") =!= "")
+      .join(broadcast(storedBpeVocab(spark, dir).select(col("word"),
+        size(split(col("seq"), " ")).cast("long").as("n_tok"))), Seq("word"), "left")
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_words"), sum(col("n_tok")).as("n_tokens"))
       .select(col("source"), col("n_words"), col("n_tokens"),

@@ -12,9 +12,9 @@ import graft.functions.OracleParity._
   * streaming surface (SURVEY §2.9), so these are the forward-looking
   * pipeline ops: tumbling-window aggregation, gap-based sessionization, and
   * JSON property extraction (F16). Each is written so the SAME dataframe
-  * code runs under Structured Streaming (see graft.streaming.EventsStream:
-  * the windowed aggregation is reused verbatim over a streaming source +
-  * watermark); here they run in batch mode and are oracle-checked.
+  * code can run under Structured Streaming (StreamingIntervalSpec runs
+  * [[Events.bandedIntervalJoin]] on a stream); here they run in batch
+  * mode and are oracle-checked.
   *
   * Scale: window aggregation shuffles once on (window, event_type) with
   * map-side partials; sessionization shuffles once on user_id then does a
@@ -258,7 +258,7 @@ object Events {
   }
 
   /** The hash-derived incident windows (30 h lattice, 30–149 min spans)
-    * — shared by the batch query and the streaming twin's parity spec. */
+    * — shared by the batch query and StreamingIntervalSpec. */
   private[graft] def incidentWindows(spark: SparkSession): DataFrame =
     spark.range(0, IncidentCount)
       .select(col("id").cast("int").as("incident_id"))
@@ -309,10 +309,7 @@ object Events {
 
   /** ATTRIBUTION JOIN — for every purchase, the views by the same user in
     * the preceding [[AttribWindowHours]] hours (count + lag from the most
-    * recent one): the ad-attribution / conversion-funnel primitive, and
-    * the BATCH TWIN of the stream-stream time-bounded join in
-    * [[graft.streaming.StreamingJoin]] (whose parity test asserts the two
-    * produce identical pairs).
+    * recent one): the ad-attribution / conversion-funnel primitive.
     *
     * Unlike `ev_interval_join` (no equi-key ⇒ banding required), the user_id
     * equi-key makes this a plain HASH JOIN with a residual time filter —
@@ -323,8 +320,7 @@ object Events {
     * forced-shuffle stock 54 s with a 107× straggler task, AQE unable to split
     * it — byte-blind compute skew — salted 6 s; graft.tools.SfScale @ c6e9ec7
     * `ev_attribution_skew` block, SCALING.md "attribution under a hot key")
-    * rather than argued by analogy to `dedup_salted_skew`. The streaming form
-    * keeps state bounded by the same window via watermarks. LEFT semantics keep
+    * rather than argued by analogy to `dedup_salted_skew`. LEFT semantics keep
     * zero-view purchases (`n_views = 0`, NULL lag — coalesced to -1 so the lag
     * column stays non-null BIGINT in both engines). */
   def attribution(spark: SparkSession, dir: String): DataFrame = {
@@ -412,29 +408,10 @@ object Events {
   private val WqProbes = Seq(0.5, 0.9)
   private val WqEps = 0.1
 
-  /** The per-(window, type) bottom-k sample aggregation, shared verbatim
-    * with [[graft.streaming.StreamingWindowedQuantiles]]: under Structured
-    * Streaming this exact expression runs watermarked in APPEND mode, so
-    * closed windows emit finalized samples and their k-row state evicts —
-    * per-window percentiles over an unbounded stream with
-    * O(k · active windows × types) state. */
-  private[graft] def windowSketchAgg(ev: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val bk = udaf(graft.functions.BottomKSketch, ExpressionEncoder[(Long, Double)]())
-    val h60 = conv(substring(md5(col("event_id").cast("string")), 1, 15), 16, 10)
-      .cast("long")
-    ev.select(col("ts"), col("event_type").as("et"), col("value").as("v"),
-        h60.as("h"))
-      .groupBy(window(col("ts"), "1 day").as("wd"), col("et"))
-      .agg(bk(col("h"), col("v")).as("arr"))
-      .select(col("wd.start").as("w"), col("et"), col("arr"))
-  }
-
   /** Per-window-per-type p50/p90 over the event stream — `q_quantile_groups`
     * on EVENT TIME: daily tumbling windows × event_type, each holding one
     * [[graft.functions.BottomKSketch]] buffer (k=256 rows of state at any
-    * window volume; the same aggregation streams in append mode via
-    * [[windowSketchAgg]]). Estimates are type-1 order statistics of each
+    * window volume). Estimates are type-1 order statistics of each
     * window's hash-selected sample; the exact ECDF rides along and
     * `within_eps` pins |frac − p| ≤ [[WqEps]] + 1/n — the DKW sketch bound
     * PLUS the type-1 discretization term an n-row window cannot beat
@@ -447,7 +424,15 @@ object Events {
     windowQuantilesOn(Tables.events(spark, dir))
 
   private[graft] def windowQuantilesOn(ev: DataFrame): DataFrame = {
-    val samples = windowSketchAgg(ev)
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    val bk = udaf(graft.functions.BottomKSketch, ExpressionEncoder[(Long, Double)]())
+    val h60 = conv(substring(md5(col("event_id").cast("string")), 1, 15), 16, 10)
+      .cast("long")
+    val samples = ev.select(col("ts"), col("event_type").as("et"), col("value").as("v"),
+        h60.as("h"))
+      .groupBy(window(col("ts"), "1 day").as("wd"), col("et"))
+      .agg(bk(col("h"), col("v")).as("arr"))
+      .select(col("wd.start").as("w"), col("et"), col("arr"))
       .select(col("w") +: col("et") +: WqProbes.map { p =>
         val tag = (p * 100).toInt
         element_at(col("arr"),

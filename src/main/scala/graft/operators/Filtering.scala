@@ -53,15 +53,8 @@ object Filtering {
     * [[ArrayExpressions.hashedWords60]] hashes, both mirrored hash-for-hash
     * in the oracle so parity is by construction, not by collision luck.
     */
-  /** The map-only projection itself, shared with
-    * [[graft.streaming.StreamingFilterBattery]]: (doc_id, text) →
-    * repetition metrics + keep flag, no read and no sort, so the identical
-    * expression tree runs under Structured Streaming (a stateless map is
-    * trivially streamable — sharing the EXPRESSIONS is what makes the
-    * streaming ≡ batch parity test meaningful, same convention as
-    * [[withQualityMetrics]]). */
-  private[graft] def repetitionProjection(d: DataFrame): DataFrame = {
-    val base = d
+  def gopherRepetition(spark: SparkSession, dir: String): DataFrame = {
+    val base = Tables.documentsParallel(spark, dir)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
       .withColumn("n", size(col("toks")).cast("double"))
       .withColumn("hw", ArrayExpressions.hashedWords60(col("toks")))
@@ -80,10 +73,8 @@ object Filtering {
         pround(topw, 4).as("top_word_frac"),
         pround(dup2, 4).as("dup_2gram_frac"),
         when(keep, 1L).otherwise(0L).as("keep"))
+      .orderBy(col("doc_id"))
   }
-
-  def gopherRepetition(spark: SparkSession, dir: String): DataFrame =
-    repetitionProjection(Tables.documentsParallel(spark, dir)).orderBy(col("doc_id"))
 
   val gopherRepetitionSql: String =
     s"""WITH t AS (
@@ -140,11 +131,7 @@ object Filtering {
     * backrefs — which is also the portable subset a production pipeline
     * would standardize on.
     */
-  /** Shared map-only projection (same convention as
-    * [[repetitionProjection]]): (doc_id, text) → audit counts + clean
-    * fingerprint, planting included (planting is doc_id-keyed and
-    * deterministic, so it streams unchanged), no read and no sort. */
-  private[graft] def piiProjection(d: DataFrame): DataFrame = {
+  def piiRedact(spark: SparkSession, dir: String): DataFrame = {
     val idS = col("doc_id").cast("string")
     val dirty = concat(
       col("text"),
@@ -161,7 +148,7 @@ object Filtering {
         regexp_replace(dirty, EmailRe, "<EMAIL>"),
         PhoneRe, "<PHONE>"),
       IpRe, "<IP>")
-    d.select(
+    Tables.documentsParallel(spark, dir).select(
         col("doc_id"),
         regexp_count(dirty, lit(EmailRe)).cast("long").as("n_emails"),
         regexp_count(dirty, lit(PhoneRe)).cast("long").as("n_phones"),
@@ -169,10 +156,8 @@ object Filtering {
         length(clean).cast("long").as("clean_len"),
         conv(substring(md5(clean), 1, 8), 16, 10).cast("long").as("clean_fp"))
       .filter(col("n_emails") + col("n_phones") + col("n_ips") > 0)
+      .orderBy(col("doc_id"))
   }
-
-  def piiRedact(spark: SparkSession, dir: String): DataFrame =
-    piiProjection(Tables.documentsParallel(spark, dir)).orderBy(col("doc_id"))
 
   val piiRedactSql: String = {
     // the same pattern strings drop straight into single-quoted SQL:
@@ -246,10 +231,7 @@ object Filtering {
     * The keep flag compares UNROUNDED doubles (identical IEEE ops in both
     * engines); displayed fractions are 4dp-rounded.
     */
-  /** The metric projection itself, shared with
-    * [[graft.streaming.StreamingQualityFilter]] (a stateless map is
-    * trivially streamable — sharing the EXPRESSIONS is what makes the
-    * streaming ≡ batch parity test meaningful): appends `n_words`,
+  /** The metric projection itself: appends `n_words`,
     * `mean_word_len`, `symbol_ratio`, `alpha_frac`, `n_stop`, `keep` to
     * any frame, derived from `textCol`. Whole-stage codegen CSEs the
     * repeated padded/count subexpressions. */
@@ -601,12 +583,9 @@ object Filtering {
     * as a codegen Expression, the `ArrayExpressions` pattern) stays
     * available if a profile ever shows them hot.
     */
-  /** Shared map-only projection (same convention as
-    * [[repetitionProjection]]): (doc_id, text) → line/page rule columns +
-    * keep flag + clean fingerprint, planting included, no read, no sort. */
-  private[graft] def c4Projection(d: DataFrame): DataFrame = {
+  def c4Heuristics(spark: SparkSession, dir: String): DataFrame = {
     val emptyS = array().cast("array<string>")
-    val base = d
+    val base = Tables.documentsParallel(spark, dir)
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
       .withColumn("nl", ceil(size(col("toks")) / lit(LineTokens.toDouble)).cast("int"))
       .withColumn("lines", concat(
@@ -639,10 +618,8 @@ object Filtering {
           && !col("brace"), 1L).otherwise(0L).as("keep"),
         conv(substring(md5(array_join(col("kept"), "\n")), 1, 8), 16, 10)
           .cast("long").as("clean_fp"))
+      .orderBy(col("doc_id"))
   }
-
-  def c4Heuristics(spark: SparkSession, dir: String): DataFrame =
-    c4Projection(Tables.documentsParallel(spark, dir)).orderBy(col("doc_id"))
 
   val c4HeuristicsSql: String =
     s"""WITH t AS (

@@ -126,35 +126,6 @@ object Sketches {
   private val GroupProbes = Seq(0.5, 0.9)
   private val GroupEps = 0.1
 
-  /** The (group, value, 60-bit row-key hash) projection both the batch
-    * query and [[graft.streaming.StreamingQuantiles]] aggregate over. */
-  private[graft] def quantileGroupBase(li: DataFrame): DataFrame = {
-    val h60 = conv(substring(md5(concat(col("l_orderkey").cast("string"),
-      lit("-"), col("l_linenumber").cast("string"))), 1, 15), 16, 10)
-      .cast("long")
-    li.select(col("l_returnflag").as("g"),
-      col("l_extendedprice").as("v"), h60.as("h"))
-  }
-
-  /** The per-group sample → estimate stage, shared with
-    * [[graft.streaming.StreamingQuantiles]] (the StreamingCms convention:
-    * one expression tree serves batch and continuous tracking). Under
-    * Structured Streaming the state per group is the BottomKSketch buffer
-    * — ≤ k (hash, value) pairs — so live per-group percentiles cost
-    * O(k·|groups|) state no matter how long the stream runs. */
-  private[graft] def quantileSamplesOn(base: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val bk = udaf(graft.functions.BottomKSketch, ExpressionEncoder[(Long, Double)]())
-    base
-      .groupBy(col("g")).agg(bk(col("h"), col("v")).as("arr"))
-      .select(col("g") +: GroupProbes.map { p =>
-        val tag = (p * 100).toInt
-        element_at(col("arr"),
-          greatest(lit(1L), ceil(lit(p) * size(col("arr")))).cast("int"))
-          .as(s"est_p$tag")
-      }: _*)
-  }
-
   /** PER-GROUP quantiles with bounded state — the `groupBy`-able form of
     * [[quantileSketchOn]]'s sampling rule, executed by the
     * [[graft.functions.BottomKSketch]] mergeable Aggregator: each group
@@ -173,8 +144,21 @@ object Sketches {
     * per-group `row_number() OVER (ORDER BY hash) <= k` — deterministic,
     * so estimates AND flags hash-match end to end. */
   private[graft] def quantileGroupsOn(li: DataFrame): DataFrame = {
-    val base = quantileGroupBase(li)
-    val samples = quantileSamplesOn(base)
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    val h60 = conv(substring(md5(concat(col("l_orderkey").cast("string"),
+      lit("-"), col("l_linenumber").cast("string"))), 1, 15), 16, 10)
+      .cast("long")
+    val base = li.select(col("l_returnflag").as("g"),
+      col("l_extendedprice").as("v"), h60.as("h"))
+    val bk = udaf(graft.functions.BottomKSketch, ExpressionEncoder[(Long, Double)]())
+    val samples = base
+      .groupBy(col("g")).agg(bk(col("h"), col("v")).as("arr"))
+      .select(col("g") +: GroupProbes.map { p =>
+        val tag = (p * 100).toInt
+        element_at(col("arr"),
+          greatest(lit(1L), ceil(lit(p) * size(col("arr")))).cast("int"))
+          .as(s"est_p$tag")
+      }: _*)
     val estCols = GroupProbes.map(p => s"est_p${(p * 100).toInt}")
     base
       .join(broadcast(samples), Seq("g"))
@@ -513,19 +497,11 @@ object Sketches {
     * top-k probe list is the verification side (a TakeOrderedAndProject
     * over the token counts); production would probe with a fixed watch
     * list instead. */
-  /** The d×w counter table itself, shared with
-    * [[graft.streaming.StreamingCms]]: one groupBy over ≤ d·w cells, so
-    * under Structured Streaming the STATE is bounded by the sketch size —
-    * the same expression tree serves batch and continuous tracking
-    * (the StreamingFilterBattery convention, for an aggregate). */
-  private[graft] def cmsCellsOn(toks: DataFrame): DataFrame =
-    toks
+  private[graft] def cmsHeavyHittersOn(toks: DataFrame): DataFrame = {
+    val cells = toks
       .select(posexplode(array((0 until CmsRows)
         .map(i => cmsBucket(i, col("tok"))): _*)).as(Seq("i", "bucket")))
       .groupBy(col("i"), col("bucket")).agg(count(lit(1)).as("c"))
-
-  private[graft] def cmsHeavyHittersOn(toks: DataFrame): DataFrame = {
-    val cells = cmsCellsOn(toks)
     val top = toks.groupBy(col("tok")).agg(count(lit(1)).as("n_exact"))
       .orderBy(col("n_exact").desc, col("tok").asc).limit(CmsTopK)
     val nDf = toks.agg(count(lit(1)).as("nn"))

@@ -29,8 +29,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   - '''Bounded storage.''' After each commit, versions ≤ latest − K are
   *     deleted (keep-last-K). Without this the index grows one full corpus
   *     copy per micro-batch forever — the same defect class as the jobs
-  *     table before its 30-day retention sweep
-  *     (graft.api.JobStore.deleteOld).
+  *     table before its retention sweep (`jobs_retention_sweep`).
   *
   * Versions may be sparse (empty/duplicate batches commit nothing); the
   * pointer names the latest real commit, and pruning is by version number,

@@ -273,19 +273,6 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(started.toInstant === java.time.Instant.parse("2026-08-01T10:00:01.123Z"))
   }
 
-  test("30-day retention purges a 31-day-old job and keeps a 29-day-old one") {
-    val store = new graft.api.JobStore
-    store.loadSqlite("src/test/resources/jobs_iso_fixture.db")
-    val now = java.time.Instant.parse("2026-08-31T00:00:00Z")
-    assert(store.deleteOld(olderThanDays = 30, now = now) === 1)
-    assert(store.get("job-31d").isEmpty)     // 31 days old — purged
-    assert(store.get("job-29d").isDefined)   // 29 days old — kept
-    assert(store.get("job-iso").isDefined)
-    // deleteJob mirrors result.changes > 0
-    assert(store.deleteJob("job-29d"))
-    assert(!store.deleteJob("job-29d"))
-  }
-
   test("envelope validation: every live endpoint passes, malformed payloads 500") {
     import graft.api.EnvelopeValidator
     // the running endpoints all pass the boundary check (they returned 200 above);

@@ -66,4 +66,21 @@ class SqliteSpec extends AnyFunSuite {
     assert(stats === Map("pending" -> 15L, "running" -> 15L,
       "completed" -> 16L, "failed" -> 15L))
   }
+
+  test("retention sweep purges a 16-day-old job and keeps a 14-day-old one and one at the cutoff") {
+    // the reference deletes WHERE created_at < datetime('now', '-N days')
+    // (jobManager.ts:209-216): strictly older than the cutoff. The fixture
+    // events hold no row exactly at the sweep's 2024-01-16 cutoff, so the
+    // oracle hash alone cannot tell `<` from `<=`
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-sweep").toString
+    def t(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    Seq((1L, 7L, "click", t("2024-01-17T00:00:00Z")),
+      (2L, 7L, "view", t("2024-01-16T00:00:00Z")),
+      (3L, 7L, "purchase", t("2024-01-15T00:00:00Z")))
+      .toDF("event_id", "user_id", "event_type", "ts")
+      .write.parquet(s"$dir/events.parquet")
+    val r = Jobs.retentionSweep(spark, dir).head()
+    assert((r.getLong(0), r.getLong(1)) === ((1L, 2L)))
+  }
 }

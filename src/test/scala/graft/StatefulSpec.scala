@@ -4,25 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.ArrayExpressions
+import graft.io.Tables
 import graft.operators.{Dedup, Events}
-import graft.streaming.StatefulSessions
 
 class StatefulSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-
-  test("flatMapGroupsWithState sessionization equals the SQL-window version") {
-    val stateful = StatefulSessions.sessionize(spark, SparkTestSession.Sf0001)
-      .collect()
-      .map(s => (s.user_id, s.session_id, s.n_events, s.session_start, s.session_end))
-      .toSet
-    val sql = Events.sessionize(spark, SparkTestSession.Sf0001)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        SparkTestSession.tsAt(r, 3), SparkTestSession.tsAt(r, 4)))
-      .toSet
-    assert(stateful.nonEmpty)
-    assert(stateful === sql)
-  }
 
   test("banded interval join equals a naive range scan, empty incidents included") {
     val out = graft.operators.Events.intervalJoin(spark, SparkTestSession.Sf0001)
@@ -111,5 +97,28 @@ class StatefulSpec extends AnyFunSuite {
       ArrayExpressions.saltedBlockPairJoin(grams, Seq("lang", "source"), "doc_id", k = 4))
     assert(salted === unsalted)
     assert(salted.nonEmpty)
+  }
+
+  test("batch ev_attribution pair counts agree with the raw pair join") {
+    // the grouped query's n_views must total the flat pair count (plus
+    // zero-view purchases contributing nothing)
+    val grouped = Events.attribution(spark, SparkTestSession.Sf0001)
+    val totalViews = grouped.agg(sum(col("n_views"))).head().getLong(0)
+    val zeroLag = grouped.filter(col("n_views") === 0)
+      .filter(col("last_view_lag_s") =!= -1L).count()
+    assert(zeroLag === 0L)
+
+    val ev = Tables.events(spark, SparkTestSession.Sf0001)
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
+        col("ts").as("p_ts"))
+    val v = ev.filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
+    val pairs = p.join(v,
+        col("p_user") === col("v_user") &&
+          col("v_ts") <= col("p_ts") &&
+          col("v_ts") >= col("p_ts") - expr("INTERVAL 48 HOURS"))
+      .count()
+    assert(totalViews === pairs)
   }
 }
